@@ -1,22 +1,23 @@
 """Arrow-native partial-aggregation engine (mapInArrow).
 
-The first version of the pipeline (agg.py sketch_groupby) handed each
-partial task pandas DataFrames; profiling the 24M-row flagship showed
-the dominant Python-phase cost was materializing the *group-key string
-column* as per-row Python objects.  This engine consumes raw Arrow
-RecordBatches instead:
+The engine consumes raw Arrow RecordBatches, never pandas:
 
-* key columns are dictionary-encoded in C (pyarrow) — Python sees one
-  object per DISTINCT key, plus an int32 code array
-* group row-ranges come from one stable argsort of the codes
-* numeric value columns convert zero-copy(ish) to NumPy; binary
-  columns (stored sketches) materialize only per-group lists
+* key columns become integer codes in C (pyarrow dictionary encoding,
+  or the values themselves for small-range integer keys) — Python sees
+  one object per DISTINCT key
+* each batch is grouped once (``_group_rows``): a bincount scan for few
+  groups, else a stable argsort of the packed codes, giving the rows of
+  every group as one permutation plus group bounds
+* the sketch then folds the whole grouped batch (the batch sketch
+  protocol below): t-digest folds, merges and encodes all groups in
+  one segmented NumPy pass; the other sketches run their per-group
+  fold behind one adapter
 
 so the per-row path is entirely C/NumPy, for keys as well as values.
 
-The merge/finalize stage repartitions by key and reuses the same
-RecordBatch machinery (one output row per group, no per-group pandas
-overhead).
+The merge/finalize stage repartitions by key, concatenates a task's
+partial sketches into one batch and reuses the same grouping and batch
+protocol (one output row per group, no per-group pandas overhead).
 """
 
 from __future__ import annotations
@@ -87,7 +88,9 @@ def record_batch_exact(cols: dict, schema_pa: "pa.Schema") -> "pa.RecordBatch":
     for field in schema_pa:
         vals = cols[field.name]
         t = field.type
-        if pa.types.is_timestamp(t) and t.tz is not None:
+        if isinstance(vals, pa.Array):
+            arrays.append(vals if vals.type == t else vals.cast(t))
+        elif pa.types.is_timestamp(t) and t.tz is not None:
             micros = []
             for v in vals:
                 if v is None:
@@ -144,17 +147,19 @@ def _decode_key(code: int, radix, dicts) -> tuple:
     return tuple(reversed(key))
 
 
-def _group_slices(batch: pa.RecordBatch, keys: Sequence[str]):
-    """Yield (key_tuple, row_index_array) per distinct key combo, with
-    only O(#distinct) Python objects created."""
+def _group_rows(batch: pa.RecordBatch, keys: Sequence[str]):
+    """Group a batch by ``keys`` with only O(#distinct) Python objects:
+    returns ``(group_keys, rows, bounds)`` where group g holds rows
+    ``rows[bounds[g]:bounds[g+1]]`` in ascending row order (``rows`` is
+    None when the batch order already is the grouped order, i.e. one
+    group or none)."""
     n = batch.num_rows
     if not keys:
-        yield (0,), None  # None = all rows
-        return
+        return [(0,)], None, np.array([0, n])
     if n == 0:
         # keyed aggregate over an empty batch has no groups; the radix
         # boundary arithmetic below would index into an empty array
-        return
+        return [], None, np.zeros(1, dtype=np.int64)
     from tdigest_spark.kernel.arrownp import arrow_ints
 
     code_arrays = []
@@ -173,8 +178,12 @@ def _group_slices(batch: pa.RecordBatch, keys: Sequence[str]):
             mm = pc.min_max(col)
             mn = mm["min"].as_py()
             mx = mm["max"].as_py()
-            if mn is not None and (mx - mn) < 2048 and mn > -(1 << 62):
-                code_arrays.append(arrow_ints(col, fill=mn - 1) - (mn - 1))
+            if mn is not None and (mx - mn) < 2048 and -(1 << 62) < mn and mx < 1 << 62:
+                # widen first: the null slot mn - 1 may not fit the
+                # column's own type (int8 -128 → -129)
+                code_arrays.append(
+                    arrow_ints(col.cast(pa.int64()), fill=mn - 1) - (mn - 1)
+                )
                 dicts.append(list(range(mn, mx + 1)))
                 continue
         dcol = col.dictionary_encode()
@@ -196,16 +205,15 @@ def _group_slices(batch: pa.RecordBatch, keys: Sequence[str]):
         diff = np.zeros(n - 1, dtype=bool)
         for c in sorted_cols:
             np.logical_or(diff, c[:-1] != c[1:], out=diff)
-        boundaries = np.flatnonzero(diff) + 1
-        starts = np.concatenate(([0], boundaries))
-        ends = np.concatenate((boundaries, [n]))
-        for s, e in zip(starts, ends):
-            key = tuple(
+        bounds = np.concatenate(([0], np.flatnonzero(diff) + 1, [n]))
+        group_keys = [
+            tuple(
                 None if int(col[s]) == 0 else dicts[i][int(col[s]) - 1]
                 for i, col in enumerate(sorted_cols)
             )
-            yield key, order[s:e]
-        return
+            for s in bounds[:-1].tolist()
+        ]
+        return group_keys, order, bounds
     codes = code_arrays[0]
     for i in range(1, len(keys)):
         codes = codes * radix[i] + code_arrays[i]
@@ -214,42 +222,131 @@ def _group_slices(batch: pa.RecordBatch, keys: Sequence[str]):
         nz = np.flatnonzero(cnt)
         if nz.size == 1:
             # whole batch is one group: no gather at all
-            yield _decode_key(int(nz[0]), radix, dicts), None
-            return
+            return [_decode_key(int(nz[0]), radix, dicts)], None, np.array([0, n])
         if nz.size <= _SCAN_MAX_GROUPS:
-            for code in nz:
-                yield _decode_key(int(code), radix, dicts), np.flatnonzero(
-                    codes == code
-                )
-            return
+            return (
+                [_decode_key(int(code), radix, dicts) for code in nz],
+                np.concatenate([np.flatnonzero(codes == code) for code in nz]),
+                np.concatenate(([0], np.cumsum(cnt[nz]))),
+            )
     order = np.argsort(codes, kind="stable")
     sorted_codes = codes[order]
-    boundaries = np.flatnonzero(np.diff(sorted_codes)) + 1
-    starts = np.concatenate(([0], boundaries))
-    ends = np.concatenate((boundaries, [n]))
-    for s, e in zip(starts, ends):
-        yield _decode_key(int(sorted_codes[s]), radix, dicts), order[s:e]
+    bounds = np.concatenate(([0], np.flatnonzero(np.diff(sorted_codes)) + 1, [n]))
+    return (
+        [_decode_key(int(c), radix, dicts) for c in sorted_codes[bounds[:-1]]],
+        order,
+        bounds,
+    )
+
+
+def _group_slices(batch: pa.RecordBatch, keys: Sequence[str]):
+    """Yield (key_tuple, row_index_array) per distinct key combo (rows
+    None = all rows)."""
+    group_keys, rows, bounds = _group_rows(batch, keys)
+    for g, key in enumerate(group_keys):
+        yield key, None if rows is None else rows[bounds[g]:bounds[g + 1]]
+
+
+# ----------------------------------------------------------------------
+# batch sketch protocol
+#
+# The engine hands a sketch whole batches: every callable below has a
+# per-group form (what a sketch module writes) and a batch form.  A
+# sketch may attach its own batch form as ``fn.batch`` (t-digest does:
+# tdigest_agg); the others get the per-group adapter here.
+#   fold:      fold(state, **{col: pa.Array})
+#              .batch(states, cols, rows, bounds)
+#   serialize: serialize(state) -> bytes | None
+#              .batch(states) -> list | pa.Array
+#   finalize:  finalize(blobs: list[bytes]) -> tuple
+#              .batch(blobs: pa.Array, rows, bounds) -> list of columns
+# ``rows``/``bounds`` are :func:`_group_rows`' output for the batch.
+# ----------------------------------------------------------------------
+def _fold_each(fold):
+    def fold_batch(states, cols, rows, bounds):
+        for g, st in enumerate(states):
+            lo, hi = int(bounds[g]), int(bounds[g + 1])
+            if rows is None:
+                fold(st, **{n: c.slice(lo, hi - lo) for n, c in cols.items()})
+            else:
+                idx = pa.array(rows[lo:hi])
+                fold(st, **{n: c.take(idx) for n, c in cols.items()})
+
+    return fold_batch
+
+
+def _serialize_each(serialize):
+    return lambda states: [serialize(st) for st in states]
+
+
+def _finalize_each(process):
+    def finalize_batch(blobs, rows, bounds):
+        py = blobs.to_pylist()
+        order = range(len(py)) if rows is None else rows.tolist()
+        tails = [
+            process([py[r] for r in order[lo:hi] if py[r] is not None])
+            for lo, hi in zip(bounds[:-1].tolist(), bounds[1:].tolist())
+        ]
+        return [list(col) for col in zip(*tails)]
+
+    return finalize_batch
+
+
+def _batch(fn, adapter):
+    return getattr(fn, "batch", None) or adapter(fn)
+
+
+def _merge_bytes_process(merge_bytes):
+    """Finalizer of an intermediate (salt / fan-in) merge round: the
+    merged sketch per group, NULL for a group of only NULL sketches."""
+
+    def process(blobs):
+        return (merge_bytes(blobs) if blobs else None,)
+
+    if hasattr(merge_bytes, "batch"):
+        process.batch = lambda blobs, rows, bounds: [merge_bytes.batch(blobs, rows, bounds)]
+    return process
 
 
 def fold_group_batches(batches, keys, inputs, new_state, fold, states=None):
     """Fold RecordBatches into per-group sketch states — the one
-    group-slice/take/fold loop shared by the mapInArrow partial phase
-    and the native-scan split reader.  Pass ``states`` to accumulate
-    across multiple batch iterators."""
+    group/fold loop shared by the mapInArrow partial phase and the
+    native-scan split reader: each batch is grouped once and folded
+    with the sketch's batch fold.  Pass ``states`` to accumulate across
+    multiple batch iterators."""
     states = {} if states is None else states
+    fold_batch = _batch(fold, _fold_each)
     for batch in batches:
-        views = _column_views(batch, inputs)
-        for key, rows in _group_slices(batch, keys):
+        group_keys, rows, bounds = _group_rows(batch, keys)
+        group_states = []
+        for key in group_keys:
             st = states.get(key)
             if st is None:
                 st = states[key] = new_state()
-            if rows is None:
-                kwargs = {name: views[name] for name in inputs}
-            else:
-                take_idx = pa.array(rows)
-                kwargs = {name: views[name].take(take_idx) for name in inputs}
-            fold(st, **kwargs)
+            group_states.append(st)
+        if group_states:
+            fold_batch(group_states, _column_views(batch, inputs), rows, bounds)
     return states
+
+
+def _partials_batch(states: dict, key_names, serialize, out_schema) -> pa.RecordBatch:
+    """One output row per group: its key columns and serialized sketch."""
+    cols = {k: [key[i] for key in states] for i, k in enumerate(key_names)}
+    cols[SKETCH_COL] = _batch(serialize, _serialize_each)(list(states.values()))
+    return record_batch_exact(cols, out_schema)
+
+
+def _one_batch(batches) -> pa.RecordBatch | None:
+    """All rows of a task's batches as one RecordBatch (None when there
+    are none), the sketch column widened to large_binary so a task's
+    concatenated sketches may pass 2 GiB."""
+    batches = [b for b in batches if b.num_rows]
+    if not batches:
+        return None
+    tbl = pa.Table.from_batches(batches)
+    i = tbl.schema.get_field_index(SKETCH_COL)
+    tbl = tbl.set_column(i, SKETCH_COL, tbl.column(i).cast(pa.large_binary()))
+    return tbl.combine_chunks().to_batches()[0]
 
 
 def _jcls(obj) -> str:
@@ -892,7 +989,6 @@ def _native_partials(
     def scan_split(batches):
         from pyspark.sql.pandas.types import to_arrow_schema
 
-        out_schema = to_arrow_schema(partial_schema)
         states: dict[tuple, Any] = {}
         for b in batches:
             for idx in b.column(0).to_pylist():
@@ -904,12 +1000,9 @@ def _native_partials(
                     keys if grouped else [],
                     inputs, new_state, fold, states=states,
                 )
-        cols: dict[str, list] = {f.name: [] for f in partial_schema.fields}
-        for key, st in states.items():
-            for kname, kval in zip(key_names, key):
-                cols[kname].append(kval)
-            cols[SKETCH_COL].append(serialize(st))
-        yield record_batch_exact(cols, out_schema)
+        yield _partials_batch(
+            states, key_names, serialize, to_arrow_schema(partial_schema)
+        )
 
     n = len(splits)
     return spark.range(0, n, 1, n).mapInArrow(scan_split, partial_schema)
@@ -1177,18 +1270,12 @@ def sketch_groupby_arrow(
     def run_partial(batches):
         from pyspark.sql.pandas.types import to_arrow_schema
 
-        out_schema = to_arrow_schema(partial_schema)
-        # ungrouped: _group_slices skips the encode/sort entirely (keys
+        # ungrouped: _group_rows skips the encode/sort entirely (keys
         # is the constant sentinel column)
         states = fold_group_batches(
             batches, keys if grouped else [], inputs, new_state, fold
         )
-        cols: dict[str, list] = {f.name: [] for f in partial_schema.fields}
-        for key, st in states.items():
-            for kname, kval in zip(keys, key):
-                cols[kname].append(kval)
-            cols[SKETCH_COL].append(serialize(st))
-        yield record_batch_exact(cols, out_schema)
+        yield _partials_batch(states, keys, serialize, to_arrow_schema(partial_schema))
 
     if native is not None:
         splits, col_map, predicate, pred_part, pred_data = native
@@ -1232,8 +1319,7 @@ def sketch_groupby_arrow(
     if salt and salt > 1:
         # intermediate merge round keyed by (keys, partition_id % salt):
         # caps reducer fan-in for hot groups before the final merge
-        mb = merge_bytes
-        if mb is None:
+        if merge_bytes is None:
             raise ValueError("salt requires merge_bytes")
         salted = partials.withColumn(
             "__salt__", F.pmod(F.spark_partition_id(), F.lit(salt))
@@ -1242,7 +1328,7 @@ def sketch_groupby_arrow(
             salted,
             [*keys, "__salt__"],
             partial_schema,
-            lambda blobs: (mb(blobs) if blobs else None,),
+            _merge_bytes_process(merge_bytes),
             emit_keys=keys,
         )
 
@@ -1252,7 +1338,6 @@ def sketch_groupby_arrow(
         # each round's bucket column caps a merge task's fan-in at
         # ~MERGE_FANOUT partials, so the final single-group merge never
         # sees more than MERGE_FANOUT rows even at 10^5 file splits
-        mb = merge_bytes
         width = n_input_parts
         while width > MERGE_FANOUT:
             width = -(-width // MERGE_FANOUT)  # ceil div
@@ -1263,7 +1348,7 @@ def sketch_groupby_arrow(
                 bucketed,
                 [*keys, "__fanin__"],
                 partial_schema,
-                lambda blobs: (mb(blobs) if blobs else None,),
+                _merge_bytes_process(merge_bytes),
                 emit_keys=keys,
             )
 
@@ -1295,24 +1380,25 @@ def finalize_rows(
     merge stage."""
     keys = list(keys)
     tail_fields = list(result_fields)
+    finalize = _batch(process, _finalize_each)
 
     def run_rows(batches):
         from pyspark.sql.pandas.types import to_arrow_schema
 
         schema_pa = to_arrow_schema(out_schema)
         for batch in batches:
-            scol = batch.column(batch.schema.get_field_index(SKETCH_COL))
-            cols: dict[str, list] = {f.name: [] for f in out_schema.fields}
-            key_vals = {
-                k: batch.column(batch.schema.get_field_index(k)).to_pylist()
-                for k in keys
+            cols: dict[str, Any] = {
+                k: batch.column(batch.schema.get_field_index(k)) for k in keys
             }
-            for i, blob in enumerate(scol.to_pylist()):
-                tail = process([bytes(blob)] if blob is not None else [])
-                for k in keys:
-                    cols[k].append(key_vals[k][i])
-                for field, val in zip(tail_fields, tail):
-                    cols[field.name].append(val)
+            if batch.num_rows:
+                # every row is its own group
+                tails = finalize(
+                    batch.column(batch.schema.get_field_index(SKETCH_COL)),
+                    None, np.arange(batch.num_rows + 1),
+                )
+            else:
+                tails = [[] for _ in tail_fields]
+            cols.update((f.name, col) for f, col in zip(tail_fields, tails))
             yield record_batch_exact(cols, schema_pa)
 
     return df.mapInArrow(run_rows, out_schema)
@@ -1339,27 +1425,22 @@ def _merge_pass(
         else [f for f in out_schema.fields if f.name not in emit_keys]
     )
 
+    finalize = _batch(process, _finalize_each)
+
     def run_merge(batches):
         from pyspark.sql.pandas.types import to_arrow_schema
 
-        schema_pa = to_arrow_schema(out_schema)
-        acc: dict[tuple, list[bytes]] = {}
-        for batch in batches:
-            scol = batch.column(batch.schema.get_field_index(SKETCH_COL))
-            for key, rows in _group_slices(batch, group_keys):
-                blobs = acc.setdefault(key, [])
-                sliced = scol.take(pa.array(rows)) if rows is not None else scol
-                blobs.extend(
-                    bytes(b) for b in sliced.to_pylist() if b is not None
-                )
-        cols: dict[str, list] = {f.name: [] for f in out_schema.fields}
-        for key, blobs in acc.items():
-            tail = process(blobs)
-            for kname, kval in zip(group_keys, key):
-                if kname in cols:
-                    cols[kname].append(kval)
-            for field, val in zip(tail_fields, tail):
-                cols[field.name].append(val)
-        yield record_batch_exact(cols, schema_pa)
+        cols: dict[str, Any] = {f.name: [] for f in out_schema.fields}
+        batch = _one_batch(batches)
+        if batch is not None:
+            keys, rows, bounds = _group_rows(batch, group_keys)
+            for i, k in enumerate(group_keys):
+                if k in cols:
+                    cols[k] = [key[i] for key in keys]
+            if keys:
+                sketches = batch.column(batch.schema.get_field_index(SKETCH_COL))
+                tails = finalize(sketches, rows, bounds)
+                cols.update((f.name, col) for f, col in zip(tail_fields, tails))
+        yield record_batch_exact(cols, to_arrow_schema(out_schema))
 
     return partials.repartition(*group_keys).mapInArrow(run_merge, out_schema)

@@ -21,6 +21,7 @@ from __future__ import annotations
 from collections.abc import Sequence
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -33,12 +34,17 @@ from pyspark.sql.types import (
 
 from tdigest_spark.kernel.tdigest import (
     TDigest,
+    add_values_many,
     buffer_size,
     check_compression,
     check_percentiles,
     check_trim,
+    compact_many,
+    decode_many,
+    encode_many,
     generate_counts,
     merge_all,
+    merge_blobs_into,
 )
 from tdigest_spark.kernel.arrownp import arrow_floats, arrow_ints
 from tdigest_spark.spark.arrow_agg import sketch_groupby_arrow
@@ -48,12 +54,20 @@ _EXPAND_CHUNK = 1 << 20
 
 
 # ----------------------------------------------------------------------
-# folds: one Arrow group-slice → kernel state
+# folds: one Arrow group-slice → kernel state.  Each also carries a
+# ``.batch`` form that the engine calls with a whole batch grouped by
+# ``arrow_agg._group_rows`` (see the batch sketch protocol there); it
+# leaves every digest exactly as the per-group fold would.
 # ----------------------------------------------------------------------
 def _fold_values(value_col: str):
     def fold(st: TDigest, **cols) -> None:
         st.add_values(arrow_floats(cols[value_col]))
 
+    def fold_batch(states, cols, rows, bounds) -> None:
+        v = arrow_floats(cols[value_col])
+        add_values_many(states, v if rows is None else v[rows], bounds)
+
+    fold.batch = fold_batch
     return fold
 
 
@@ -104,6 +118,22 @@ class _DigestAcc:
         self.compression = compression
 
 
+def _decode_groups(blobs, rows, bounds):
+    """Decode a grouped batch of digest blobs: the decoded centroids in
+    group order plus the group of each decoded (non-null) blob."""
+    if rows is not None:
+        blobs = blobs.take(pa.array(rows))
+    gid = np.repeat(np.arange(bounds.size - 1), np.diff(bounds))
+    kept, means, counts, offsets, count, compression = decode_many(blobs)
+    return gid[kept], (means, counts, offsets, count), compression
+
+
+def _first_per_group(gid):
+    """(group, first decoded blob of the group) pairs."""
+    groups, first = np.unique(gid, return_index=True)
+    return zip(groups.tolist(), first.tolist())
+
+
 def _fold_digests(digest_col: str):
     def fold(st: _DigestAcc, **cols) -> None:
         for blob in cols[digest_col].to_pylist():
@@ -114,16 +144,66 @@ def _fold_digests(digest_col: str):
                 st.d = TDigest(st.compression or incoming.compression)
             st.d.merge_digest(incoming)
 
+    def fold_batch(states, cols, rows, bounds) -> None:
+        gid, decoded, compression = _decode_groups(cols[digest_col], rows, bounds)
+        for g, b in _first_per_group(gid):
+            st = states[g]
+            if st.d is None:
+                st.d = TDigest(st.compression or int(compression[b]))
+        merge_blobs_into([st.d for st in states], gid, *decoded)
+
+    fold.batch = fold_batch
     return fold
 
 
+def _digest_of(st):
+    return st.d if isinstance(st, _DigestAcc) else st
+
+
 def _serialize_td(st) -> bytes | None:
-    d = st.d if isinstance(st, _DigestAcc) else st
+    d = _digest_of(st)
     return d.to_bytes() if d is not None and d.count > 0 else None
+
+
+def _encode(digests) -> pa.Array:
+    """``d.to_bytes()`` for every digest (NULL where None) as one binary
+    array: one segmented compaction, one encode."""
+    live = [d for d in digests if d is not None]
+    compact_many(live)
+    enc = encode_many(
+        np.concatenate([d.means for d in live]) if live else np.empty(0),
+        np.concatenate([d.counts for d in live]) if live else np.empty(0, np.int64),
+        np.concatenate(([0], np.cumsum([d.means.size for d in live]))).astype(np.int64),
+        [d.count for d in live],
+        [d.compression for d in live],
+    )
+    if len(live) == len(digests):
+        return enc
+    pos = np.cumsum([d is not None for d in digests]) - 1
+    return enc.take(pa.array(
+        [int(p) if d is not None else None for p, d in zip(pos, digests)], pa.int64()
+    ))
+
+
+_serialize_td.batch = lambda states: _encode([
+    d if d is not None and d.count > 0 else None for d in map(_digest_of, states)
+])
 
 
 def _merged(sketches: list[bytes]) -> TDigest | None:
     return merge_all(TDigest.from_bytes(s) for s in sketches)
+
+
+def _merged_groups(blobs, rows, bounds) -> list[TDigest | None]:
+    """:func:`_merged` for every group of a grouped batch of blobs,
+    compacted: decode_many, then the segmented merge."""
+    gid, decoded, compression = _decode_groups(blobs, rows, bounds)
+    digests: list[TDigest | None] = [None] * (bounds.size - 1)
+    for g, b in _first_per_group(gid):
+        digests[g] = TDigest(int(compression[b]))
+    merge_blobs_into(digests, gid, *decoded)
+    compact_many(digests)
+    return digests
 
 
 def _merge_bytes_td(sketches: list[bytes]) -> bytes | None:
@@ -131,63 +211,60 @@ def _merge_bytes_td(sketches: list[bytes]) -> bytes | None:
     return m.to_bytes() if m is not None else None
 
 
+_merge_bytes_td.batch = lambda blobs, rows, bounds: _encode(
+    _merged_groups(blobs, rows, bounds)
+)
+
+
 # ----------------------------------------------------------------------
 # finalizers (reference FINALFUNCs, tdigest.c:2064-2191, 3364-3428)
 # ----------------------------------------------------------------------
-def _fin_percentile(q: float):
+def _finalizer(estimate, empty=None):
+    """A FINALFUNC: ``estimate(merged digest)`` per group, ``empty`` for
+    a group without digests; ``.batch`` finalizes a grouped batch."""
+
     def fin(sketches):
         d = _merged(sketches)
-        return (float(d.quantile(q)),) if d else (None,)
+        return (estimate(d) if d is not None else empty,)
 
+    def fin_batch(blobs, rows, bounds):
+        return [[
+            estimate(d) if d is not None else empty
+            for d in _merged_groups(blobs, rows, bounds)
+        ]]
+
+    fin.batch = fin_batch
     return fin
+
+
+def _fin_percentile(q: float):
+    return _finalizer(lambda d: float(d.quantile(q)))
 
 
 def _fin_percentile_array(qs):
     qs = list(qs)
-
-    def fin(sketches):
-        d = _merged(sketches)
-        return (d.quantiles(qs).tolist(),) if d else (None,)
-
-    return fin
+    return _finalizer(lambda d: d.quantiles(qs).tolist())
 
 
 def _fin_percentile_of(v: float):
-    def fin(sketches):
-        d = _merged(sketches)
-        return (float(d.quantile_of(v)),) if d else (None,)
-
-    return fin
+    return _finalizer(lambda d: float(d.quantile_of(v)))
 
 
 def _fin_percentile_of_array(vs):
     vs = list(vs)
-
-    def fin(sketches):
-        d = _merged(sketches)
-        return (d.quantiles_of(vs).tolist(),) if d else (None,)
-
-    return fin
+    return _finalizer(lambda d: d.quantiles_of(vs).tolist())
 
 
-def _fin_digest(sketches):
-    d = _merged(sketches)
-    return (d.to_bytes(),) if d else (None,)
+_fin_digest = _finalizer(lambda d: d.to_bytes())
+_fin_digest.batch = lambda blobs, rows, bounds: [_merge_bytes_td.batch(blobs, rows, bounds)]
 
-
-def _fin_count(sketches):
-    d = _merged(sketches)
-    return (int(d.count),) if d else (0,)
+_fin_count = _finalizer(lambda d: int(d.count), 0)
 
 
 def _fin_trimmed(low: float, high: float, want_avg: bool):
-    def fin(sketches):
-        d = _merged(sketches)
-        if d is None:
-            return (None,)
-        return ((d.trimmed_avg(low, high) if want_avg else d.trimmed_sum(low, high)),)
-
-    return fin
+    if want_avg:
+        return _finalizer(lambda d: d.trimmed_avg(low, high))
+    return _finalizer(lambda d: d.trimmed_sum(low, high))
 
 
 # ----------------------------------------------------------------------

@@ -318,6 +318,29 @@ def test_json_and_array_casts():
     assert list(a) == [1.0, 2.0, 10000.0, 2.0, 1.0, 1.0, 2.0, 1.0]
 
 
+def test_legacy_text_literal_converts_to_means():
+    """flags=0 text literals store (sum, count) and print back as flags=1
+    means (tdigest_update_format, tdigest.c:832-864); the golden
+    conversions.out check of the same rule needs the reference tree."""
+    d = TDigest.from_string("flags 0 count 10 compression 100 centroids 2 (10.0, 5) (30.0, 5)")
+    want = "flags 1 count 10 compression 100 centroids 2 (2.000000, 5) (6.000000, 5)"
+    assert d.to_string() == want
+    assert TDigest.from_string(want).to_string() == want
+    assert TDigest.from_bytes(d.to_bytes()).to_string() == want
+
+
+def test_json_mean_formatting():
+    """%g mean layout of the json cast (tdigest.c:2964-3021) on
+    non-integral and large means."""
+    d = TDigest.from_string(
+        "flags 1 count 3 compression 25 centroids 3 (0.125, 1) (2.5, 1) (1234567.0, 1)"
+    )
+    assert d.to_json() == (
+        '{"flags": 1, "count": 3, "compression": 25, "centroids": 3, '
+        '"mean": [0.125, 2.5, 1.23457e+06], "count": [1, 1, 1]}'
+    )
+
+
 def test_legacy_sum_format_accepted():
     """tdigest_update_format (tdigest.c:832-864): flags=0 stores
     (sum,count); divide on read."""

@@ -23,6 +23,12 @@ import pytest
 from tdigest_spark.kernel.tdigest import TDigest
 
 EXPECTED = Path("/root/reference/test/expected")
+# the goldens are read in place and never vendored; without them the
+# format parity rests on test_kernel_tdigest.py's inline vectors
+needs_goldens = pytest.mark.skipif(
+    not EXPECTED.is_dir(),
+    reason="reference pg_regress outputs (test/expected/*.out) are not installed",
+)
 
 
 def _conversion_blocks() -> list[tuple[str, str | None, str | None]]:
@@ -81,6 +87,7 @@ def _digest_from_json_golden(g: dict) -> TDigest:
     return TDigest.from_string(lit)
 
 
+@needs_goldens
 def test_conversions_valid_literal_roundtrips_to_golden():
     """The flags=0 (sum,count) literal must parse, convert sum→mean, and
     print EXACTLY the golden flags=1 text; text→bytes→text must be the
@@ -104,6 +111,7 @@ _ERR_SEMANTICS = [
 ]
 
 
+@needs_goldens
 def test_conversions_malformed_vectors_rejected():
     """conversions.sql:4-13 — negative count, mismatching total count,
     unsorted centroids — must be rejected with matching semantics."""
@@ -116,6 +124,7 @@ def test_conversions_malformed_vectors_rejected():
             TDigest.from_string(lit)
 
 
+@needs_goldens
 def test_cast_out_json_parity():
     """Digests the reference built at compression 10/25/100 (cast.out)
     must round-trip through our parser and re-print byte-identical
@@ -127,6 +136,7 @@ def test_cast_out_json_parity():
         assert TDigest.from_bytes(d.to_bytes()).to_json() == g["raw"]
 
 
+@needs_goldens
 def test_cast_out_double_array_parity():
     """The double precision[] cast must reproduce cast.out's golden
     arrays under PostgreSQL's numeric rounding (shortest-repr decimal,

@@ -20,24 +20,31 @@ from tdigest_spark.kernel.tdigest import TDigest
 # ----------------------------------------------------------------------
 def test_global_agg_bounded_fanin(spark, monkeypatch):
     """With MERGE_FANOUT shrunk, a many-partition global aggregate must
-    insert an intermediate merge round (one extra MapInArrow stage) and
-    still produce an exact count and an in-bound median."""
+    insert an intermediate merge round (one extra MapInArrow stage),
+    fixed at plan time without running a job, and still produce an
+    exact count and an in-bound median."""
     from tdigest_spark.spark import arrow_agg
-    from tdigest_spark.spark.tdigest_agg import tdigest_percentile
+    from tdigest_spark.spark.tdigest_agg import tdigest, tdigest_percentile
 
     monkeypatch.setattr(arrow_agg, "MERGE_FANOUT", 4)
     n = 20_000
-    df = (
-        spark.range(n)
-        .select((F.col("id").cast("double") / n).alias("v"))
-        .repartition(9)
-    )
-    est = tdigest_percentile(df, "v", 100, 0.5)
-    plan = est._jdf.queryExecution().executedPlan().toString()
+    # 9 input partitions without an Exchange: under AQE, the partition
+    # count of a shuffled input is read by materializing its shuffle
+    df = spark.range(0, n, 1, 9).select((F.col("id").cast("double") / n).alias("v"))
+    sc = spark.sparkContext
+    sc.setJobGroup("fanin_plan", "plan only")
+    try:
+        est = tdigest_percentile(df, "v", 100, 0.5)
+        plan = est._jdf.queryExecution().executedPlan().toString()
+        union = tdigest(df, "v", 100)
+        assert not sc.statusTracker().getJobIdsForGroup("fanin_plan")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
     # partial + fan-in round (9 partitions / fanout 4 -> width 3) + final
     assert plan.count("MapInArrow") == 3, plan
     row = est.collect()[0]
     assert abs(row["percentile"] - 0.5) < 0.01
+    assert TDigest.from_bytes(union.collect()[0]["tdigest"]).count == n
 
     # control: below the fanout threshold no extra round appears
     monkeypatch.setattr(arrow_agg, "MERGE_FANOUT", 256)
@@ -519,18 +526,3 @@ def test_verify_lineage_with_nans(spark, tmp_path_factory):
     res = verify_lineage(partials, expected_rows=900)
     assert res["consistent"], res
     assert res["digest_total_count"] == 900
-
-
-def test_tree_merge_fixed_rounds_no_count_actions(spark):
-    """tree_merge derives its rounds from the partition count; result
-    must be exact on counts regardless of fanout."""
-    from tdigest_spark.spark.agg import tree_merge
-    from tdigest_spark.spark.tdigest_agg import tdigest
-
-    df = spark.range(5000).select(
-        (F.col("id") % 64).cast("string").alias("g"),
-        F.col("id").cast("double").alias("v"),
-    )
-    partials = tdigest(df, "v", 100, keys=["g"]).repartition(16)
-    blob = tree_merge(partials, "tdigest", fanout=3)
-    assert TDigest.from_bytes(blob).count == 5000

@@ -15,7 +15,6 @@ from pyspark.sql import functions as F
 from tests.conftest import SF_SMALL
 from tdigest_spark.kernel.tdigest import TDigest
 from tdigest_spark.spark import functions as TF
-from tdigest_spark.spark.agg import tree_merge
 from tdigest_spark.spark.tdigest_agg import (
     tdigest,
     tdigest_avg,
@@ -205,17 +204,6 @@ def test_tdigest_add_incremental(spark):
         TF.tdigest_count(TF.tdigest_add("d", "v", compression=100)).alias("n")
     ).collect()
     assert res[0]["n"] == 3
-
-
-def test_tree_merge(lineitem, exact, spark):
-    partials = tdigest(
-        lineitem.repartition(16), "l_extendedprice", 100, keys=["l_returnflag"]
-    )
-    blob = tree_merge(partials, "tdigest", fanout=4)
-    d = TDigest.from_bytes(blob)
-    allx = np.sort(np.concatenate(list(exact.values())))
-    assert d.count == len(allx)
-    assert abs(rank_of(allx, d.quantile(0.5)) - 0.5) < 0.01
 
 
 def test_nulls_and_empty_groups(spark):
