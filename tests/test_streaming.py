@@ -455,7 +455,7 @@ def test_streaming_topk_eviction_and_guarantees(spark, tmp_path_factory):
 
 
 def test_streaming_windowed_hll_state_expires(spark, tmp_path_factory):
-    """Windowed streaming HLL (shared _streaming_windowed_sketch
+    """Windowed streaming HLL (windowed mode of the shared _sketch_stage
     plumbing): per-window distinct estimates land the HLL error band,
     and — the point of the windowed form — state for windows idle past
     the watermark horizon is FREED: the state store's numRowsTotal must
@@ -538,7 +538,7 @@ def test_streaming_windowed_hll_state_expires(spark, tmp_path_factory):
 
 def test_streaming_windowed_companion_sketches(spark, tmp_path_factory):
     """The three remaining windowed companion forms (count-min, KLL,
-    SpaceSaving top-k) on the shared _streaming_windowed_sketch
+    SpaceSaving top-k) on the shared _sketch_stage windowed
     plumbing: per-window final sketches match exact per-window answers,
     and the count-min window sketch is BYTE-identical to a batch build
     over the same rows (the table is an order-independent sum).  State
@@ -710,16 +710,135 @@ def test_streaming_tdigest_combine_partials(spark, stream_dir, tmp_path_factory)
             assert abs(rank - p) < 0.02, (g, p, rank)
 
 
-def test_streaming_tdigest_combine_rejects_float_keys(spark, stream_dir):
-    """combine_partials sends keys through pandas, where a float key's
-    NaN comes back as NULL — rejected at plan time with a clean error
-    (the row-fold default has no such restriction)."""
+def _run_to_memory(spark, df, name, tmp_path_factory):
+    """Drain a streaming DataFrame into a memory table; return its rows."""
+    q = (
+        df.writeStream.format("memory")
+        .queryName(name)
+        .outputMode("update")
+        .option("checkpointLocation", str(tmp_path_factory.mktemp(f"ck_{name}")))
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(180), name
+    return spark.sql(f"SELECT * FROM {name}").collect()
+
+
+def test_streaming_builders_reject_float_keys(spark, stream_dir):
+    """Every builder emits its keys through pandas, where a float key's
+    NaN comes back as NULL (a {1.0, NaN, NULL} key column would emit
+    two NULL-key rows) — rejected at plan time for the row-fold
+    default, combine_partials and the windowed builders alike."""
+    from tdigest_spark.streaming.digest_stream import streaming_windowed_hll
+
     src, _ = stream_dir
     schema = spark.read.parquet(src).schema
     stream = spark.readStream.schema(schema).parquet(src)
     fs = stream.withColumn("fkey", F.rand())
-    with pytest.raises(ValueError, match="float keys"):
-        streaming_tdigest(fs, ["fkey"], "v", combine_partials=True)
+    windowed = fs.select(
+        "fkey", F.timestamp_seconds(F.lit(0)).alias("ts"), F.xxhash64("g").alias("h")
+    )
+    builds = {
+        "row fold": lambda: streaming_tdigest(fs, ["fkey"], "v"),
+        "combine_partials": lambda: streaming_tdigest(
+            fs, ["fkey"], "v", combine_partials=True
+        ),
+        "windowed": lambda: streaming_windowed_hll(windowed, "ts", "h", keys=["fkey"]),
+    }
+    for build in builds.values():
+        with pytest.raises(ValueError, match="float keys"):
+            build()
+
+
+def test_streaming_tdigest_combine_exact_nullable_bigint_keys(spark, tmp_path_factory):
+    """combine_partials keeps keys in Arrow through its partial phase:
+    a nullable bigint key column with values above 2^53 (where float64
+    cannot tell 2^53 + 1 from 2^53) groups exactly, and the NULL key
+    stays its own group."""
+    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
+
+    big = 1 << 53
+    rows_per_key = {big + 1: 10, big + 2: 20, (1 << 62) + 3: 30, None: 40}
+    schema = StructType(
+        [StructField("k", LongType(), True), StructField("v", DoubleType(), True)]
+    )
+    src = str(tmp_path_factory.mktemp("bigkey_src"))
+    for b in range(3):  # every batch mixes NULL and huge keys
+        rows = [
+            (k, float(b * 100 + i))
+            for k, n in rows_per_key.items()
+            for i in range(n)
+        ]
+        spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(src)
+    stream = (
+        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
+    )
+    out = streaming_tdigest(stream, ["k"], "v", combine_partials=True)
+    final = {}
+    for r in _run_to_memory(spark, out, "bigkey_comb", tmp_path_factory):
+        final[r["k"]] = max(final.get(r["k"], 0), r["count"])
+    assert final == {k: 3 * n for k, n in rows_per_key.items()}
+
+
+def test_streaming_topk_bigint_items_match_batch(spark, tmp_path_factory):
+    """Non-string items are cast to string JVM-side, as topk_sketch
+    does: a nullable bigint item stream yields the same per-item counts
+    (items "3", not "3.0") as topk_sketch over the same rows."""
+    from tdigest_spark.kernel.topk import SpaceSaving
+    from tdigest_spark.spark.topk_agg import topk_sketch
+    from tdigest_spark.streaming.digest_stream import streaming_topk
+
+    src = str(tmp_path_factory.mktemp("topk_int_src"))
+    for b in range(3):
+        spark.range(b * 500, (b + 1) * 500).select(
+            F.lit("g").alias("g"),
+            F.when(F.col("id") % 5 != 0, F.col("id") % 7).alias("item"),
+        ).coalesce(1).write.mode("append").parquet(src)
+    schema = spark.read.parquet(src).schema
+    stream = (
+        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
+    )
+    rows = _run_to_memory(
+        spark, streaming_topk(stream, ["g"], "item", m=16), "topk_int", tmp_path_factory
+    )
+    streamed = SpaceSaving.from_bytes(bytes(max(rows, key=lambda r: r["n"])["topk"]))
+    (batch_row,) = topk_sketch(spark.read.parquet(src), "item", keys=["g"], m=16).collect()
+    batch = SpaceSaving.from_bytes(bytes(batch_row["topk"]))
+    assert streamed.n == batch.n == 1200
+    assert streamed.counts == batch.counts
+    assert set(streamed.counts) == {str(i) for i in range(7)}
+
+
+@pytest.mark.parametrize("builder", ["streaming_hll_distinct", "streaming_windowed_countmin"])
+def test_streaming_hash_guard_rejects_null_hashes(spark, tmp_path_factory, builder):
+    """A NULL in hash_col float-promotes the pandas column (rounding
+    63-bit hashes), so the unpacked hash folds fail the query instead
+    of folding wrong hashes."""
+    from pyspark.errors import StreamingQueryException
+
+    from tdigest_spark.streaming import digest_stream
+
+    src = str(tmp_path_factory.mktemp(f"guard_{builder}"))
+    spark.range(100).select(
+        F.lit("g").alias("g"),
+        F.timestamp_seconds(F.col("id")).alias("ts"),
+        F.when(F.col("id") != 7, F.xxhash64("id")).alias("h"),
+    ).coalesce(1).write.mode("overwrite").parquet(src)
+    stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
+    if builder == "streaming_hll_distinct":
+        out = digest_stream.streaming_hll_distinct(stream, ["g"], "h")
+    else:
+        out = digest_stream.streaming_windowed_countmin(stream, "ts", "h", keys=["g"])
+    q = (
+        out.writeStream.format("memory")
+        .queryName(f"guard_{builder}")
+        .outputMode("update")
+        .option("checkpointLocation", str(tmp_path_factory.mktemp("ck_guard")))
+        .trigger(availableNow=True)
+        .start()
+    )
+    with pytest.raises(StreamingQueryException, match="non-nullable int64 hash"):
+        q.awaitTermination(180)
 
 
 def test_prereduce_windowed_packed_matches_unpacked(spark, tmp_path_factory):
@@ -729,7 +848,7 @@ def test_prereduce_windowed_packed_matches_unpacked(spark, tmp_path_factory):
     path's — HLL because register updates are duplication/order
     insensitive, count-min because the staging carries exact per-hash
     counts.  Also regression-covers the ts_col=="window_start"
-    watermark collision (_streaming_windowed_sketch renames the tagged
+    watermark collision (_assign_windows renames the tagged
     column instead of projecting it away)."""
     from tdigest_spark.streaming.digest_stream import (
         prereduce_windowed_hashes,
