@@ -552,7 +552,15 @@ def ivf_topk_bucketed(
     (a 100-query batch at n_probe=16/256 lists unions ~60% of the
     buckets, so query-oblivious scoring would do ~0.6× the brute-force
     work per query — measured SLOWER than exact at 1M vectors; the
-    grouped form is 5.6× faster than exact, recall@10 = 1.0)."""
+    grouped form is 5.6× faster than exact, recall@10 = 1.0).
+
+    The result is returned materialized and lineage-free
+    (``_checkpoint_eager``).  Under dynamic allocation with a
+    SparkContext checkpoint dir it is a reliable ``checkpoint``.
+    Otherwise it is a ``localCheckpoint``, whose blocks live unreplicated
+    on executors: if one is lost or decommissioned (dynamic allocation
+    without a checkpoint dir), actions on the returned frame fail
+    instead of recomputing it."""
     qids, qmat, probes = _query_probes(queries, centroids, n_probe)
     probe_lists = sorted({int(v) for row in probes for v in row})
     # per-list query groups: list_id -> (row indices into qids/qmat)
@@ -652,14 +660,25 @@ def ivf_topk_bucketed(
     # action time, so a lazily-returned frame would plan under whatever
     # conf the CALLER's session carries — on a vanilla session the
     # auto-bucketed-scan rule would silently drop pruning and full-scan
-    # the index.  localCheckpoint (eager) SEVERS the lineage, so unlike
+    # the index.  An eager checkpoint SEVERS the lineage, so unlike
     # persist+count a downstream recomputation (cache eviction, lost
     # executor with replication) can never re-plan the scan unpruned
     # and full-scan a 10^9-vector index; the materialized result is
     # bounded (≤ |queries|·k rows) and needs no caller unpersist.
     with bucket_pruning_enforced(spark):
-        out = out.localCheckpoint(eager=True)
+        out = _checkpoint_eager(out, spark.sparkContext)
     return out
+
+
+def _checkpoint_eager(df: DataFrame, sc) -> DataFrame:
+    """Materialize ``df`` and cut its lineage: a reliable ``checkpoint``
+    when ``spark.dynamicAllocation.enabled`` and ``sc`` has a checkpoint
+    dir (executors come and go, taking ``localCheckpoint`` blocks with
+    them), else a ``localCheckpoint`` (no checkpoint-dir write)."""
+    dynamic = sc.getConf().get("spark.dynamicAllocation.enabled", "false")
+    if dynamic.strip().lower() == "true" and sc.getCheckpointDir():
+        return df.checkpoint(eager=True)
+    return df.localCheckpoint(eager=True)
 
 
 def _query_probes(

@@ -53,16 +53,25 @@ def get_spark(
 
 def warm_workers(spark: SparkSession, rounds: int = 4) -> int:
     """Pre-import the engine's worker-side modules across the Python
-    worker pool: one job of rounds×parallelism short sleeping tasks, so
-    the scheduler spreads them over distinct workers.
+    worker pools: per pool, one job of rounds×parallelism short sleeping
+    tasks, so the scheduler spreads them over distinct workers.
 
-    A fresh pyspark worker pays ~0.3 s of one-time imports on its first
-    engine task (pyarrow ~0.08 s; pandas ~0.2 s — pa.array/pa.scalar
-    pull it lazily even on pandas-free code paths).  On a real cluster
-    that is per-executor startup cost amortized over millions of tasks;
-    in sub-second local benchmarks the pool rotates cold workers
-    through single-task jobs, so benches call this once up front.
-    Returns the number of distinct workers warmed."""
+    Spark keeps one worker pool per worker environment, and SQL Python
+    tasks (``mapInArrow``, pandas UDFs — every engine stage) carry
+    ``SPARK_SIMPLIFIED_TRACEBACK`` that Python RDD tasks do not, so the
+    two never share a worker: both pools are warmed.
+
+    A fresh pyspark worker pays a one-time import cost on its first
+    engine task (pyarrow, plus pandas, which pa.array/pa.scalar pull
+    lazily even on pandas-free code paths).  Importing ``tdigest_spark``
+    also installs the package's zipimport hook (``tdigest_spark._worker``),
+    which removes a per-TASK cost: without it every task start re-parses
+    ~26.7k zip directory entries (0.2-0.4 s of CPU on a 4-vCPU box).  On
+    a real cluster the imports are per-executor startup cost amortized
+    over millions of tasks; in sub-second local benchmarks the pool
+    rotates cold workers through single-task jobs, so benches call this
+    once up front.  Returns the number of distinct workers warmed in
+    the SQL pool, the one engine stages run on."""
 
     def _warm(_):
         import os
@@ -79,6 +88,14 @@ def warm_workers(spark: SparkSession, rounds: int = 4) -> int:
         _t.sleep(0.05)
         return os.getpid()
 
+    def _warm_batches(batches):
+        import pyarrow as pa
+
+        for _ in batches:
+            pass
+        yield pa.RecordBatch.from_pydict({"pid": [_warm(None)]})
+
     n = spark.sparkContext.defaultParallelism * rounds
-    pids = spark.sparkContext.parallelize(range(n), n).map(_warm).collect()
-    return len(set(pids))
+    spark.sparkContext.parallelize(range(n), n).map(_warm).collect()
+    sql = spark.range(0, n, 1, n).mapInArrow(_warm_batches, "pid long").collect()
+    return len({r.pid for r in sql})

@@ -359,6 +359,55 @@ def test_warm_workers_counts_pool(spark):
     assert 1 <= n <= spark.sparkContext.defaultParallelism * 2
 
 
+def test_warm_workers_installs_zipimport_hook(spark):
+    """A warmed worker skips pyspark's per-task re-parse of its zip
+    archives; the driver keeps the stdlib zipimport."""
+    import zipimport
+
+    from tdigest_spark.spark.session import warm_workers
+
+    def probe(batches):
+        import importlib
+        import sys
+        import zipimport
+
+        import pyarrow as pa
+
+        for _ in batches:
+            pass
+        reads = []
+        stdlib_read = zipimport._read_directory
+
+        def counting_read(path):
+            reads.append(path)
+            return stdlib_read(path)
+
+        zipimport._read_directory = counting_read
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = stdlib_read
+        zips = sum(
+            isinstance(v, zipimport.zipimporter)
+            for v in sys.path_importer_cache.values()
+        )
+        yield pa.RecordBatch.from_pydict(
+            {
+                "hook": [zipimport.zipimporter.invalidate_caches.__module__],
+                "reads": [len(reads)],
+                "zips": [zips],
+            }
+        )
+
+    warm_workers(spark, rounds=1)
+    schema = "hook string, reads long, zips long"
+    row = spark.range(1).mapInArrow(probe, schema).collect()[0]
+    assert row.hook == "tdigest_spark._worker"
+    assert row.zips > 0  # the worker does import from zip archives
+    assert row.reads == 0
+    assert zipimport.zipimporter.invalidate_caches.__module__ == "zipimport"
+
+
 def test_lazy_package_namespace():
     """PEP 562 exports resolve and cache; unknown names raise."""
     import importlib

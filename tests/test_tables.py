@@ -215,3 +215,43 @@ def test_ivf_bucketed_prunes_on_vanilla_session(spark):
         assert row["pruned_ok"] and row["recall_ok"] and row["recall_hi"]
     finally:
         ns.sql("DROP TABLE IF EXISTS ivf_vanilla_test")
+
+
+@pytest.mark.parametrize(
+    "dynamic, ckpt_dir, expect",
+    [
+        ("true", "/ckpt", "checkpoint"),
+        (" TRUE ", "/ckpt", "checkpoint"),
+        ("true", None, "localCheckpoint"),
+        ("false", "/ckpt", "localCheckpoint"),
+        (None, "/ckpt", "localCheckpoint"),
+    ],
+)
+def test_ivf_checkpoint_choice_follows_dynamic_allocation(dynamic, ckpt_dir, expect):
+    """``spark.dynamicAllocation.enabled`` is static SparkContext conf —
+    a running session cannot toggle it — so the choice is checked
+    against a stubbed context."""
+    from tdigest_spark.similarity import _checkpoint_eager
+
+    class Conf:
+        def get(self, key, default=None):
+            assert key == "spark.dynamicAllocation.enabled"
+            return default if dynamic is None else dynamic
+
+    class Ctx:
+        def getConf(self):
+            return Conf()
+
+        def getCheckpointDir(self):
+            return ckpt_dir
+
+    class Frame:
+        def checkpoint(self, eager):
+            assert eager
+            return "checkpoint"
+
+        def localCheckpoint(self, eager):
+            assert eager
+            return "localCheckpoint"
+
+    assert _checkpoint_eager(Frame(), Ctx()) == expect
