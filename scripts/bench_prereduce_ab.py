@@ -57,6 +57,8 @@ def main() -> None:
 
     from pyspark.sql import SparkSession, functions as F
 
+    from tdigest_spark.spark.session import python_worker_confs
+
     spark = (
         SparkSession.builder.appName(f"prereduce-ab-{cores}")
         .master(f"local[{cores}]")
@@ -67,6 +69,7 @@ def main() -> None:
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", "8g")
         .config("spark.sql.session.timeZone", "UTC")
+        .config(map=python_worker_confs())
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")

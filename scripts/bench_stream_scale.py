@@ -28,6 +28,7 @@ import subprocess
 import sys
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 EVENTS = "/tmp/tdigest_stream/events"
 EVENTS_SORTED = "/tmp/tdigest_stream/events_sorted"
 EVENTS_ZIPF = "/tmp/tdigest_stream/events_zipf"
@@ -38,6 +39,7 @@ WORKER = r"""
 import json, shutil, sys, tempfile, time
 sys.path.insert(0, %(root)r)
 from pyspark.sql import SparkSession, functions as F
+from tdigest_spark.spark.session import python_worker_confs
 
 cores = int(sys.argv[1])
 spark = (SparkSession.builder.appName(f"stream-scale-{cores}")
@@ -52,6 +54,7 @@ spark = (SparkSession.builder.appName(f"stream-scale-{cores}")
     .config("spark.ui.showConsoleProgress", "false")
     .config("spark.driver.memory", "8g")
     .config("spark.sql.session.timeZone", "UTC")
+    .config(map=python_worker_confs())
     .getOrCreate())
 spark.sparkContext.setLogLevel("ERROR")
 from tdigest_spark.kernel.tdigest import TDigest, merge_all
@@ -319,6 +322,8 @@ print(json.dumps(out))
 def _gen_session(name: str):
     from pyspark.sql import SparkSession
 
+    from tdigest_spark.spark.session import python_worker_confs
+
     spark = (
         SparkSession.builder.appName(name)
         .master("local[32]")
@@ -326,6 +331,7 @@ def _gen_session(name: str):
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", "8g")
         .config("spark.sql.session.timeZone", "UTC")
+        .config(map=python_worker_confs())
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")

@@ -36,24 +36,51 @@ def t(fn, reps=5):
     return round(best, 4)
 
 
-def invalidate_probe():
-    """(pid, zipimporters on the path cache, one invalidate_caches() in s)."""
+PROBE_SCHEMA = ("pid long, zips long, invalidate_s double, first_batch_s double, "
+                "gc_s double, frozen long, uds boolean")
+PROBE_NAMES = [f.split()[0] for f in PROBE_SCHEMA.split(", ")]
+
+
+def worker_probe(items):
+    """Consume a task's input, then return one probe row (see module doc)."""
+    import gc
     import importlib
     import zipimport
 
+    t0 = time.perf_counter()
+    for _ in items:
+        break
+    first_batch_s = time.perf_counter() - t0
+    for _ in items:
+        pass
     zips = sum(isinstance(v, zipimport.zipimporter) for v in sys.path_importer_cache.values())
     t0 = time.perf_counter()
     importlib.invalidate_caches()
-    return os.getpid(), zips, time.perf_counter() - t0
+    invalidate_s = time.perf_counter() - t0
+    t0 = time.perf_counter()
+    gc.collect()
+    gc_s = time.perf_counter() - t0
+    uds = os.environ.get("PYTHON_UNIX_DOMAIN_ENABLED", "false").lower() == "true"
+    return (os.getpid(), zips, invalidate_s, first_batch_s, gc_s,
+            gc.get_freeze_count(), uds)
 
 
 def per_worker(rows):
+    """Per pid: median timings (ms), max counts, transport."""
     by_pid = defaultdict(list)
-    for pid, zips, dt in rows:
-        by_pid[pid].append((zips, dt))
+    for row in rows:
+        by_pid[row[0]].append(row[1:])
+
+    def med_ms(v, i):
+        return round(1e3 * sorted(r[i] for r in v)[len(v) // 2], 2)
+
     return {
-        str(pid): {"zipimporters": max(z for z, _ in v),
-                   "invalidate_ms": round(1e3 * sorted(d for _, d in v)[len(v) // 2], 2)}
+        str(pid): {"zipimporters": max(r[0] for r in v),
+                   "invalidate_ms": med_ms(v, 1),
+                   "first_batch_ms": med_ms(v, 2),
+                   "gc_ms": med_ms(v, 3),
+                   "frozen": max(r[4] for r in v),
+                   "transport": "uds" if v[0][5] else "tcp"}
         for pid, v in sorted(by_pid.items())
     }
 
@@ -73,14 +100,12 @@ def main():
     n = sc.defaultParallelism * 4
 
     def probe_batches(batches):
-        for _ in batches:
-            pass
-        pid, zips, dt = invalidate_probe()
-        yield pa.RecordBatch.from_pydict({"pid": [pid], "zips": [zips], "dt": [dt]})
+        row = worker_probe(batches)
+        yield pa.RecordBatch.from_pylist([dict(zip(PROBE_NAMES, row))])
 
-    rdd_rows = sc.parallelize(range(n), n).map(lambda _: invalidate_probe()).collect()
-    sql_rows = spark.range(0, n, 1, n).mapInArrow(
-        probe_batches, "pid long, zips long, dt double").collect()
+    rdd_rows = sc.parallelize(range(n), n).mapPartitions(
+        lambda it: [worker_probe(it)]).collect()
+    sql_rows = spark.range(0, n, 1, n).mapInArrow(probe_batches, PROBE_SCHEMA).collect()
     out = {"workers": {"rdd": per_worker(rdd_rows),
                        "sql": per_worker([tuple(r) for r in sql_rows])}}
 

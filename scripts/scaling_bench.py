@@ -26,6 +26,7 @@ WORKER = r"""
 import json, os, sys, time
 sys.path.insert(0, %(root)r)
 from pyspark.sql import SparkSession, functions as F
+from tdigest_spark.spark.session import python_worker_confs
 cores = int(sys.argv[1])
 spark = (SparkSession.builder.appName(f"scale-{cores}")
     .master(f"local[{cores}]")
@@ -35,6 +36,7 @@ spark = (SparkSession.builder.appName(f"scale-{cores}")
     .config("spark.ui.enabled", "false")
     .config("spark.ui.showConsoleProgress", "false")
     .config("spark.driver.memory", "8g")
+    .config(map=python_worker_confs())
     .getOrCreate())
 spark.sparkContext.setLogLevel("ERROR")
 from tdigest_spark.spark.tdigest_agg import tdigest_percentile

@@ -23,6 +23,11 @@ per-TASK cost: pyspark's ``importlib.invalidate_caches()`` at each task
 start otherwise re-parses ~26.7k zip directory entries (pyspark.zip,
 the Spark jar, py4j), 0.2-0.4 s per task on a 4-vCPU box.  The driver and
 Spark-free imports keep the stdlib ``zipimport`` and never import pyspark.
+On a ``get_spark`` session the workers come from ``_daemon``, which
+imports numpy, pyarrow, pandas and the engine modules, installs the hook
+itself (this ``__init__`` runs there before ``pyspark.worker``) and
+GC-freezes them before forking, so no task pays those imports and
+pyspark's post-task ``gc.collect()`` skips them.
 """
 
 from __future__ import annotations

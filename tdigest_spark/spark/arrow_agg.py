@@ -1233,6 +1233,20 @@ def _pa_type(ddl: str):
     raise ValueError(f"unsupported cast target {ddl!r}")
 
 
+def _num_partitions(df: DataFrame) -> int:
+    """``df``'s partition count without running any of it.
+
+    Read from the physical plan's ``outputPartitioning`` (under AQE, of
+    its initial plan: shuffle partitions before coalescing, an upper
+    bound).  Only an unknown count (a file scan, a union) falls back to
+    ``.rdd``, which under AQE materializes every Exchange of the input."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if _jcls(plan) == "AdaptiveSparkPlanExec":
+        plan = plan.initialPlan()
+    n = plan.outputPartitioning().numPartitions()
+    return max(1, n if n > 0 else df.rdd.getNumPartitions())
+
+
 def sketch_groupby_arrow(
     df: DataFrame,
     keys: Sequence[str],
@@ -1287,11 +1301,8 @@ def sketch_groupby_arrow(
             predicate=predicate, pred_part=pred_part, pred_data=pred_data,
         )
     else:
-        # .rdd forces a second physical planning of the whole input —
-        # only pay it when the count actually matters (ungrouped fan-in)
-        n_input_parts = (
-            max(1, df.rdd.getNumPartitions()) if not grouped else 1
-        )
+        # the count only matters for the ungrouped fan-in
+        n_input_parts = 1 if grouped else _num_partitions(df)
         partials = df.mapInArrow(run_partial, partial_schema)
     if not grouped:
         # SQL semantics: an ungrouped aggregate over zero rows still

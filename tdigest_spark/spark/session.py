@@ -7,9 +7,53 @@ skewed merge shuffles re-plan at runtime.
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
+import shutil
+import tempfile
+import uuid
 
 from pyspark.sql import SparkSession
+
+# Spark names each worker socket ``<dir>/.<uuid4>.sock``; Linux caps
+# ``sun_path`` at 107 bytes plus the NUL
+_SOCK_NAME_LEN = len(f"/.{uuid.uuid4()}.sock")
+_SUN_PATH_MAX = 107
+
+
+def _socket_dir() -> str:
+    """A fresh private (0700) directory for Spark's Unix domain sockets,
+    removed at exit.  Over a Unix socket pyspark skips its auth secret,
+    so the directory's permissions are the only guard.  It goes in
+    Python's tempdir when the longest socket path fits ``sun_path``,
+    else under ``/tmp``."""
+    d = tempfile.mkdtemp(prefix="tds-")
+    if len(os.fsencode(d)) + _SOCK_NAME_LEN > _SUN_PATH_MAX:
+        os.rmdir(d)
+        d = tempfile.mkdtemp(prefix="tds-", dir="/tmp")
+    atexit.register(shutil.rmtree, d, True)
+    return d
+
+
+@functools.cache
+def python_worker_confs() -> dict[str, str]:
+    """Spark confs that run Python workers over Unix domain sockets and
+    fork them from ``tdigest_spark._daemon`` (engine pre-imported, zip
+    hook installed, import-time objects GC-frozen).  On loopback TCP
+    neither pyspark nor Spark sets ``TCP_NODELAY``, so a task's small
+    messages can wait on delayed ACKs.  The package's parent directory goes on the workers' ``PYTHONPATH`` so
+    the daemon module resolves from any working directory.  One socket
+    directory per process."""
+    pkg_parent = os.path.dirname(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    )
+    return {
+        "spark.python.unix.domain.socket.enabled": "true",
+        "spark.python.unix.domain.socket.dir": _socket_dir(),
+        "spark.python.daemon.module": "tdigest_spark._daemon",
+        "spark.executorEnv.PYTHONPATH": pkg_parent,
+    }
 
 
 def get_spark(
@@ -47,12 +91,13 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.session.timeZone", "UTC")
+        .config(map=python_worker_confs())
     )
     return builder.getOrCreate()
 
 
 def warm_workers(spark: SparkSession, rounds: int = 4) -> int:
-    """Pre-import the engine's worker-side modules across the Python
+    """Touch every Python worker the engine's stages will use, in both
     worker pools: per pool, one job of rounds×parallelism short sleeping
     tasks, so the scheduler spreads them over distinct workers.
 
@@ -61,17 +106,21 @@ def warm_workers(spark: SparkSession, rounds: int = 4) -> int:
     ``SPARK_SIMPLIFIED_TRACEBACK`` that Python RDD tasks do not, so the
     two never share a worker: both pools are warmed.
 
-    A fresh pyspark worker pays a one-time import cost on its first
-    engine task (pyarrow, plus pandas, which pa.array/pa.scalar pull
-    lazily even on pandas-free code paths).  Importing ``tdigest_spark``
-    also installs the package's zipimport hook (``tdigest_spark._worker``),
-    which removes a per-TASK cost: without it every task start re-parses
-    ~26.7k zip directory entries (0.2-0.4 s of CPU on a 4-vCPU box).  On
-    a real cluster the imports are per-executor startup cost amortized
-    over millions of tasks; in sub-second local benchmarks the pool
-    rotates cold workers through single-task jobs, so benches call this
-    once up front.  Returns the number of distinct workers warmed in
-    the SQL pool, the one engine stages run on."""
+    On a ``get_spark`` session each pool's workers are forked from
+    ``tdigest_spark._daemon``, which has already imported numpy, pyarrow,
+    pandas and the engine modules, installed the package's zipimport hook
+    and GC-frozen the import-time objects; what is left of a worker's
+    first-task cost is the fork and its first connection.  The per-TASK
+    costs those steps remove: pyspark's ``importlib.invalidate_caches()``
+    re-parsing ~26.7k zip directory entries (0.2-0.4 s of CPU on a
+    4-vCPU box), delayed-ACK waits on loopback TCP (the session's
+    workers use Unix domain sockets) and a 40-70 ms full
+    ``gc.collect()`` after each task (0.03-0.3 ms over the frozen heap).
+    On a session built elsewhere the first engine task still imports the
+    modules and installs the hook.  In sub-second local benchmarks the
+    pool rotates fresh workers through single-task jobs, so benches call
+    this once up front.  Returns the number of distinct workers warmed
+    in the SQL pool, the one engine stages run on."""
 
     def _warm(_):
         import os

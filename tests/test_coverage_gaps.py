@@ -360,15 +360,26 @@ def test_warm_workers_counts_pool(spark):
 
 
 def test_warm_workers_installs_zipimport_hook(spark):
-    """A warmed worker skips pyspark's per-task re-parse of its zip
-    archives; the driver keeps the stdlib zipimport."""
+    """Every Python worker of a ``get_spark`` session is forked from
+    ``tdigest_spark._daemon`` over a Unix socket: at task entry the
+    engine is imported, the zipimport hook skips pyspark's per-task
+    re-parse of its zip archives, and the import-time objects are
+    GC-frozen.  Checked on a fresh worker pool (never warmed) and after
+    ``warm_workers``; the driver keeps the stdlib zipimport."""
+    import uuid
     import zipimport
 
     from tdigest_spark.spark.session import warm_workers
 
     def probe(batches):
-        import importlib
         import sys
+
+        preloaded = [
+            m in sys.modules for m in ("pyarrow", "tdigest_spark.spark.arrow_agg")
+        ]
+        import gc
+        import importlib
+        import os
         import zipimport
 
         import pyarrow as pa
@@ -396,15 +407,35 @@ def test_warm_workers_installs_zipimport_hook(spark):
                 "hook": [zipimport.zipimporter.invalidate_caches.__module__],
                 "reads": [len(reads)],
                 "zips": [zips],
+                "preloaded": [all(preloaded)],
+                "frozen": [gc.get_freeze_count()],
+                "uds": [os.environ.get("PYTHON_UNIX_DOMAIN_ENABLED", "").lower()],
             }
         )
 
+    schema = (
+        "hook string, reads long, zips long, preloaded boolean, frozen long, uds string"
+    )
+
+    def check(row):
+        assert row.hook == "tdigest_spark._worker"
+        assert row.zips > 0  # the worker does import from zip archives
+        assert row.reads == 0
+        assert row.preloaded
+        assert row.frozen > 0
+        assert row.uds == "true"
+
+    # Spark keys worker pools by the function's environment: a new
+    # variable gets a new daemon whose workers ran no task before
+    env = spark.sparkContext.environment
+    env["TDIGEST_SPARK_TEST_POOL"] = uuid.uuid4().hex
+    try:
+        check(spark.range(1).mapInArrow(probe, schema).collect()[0])
+    finally:
+        del env["TDIGEST_SPARK_TEST_POOL"]
+
     warm_workers(spark, rounds=1)
-    schema = "hook string, reads long, zips long"
-    row = spark.range(1).mapInArrow(probe, schema).collect()[0]
-    assert row.hook == "tdigest_spark._worker"
-    assert row.zips > 0  # the worker does import from zip archives
-    assert row.reads == 0
+    check(spark.range(1).mapInArrow(probe, schema).collect()[0])
     assert zipimport.zipimporter.invalidate_caches.__module__ == "zipimport"
 
 

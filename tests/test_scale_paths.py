@@ -54,6 +54,31 @@ def test_global_agg_bounded_fanin(spark, monkeypatch):
     assert abs(est2.collect()[0]["percentile"] - 0.5) < 0.01
 
 
+def test_global_agg_shuffled_input_plans_without_a_job(spark, monkeypatch):
+    """An ungrouped aggregate over an input that ends in an Exchange
+    reads the input's partition count from the physical plan: planning
+    runs no job (under AQE, ``.rdd`` would run the input's shuffle) and
+    the fan-in round is sized from the 9 shuffle partitions."""
+    from tdigest_spark.spark import arrow_agg
+    from tdigest_spark.spark.tdigest_agg import tdigest_percentile
+
+    monkeypatch.setattr(arrow_agg, "MERGE_FANOUT", 4)
+    n = 20_000
+    df = spark.range(n).repartition(9).select(
+        (F.col("id").cast("double") / n).alias("v")
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("shuffled_plan", "plan only")
+    try:
+        est = tdigest_percentile(df, "v", 100, 0.5)
+        plan = est._jdf.queryExecution().executedPlan().toString()
+        assert not sc.statusTracker().getJobIdsForGroup("shuffled_plan")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert plan.count("MapInArrow") == 3, plan
+    assert abs(est.collect()[0]["percentile"] - 0.5) < 0.01
+
+
 def test_native_scan_partitioned_table(spark, tmp_path_factory):
     """Hive-partitioned parquet: the native scan synthesizes partition
     columns from paths; counts are exact and estimates in-bound, and

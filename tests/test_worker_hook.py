@@ -1,13 +1,19 @@
-"""Spark-free tests of the worker-side zipimport hook (``tdigest_spark._worker``).
+"""Spark-free tests of the Python worker bootstrap: the zipimport hook
+(``tdigest_spark._worker``) and the worker socket directory.
 
-The hook patches a stdlib class process-wide, so each check runs in a
-fresh interpreter.
+The hook patches a stdlib class process-wide, so each hook check runs in
+a fresh interpreter.
 """
 
 import os
+import shutil
+import socket
+import stat
 import subprocess
 import sys
+import tempfile
 import textwrap
+import uuid
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -106,4 +112,54 @@ def test_hook_not_installed_outside_spark_workers(tmp_path):
         assert not any(k == "pyspark" or k.startswith("pyspark.") for k in sys.modules)
         """,
         tmp_path,
+    )
+
+
+def _check_socket_dir(d: str) -> None:
+    assert stat.S_IMODE(os.stat(d).st_mode) == 0o700
+    assert os.listdir(d) == []
+    # the longest name Spark gives a socket in it binds
+    path = os.path.join(d, f".{uuid.uuid4()}.sock")
+    assert len(os.fsencode(path)) <= 107
+    with socket.socket(socket.AF_UNIX, socket.SOCK_STREAM) as s:
+        s.bind(path)
+
+
+def test_socket_dir_private_short_and_fresh(tmp_path, monkeypatch):
+    from tdigest_spark.spark.session import _socket_dir
+
+    short = tempfile.mkdtemp(dir="/tmp")
+    monkeypatch.setattr(tempfile, "tempdir", None)
+    monkeypatch.setenv("TMPDIR", short)
+    try:
+        a, b = _socket_dir(), _socket_dir()
+        assert a != b
+        assert os.path.dirname(a) == short
+        _check_socket_dir(a)
+    finally:
+        shutil.rmtree(short)
+
+    # a TMPDIR too deep for a socket path falls back to /tmp
+    deep = tmp_path / ("d" * 60) / ("e" * 60)
+    deep.mkdir(parents=True)
+    monkeypatch.setenv("TMPDIR", str(deep))
+    monkeypatch.setattr(tempfile, "tempdir", None)
+    d = _socket_dir()
+    try:
+        assert os.path.dirname(d) == "/tmp"
+        _check_socket_dir(d)
+        assert os.listdir(deep) == []  # the too-long candidate is gone
+    finally:
+        shutil.rmtree(d)
+
+
+def test_python_worker_confs_resolve_daemon_module():
+    from tdigest_spark.spark.session import python_worker_confs
+
+    confs = python_worker_confs()
+    assert confs["spark.python.unix.domain.socket.enabled"] == "true"
+    assert os.path.isdir(confs["spark.python.unix.domain.socket.dir"])
+    assert confs["spark.python.daemon.module"] == "tdigest_spark._daemon"
+    assert os.path.isfile(
+        os.path.join(confs["spark.executorEnv.PYTHONPATH"], "tdigest_spark", "_daemon.py")
     )
