@@ -1,7 +1,8 @@
 """End-to-end dedup-family volume evidence at >= 10M documents.
 
-The dedup micro-bench (bench_dedup_vec.py) measures fingerprint
-throughput on ~100k docs; this script runs the FULL pipelines —
+The deleted dedup micro-bench (``scripts/bench_dedup_vec.py``, in git
+history; results in BENCH.md) measured fingerprint throughput on ~100k
+docs; this script runs the FULL pipelines —
 signatures/fingerprints -> banding -> candidate pairs -> clusters — on
 a generated 10M-page Common-Crawl-style corpus with 1M planted exact
 duplicates (ids 0..1M regenerate deterministically identical text under

@@ -66,8 +66,6 @@ def build_partial_digests(
         return read_partials(spark, checkpoint_dir)
 
     keys = list(keys)
-    # key fields in KEYS order — the native scan path yields row tuples
-    # positionally, so schema order must match the key order exactly
     by_name = {f.name: f for f in df.schema.fields}
     key_fields = [by_name[k] for k in keys]
     schema = StructType(
@@ -109,16 +107,14 @@ def build_partial_digests(
             blob = d.to_bytes() if d.count > 0 else None
             yield gkey, blob, rows_seen[gkey], len(d.means)
 
-    def build(batches):
-        import pyarrow as pa
-
-        from pyspark import TaskContext
+    def emit(split_id, batches):
         from pyspark.sql.pandas.types import to_arrow_schema
 
-        out_schema = to_arrow_schema(schema)
-        split_id = TaskContext.get().partitionId()
+        from tdigest_spark.spark.arrow_agg import record_batch_exact
+
         out: dict[str, list] = {f.name: [] for f in schema.fields}
         for gkey, blob, n_rows, n_cent in fold_batches(batches):
+            # ungrouped: zip drops _group_slices' sentinel (0,) key
             for kname, kval in zip(keys, gkey):
                 out[kname].append(kval)
             out["digest"].append(blob)
@@ -126,9 +122,12 @@ def build_partial_digests(
             out["n_rows"].append(n_rows)
             out["n_centroids"].append(n_cent)
             out["n_bytes"].append(len(blob) if blob else 0)
-        from tdigest_spark.spark.arrow_agg import record_batch_exact
+        return record_batch_exact(out, to_arrow_schema(schema))
 
-        yield record_batch_exact(out, out_schema)
+    def build(batches):
+        from pyspark import TaskContext
+
+        yield emit(TaskContext.get().partitionId(), batches)
 
     from tdigest_spark.spark.arrow_agg import (
         NATIVE_SCAN,
@@ -144,33 +143,24 @@ def build_partial_digests(
         splits, col_map, predicate, pred_part, pred_data = native
         ops, sources = native_scan_ops(col_map, needed, pred_data)
 
-        def scan_build(indexed_bundles):
-            for split_id, bundle in indexed_bundles:
-                batches = iter_bundle_batches(
-                    bundle, needed, ops, sources, predicate, pred_part, pred_data
-                )
-                for gkey, blob, n_rows, n_cent in fold_batches(batches):
-                    if not keys:
-                        # ungrouped: _group_slices yields the sentinel
-                        # (0,) key, which has no schema field — emitting
-                        # it would shift every column right by one
-                        gkey = ()
-                    yield (
-                        *gkey,
-                        bytearray(blob) if blob is not None else None,
+        def scan_build(ids):
+            # one range id per task: range id = bundle index = split_id
+            for b in ids:
+                for split_id in b.column(0).to_pylist():
+                    yield emit(
                         split_id,
-                        n_rows,
-                        n_cent,
-                        len(blob) if blob else 0,
+                        iter_bundle_batches(
+                            splits[split_id], needed, ops, sources,
+                            predicate, pred_part, pred_data,
+                        ),
                     )
 
-        if splits:
-            rdd = spark.sparkContext.parallelize(
-                list(enumerate(splits)), len(splits)
-            ).mapPartitions(scan_build)
-            partials_df = spark.createDataFrame(rdd, schema, verifySchema=False)
-        else:
-            partials_df = spark.createDataFrame([], schema)
+        n = len(splits)
+        partials_df = (
+            spark.range(0, n, 1, n).mapInArrow(scan_build, schema)
+            if n
+            else spark.createDataFrame([], schema)
+        )
     else:
         partials_df = projected.mapInArrow(build, schema)
     partials_df.write.mode("overwrite").parquet(checkpoint_dir)

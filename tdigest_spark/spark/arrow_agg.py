@@ -53,9 +53,6 @@ MERGE_FANOUT = 256
 NATIVE_SCAN = os.environ.get("SPARK_GRAFT_NATIVE_SCAN", "1") != "0"
 # target split weight when bundling row groups of few large files
 SPLIT_BYTES = 64 << 20
-# sub-row-group row-range splitting for under-parallel plans (opt out
-# with SPARK_GRAFT_SUBSPLIT=0, e.g. for A/B measurement)
-_SUBSPLIT = os.environ.get("SPARK_GRAFT_SUBSPLIT", "1") != "0"
 # above this many files, skip driver-side footer reads and map
 # one split per file (footers would serialize the driver)
 MAX_FOOTER_READS = 4096
@@ -353,11 +350,6 @@ def _jcls(obj) -> str:
     return obj.getClass().getName().rsplit(".", 1)[-1]
 
 
-_NUMERIC_CASTS = {
-    "double", "float", "int", "bigint", "smallint", "tinyint", "decimal",
-}
-
-
 _CMP_OPS = {
     "EqualTo": "eq",
     "LessThan": "lt",
@@ -483,51 +475,6 @@ def _flatten_and(node):
     return [node]
 
 
-import operator as _op
-
-_PY_CMP = {"eq": _op.eq, "lt": _op.lt, "le": _op.le, "gt": _op.gt, "ge": _op.ge}
-
-
-def _py_eval(node, env):
-    """Evaluate a predicate AST over scalar values (partition columns)
-    with SQL three-valued logic; returns True/False/None."""
-    kind = node[0]
-    if kind == "lit":
-        return node[1]
-    if kind == "col":
-        return env[node[1]]
-    if kind in _PY_CMP:
-        l, r = _py_eval(node[1], env), _py_eval(node[2], env)
-        if l is None or r is None:
-            return None
-        return _PY_CMP[kind](l, r)
-    if kind == "and":
-        l, r = _py_eval(node[1], env), _py_eval(node[2], env)
-        if l is False or r is False:
-            return False
-        if l is None or r is None:
-            return None
-        return True
-    if kind == "or":
-        l, r = _py_eval(node[1], env), _py_eval(node[2], env)
-        if l is True or r is True:
-            return True
-        if l is None or r is None:
-            return None
-        return False
-    if kind == "not":
-        v = _py_eval(node[1], env)
-        return None if v is None else not v
-    if kind == "isnull":
-        return _py_eval(node[1], env) is None
-    if kind == "notnull":
-        return _py_eval(node[1], env) is not None
-    if kind == "in":
-        v = _py_eval(node[1], env)
-        return None if v is None else v in node[2]
-    raise ValueError(f"bad predicate node {node!r}")
-
-
 def _pc_eval(node, columns):
     """Evaluate a predicate AST to an Arrow boolean mask over a batch
     (SQL kleene semantics; filter treats null as drop)."""
@@ -610,8 +557,6 @@ def _native_expr(e):
     if ecls == "Cast":
         src = e.child()
         ddl = e.dataType().simpleString()
-        if ddl.split("(")[0] not in _NUMERIC_CASTS:
-            return None
         if _jcls(src) == "AttributeReference":
             if not _cast_is_safe(src.dataType().simpleString(), ddl):
                 return None
@@ -764,12 +709,12 @@ def _native_parquet_splits(df: DataFrame, needed: Sequence[str]):
             paths.append(f)
         if part_conjuncts:
             # partition pruning: drop files whose hive path values fail
-            # any partition-only conjunct (SQL semantics: unknown drops)
+            # any partition-only conjunct — the batch masks' evaluator, so
+            # Spark's NaN ordering holds here too (unknown drops)
             kept = []
-            pcols = set().union(*(_predicate_columns(c) for c in part_conjuncts))
             for p in paths:
-                env = {c: _hive_partition_value(p, c, part_cols[c]) for c in pcols}
-                if all(_py_eval(cj, env) is True for cj in part_conjuncts):
+                env = _partition_env(p, pred_part)
+                if all(_pc_eval(cj, env).as_py() is True for cj in part_conjuncts):
                     kept.append(p)
             paths = kept
         batch_predicate = None
@@ -804,10 +749,10 @@ def _native_parquet_splits(df: DataFrame, needed: Sequence[str]):
     if cached is not None:
         pieces = cached
         return _bundle_pieces(df, pieces, col_map, needed, batch_predicate, pred_part, pred_data)
-    pieces: list[tuple[str, tuple | None, int, tuple | None]] = []
+    pieces: list[tuple[str, tuple | None, int]] = []
     if len(paths) > MAX_FOOTER_READS:
         for p, size, _ in sigs:
-            pieces.append((p, None, size, None))
+            pieces.append((p, None, size))
     else:
         import pyarrow.parquet as pq
 
@@ -830,7 +775,7 @@ def _native_parquet_splits(df: DataFrame, needed: Sequence[str]):
                 # nulls; the native reader does not, so this table
                 # stays on the Catalyst path.
                 return None
-            kept: list[tuple[int, int, int]] = []
+            kept: list[tuple[int, int]] = []
             for g in range(md.num_row_groups):
                 rg = md.row_group(g)
                 # row-group statistics pruning: skip a group when a
@@ -840,7 +785,7 @@ def _native_parquet_splits(df: DataFrame, needed: Sequence[str]):
                     _rg_maybe_matches(rg, cj, col_idx) for cj in batch_conjuncts
                 ):
                     continue
-                kept.append((g, rg.total_byte_size, rg.num_rows))
+                kept.append((g, rg.total_byte_size))
                 total_bytes += rg.total_byte_size
             file_rgs.append((p, kept))
         # scale-adaptive split weight (guide §2.2/§6: derive partition
@@ -851,38 +796,15 @@ def _native_parquet_splits(df: DataFrame, needed: Sequence[str]):
         # into 2-3 tasks and leave the rest of the executor idle.
         eff = min(SPLIT_BYTES, max(1 << 20, total_bytes // (2 * parallelism)))
         for p, kept in file_rgs:
-            acc, rows, run = 0, 0, []
-            for g, gbytes, grows in kept:
+            acc, run = 0, []
+            for g, gbytes in kept:
                 run.append(g)
                 acc += gbytes
-                rows += grows
                 if acc >= eff:
-                    pieces.append((p, tuple(run), acc, rows))
-                    run, acc, rows = [], 0, 0
+                    pieces.append((p, tuple(run), acc))
+                    run, acc = [], 0
             if run:
-                pieces.append((p, tuple(run), acc, rows))
-        if _SUBSPLIT and 0 < len(pieces) < parallelism:
-            # row-group granularity left cores IDLE (fewer pieces than
-            # the executor width): sub-split pieces by ROW RANGE, aiming
-            # for ~one task wave total — a second wave of Python tasks
-            # costs more than it balances (measured +0.3 s at 64 vs 32
-            # tasks on the 32-file flagship).  A range task decodes its
-            # piece's batch stream up to the range end and folds only
-            # its own rows; the duplicated prefix decode is a fraction
-            # of the fold cost it parallelizes.
-            want = -(-parallelism // len(pieces))  # ceil
-            subbed = []
-            for p, rgs, sz, prows in pieces:
-                nsub = min(4, want, max(1, round(sz / max(1, eff))))
-                if nsub < 2 or prows < nsub * _BATCH_MIN_ROWS:
-                    subbed.append((p, rgs, sz, None))
-                    continue
-                bounds = [prows * i // nsub for i in range(nsub + 1)]
-                for lo, hi in zip(bounds, bounds[1:]):
-                    subbed.append((p, rgs, sz // nsub, (lo, hi)))
-            pieces = subbed
-        else:
-            pieces = [(p, rgs, sz, None) for p, rgs, sz, _rows in pieces]
+                pieces.append((p, tuple(run), acc))
 
     if len(_PIECE_CACHE) >= _PIECE_CACHE_MAX:
         _PIECE_CACHE.pop(next(iter(_PIECE_CACHE)))
@@ -898,7 +820,7 @@ def _bundle_pieces(df, pieces, col_map, needed, batch_predicate, pred_part, pred
     # well.  Huge inputs still fan out past one wave via the
     # total/SPLIT_BYTES term.
     parallelism = df.sparkSession.sparkContext.defaultParallelism
-    total = sum(sz for _p, _rgs, sz, _rr in pieces)
+    total = sum(sz for _p, _rgs, sz in pieces)
     target = max(parallelism, -(-total // SPLIT_BYTES))
     target = min(target, len(pieces))
     # least-loaded-first-decreasing via a heap: O(n log n) instead of
@@ -911,11 +833,9 @@ def _bundle_pieces(df, pieces, col_map, needed, batch_predicate, pred_part, pred
 
     bins: list[list] = [[] for _ in range(target)]
     heap = [(0, i) for i in range(target)]  # already a valid heap
-    for p, rgs, sz, rrange in sorted(
-        pieces, key=lambda x: (-x[2], x[0], x[1] or (), x[3] or ())
-    ):
+    for p, rgs, sz in sorted(pieces, key=lambda x: (-x[2], x[0], x[1] or ())):
         fill, i = heapq.heappop(heap)
-        bins[i].append((p, rgs, rrange))
+        bins[i].append((p, rgs))
         heapq.heappush(heap, (fill + sz, i))
     splits = [b for b in bins if b]
     return (
@@ -1085,35 +1005,26 @@ def iter_bundle_batches(
     predicate=None,
     pred_part: dict[str, str] | None = None,
     pred_data: Sequence[str] = (),
-    batch_size: int | None = None,
 ):
-    """Executor-side pyarrow reader for one split bundle: yields
-    RecordBatches already renamed to the output columns, with projected
-    expressions (casts / length / partition constants) applied and the
-    residual predicate evaluated as an Arrow mask.  ``batch_size=None``
-    sizes batches per file from row-group byte stats
-    (~_BATCH_TARGET_BYTES decoded per batch).
-
-    A bundle entry may carry a third element ``(row_lo, row_hi)``: the
-    task then folds only that pre-filter row range of the entry's batch
-    stream (zero-copy slices) and stops decoding at the range end —
-    how fat-row-group files are split below row-group granularity."""
+    """Executor-side pyarrow reader for one split bundle, a list of
+    ``(path, row_groups)`` entries (row_groups None = the whole file):
+    yields RecordBatches already renamed to the output columns, with
+    projected expressions (casts / length / partition constants)
+    applied and the residual predicate evaluated as an Arrow mask.
+    Batches are sized per file from row-group byte stats
+    (~_BATCH_TARGET_BYTES decoded per batch)."""
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
     pred_part = pred_part or {}
-    for entry in bundle:
-        path, rgs, rrange = entry if len(entry) == 3 else (*entry, None)
+    for path, rgs in bundle:
         pvals = {
             out: _hive_partition_value(path, src, op[1])
             for out, (src, op) in ops.items()
             if op is not None and op[0] == "partition"
         }
-        pred_env_const = {
-            c: pa.scalar(_hive_partition_value(path, c, ddl), type=_pa_type(ddl))
-            for c, ddl in pred_part.items()
-        }
+        pred_env_const = _partition_env(path, pred_part)
         pf = pq.ParquetFile(path)
         missing = [s for s in sources if s not in pf.schema_arrow.names]
         if missing:
@@ -1128,11 +1039,7 @@ def iter_bundle_batches(
                 "tdigest_spark.spark.arrow_agg.NATIVE_SCAN=False to use "
                 "the Catalyst scan, which null-fills missing columns"
             )
-        bs = batch_size if batch_size is not None else _rows_for_target(pf.metadata)
-        if rrange is not None:
-            # batches must not dwarf the row range, or every range task
-            # decodes the whole fat batch it slices one corner of
-            bs = min(bs, max(_BATCH_MIN_ROWS, rrange[1] - rrange[0]))
+        bs = _rows_for_target(pf.metadata)
         if rgs is None:
             batches = pf.iter_batches(columns=list(sources), batch_size=bs)
         else:
@@ -1141,20 +1048,7 @@ def iter_bundle_batches(
                 batch_size=bs,
                 row_groups=list(rgs),
             )
-        pos = 0
         for batch in batches:
-            if rrange is not None:
-                lo, hi = rrange
-                bstart, bend = pos, pos + batch.num_rows
-                pos = bend
-                if bend <= lo:
-                    continue
-                if bstart >= hi:
-                    break  # past the range: stop decoding this entry
-                s = max(lo - bstart, 0)
-                e = min(hi, bend) - bstart
-                if s > 0 or e < batch.num_rows:
-                    batch = batch.slice(s, e - s)
             if batch.num_rows == 0:
                 continue
             if predicate is not None:
@@ -1210,9 +1104,16 @@ def _hive_partition_value(path: str, col: str, ddl: str):
     raise ValueError(f"partition column {col!r} not found in path {path!r}")
 
 
-def _pa_type(ddl: str):
-    import pyarrow as pa
+def _partition_env(path: str, ddls: dict[str, str]) -> dict:
+    """A file's hive partition values as typed Arrow scalars — the
+    predicate env of both partition pruning and the batch masks."""
+    return {
+        c: pa.scalar(_hive_partition_value(path, c, ddl), type=_pa_type(ddl))
+        for c, ddl in ddls.items()
+    }
 
+
+def _pa_type(ddl: str):
     mapping = {
         "double": pa.float64(),
         "float": pa.float32(),
@@ -1225,11 +1126,6 @@ def _pa_type(ddl: str):
     }
     if ddl in mapping:
         return mapping[ddl]
-    if ddl.startswith("decimal"):
-        import re
-
-        m = re.match(r"decimal\((\d+),(\d+)\)", ddl)
-        return pa.decimal128(int(m.group(1)), int(m.group(2)))
     raise ValueError(f"unsupported cast target {ddl!r}")
 
 

@@ -1,6 +1,6 @@
 """Companion sketch aggregates: HLL, count-min, KLL, Bloom.
 
-Same two-phase skeleton as the t-digest aggregates (agg.py).  Row
+Same two-phase skeleton as the t-digest aggregates (arrow_agg.py).  Row
 hashing happens JVM-side with ``F.xxhash64`` inside whole-stage
 codegen — Python only folds pre-hashed int64 columns into NumPy
 register arrays, so there is no per-row Python anywhere.

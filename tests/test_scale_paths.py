@@ -4,6 +4,7 @@ materialization in pipeline operators, streaming window eviction, and
 lineage invariants under dirty data."""
 
 import datetime
+import os
 import time
 
 import numpy as np
@@ -112,11 +113,12 @@ def test_native_scan_partitioned_table(spark, tmp_path_factory):
     assert max(abs(x["r"] - 0.5) for x in ranks) < 0.03
 
 
-def test_native_scan_row_range_subsplits(spark, tmp_path_factory):
-    """A single fat-row-group file must sub-split into row ranges when
-    the plan would otherwise be under-parallel, and the ranges must
-    cover every row exactly once (exact count + sum parity with a
-    whole-file read); counts through the aggregate stay exact."""
+def test_native_scan_fat_row_group_is_one_entry(spark, tmp_path_factory):
+    """A single fat-row-group file plans as exactly one
+    ``(path, row_groups)`` entry, however under-parallel that leaves
+    the plan, and reading it covers every row exactly once (exact count
+    + sum parity with a whole-file read); counts through the aggregate
+    stay exact."""
     import pyarrow.parquet as pq
 
     from tdigest_spark.spark import arrow_agg
@@ -132,9 +134,10 @@ def test_native_scan_row_range_subsplits(spark, tmp_path_factory):
     native = arrow_agg._native_parquet_splits(df, ["k", "v"])
     assert native is not None
     splits = native[0]
-    entries = [e for b in splits for e in b]
-    ranged = [e for e in entries if e[2] is not None]
-    assert ranged, "fat row group should sub-split into row ranges"
+    files = [f for f in os.listdir(d) if f.endswith(".parquet")]
+    assert len(files) == 1
+    assert pq.ParquetFile(f"{d}/{files[0]}").metadata.num_row_groups == 1
+    assert splits == [[(f"{d}/{files[0]}", (0,))]]
     # coverage: exact row count and value sum vs a whole-file read
     ops, sources = arrow_agg.native_scan_ops(native[1], ["k", "v"], native[4])
     got_n, got_sum = 0, 0.0
@@ -144,9 +147,8 @@ def test_native_scan_row_range_subsplits(spark, tmp_path_factory):
         ):
             got_n += batch.num_rows
             got_sum += float(np.sum(batch.column(1).to_numpy()))
-    files = [f for f in __import__("os").listdir(d) if f.endswith(".parquet")]
     t = pq.read_table(f"{d}/{files[0]}", columns=["v"])
-    assert got_n == t.num_rows
+    assert got_n == t.num_rows == n
     assert abs(got_sum - float(np.sum(t.column(0).to_numpy()))) < 1e-6
     counts = tdigest_count_agg(df, "v", 100, keys=["k"])
     got = {r["k"]: r["count"] for r in counts.collect()}
@@ -271,36 +273,56 @@ def test_native_scan_rowgroup_stats_pruning(spark, tmp_path_factory):
 
 def test_native_scan_nan_ordering_matches_spark(spark, tmp_path_factory):
     """Spark orders NaN above every value (NaN > lit is TRUE); the
-    native mask must agree for float gt/ge, and NaN literals fall back
-    to Catalyst."""
+    native mask must agree for float gt/ge, file pruning on a double
+    partition column must agree too, and NaN literals fall back to
+    Catalyst."""
     import pyarrow as pa
     import pyarrow.parquet as pq
+    from pyspark.sql.types import DoubleType
 
     from tdigest_spark.spark import arrow_agg
     from tdigest_spark.spark.tdigest_agg import tdigest_count_agg
 
+    xs = [1.0, 20.0, float("nan"), float("nan"), 5.0]
     f = str(tmp_path_factory.mktemp("nan") / "t.parquet")
     pq.write_table(
         pa.table(
             {
                 "k": ["a"] * 5,
-                "x": pa.array([1.0, 20.0, float("nan"), float("nan"), 5.0]),
+                "x": pa.array(xs),
                 "v": pa.array([1.0] * 5),  # digest input (NaN-free)
             }
         ),
         f,
     )
-    for pred, want_n in [
+    # the same values as hive partition dirs (x=NaN included), plus one
+    # NULL partition: one single-row file per value
+    root = str(tmp_path_factory.mktemp("nanpart"))
+    for i, x in enumerate([*xs, None]):
+        name = "__HIVE_DEFAULT_PARTITION__" if x is None else "NaN" if x != x else x
+        path = f"{root}/x={name}"
+        os.makedirs(path, exist_ok=True)
+        pq.write_table(pa.table({"k": ["a"], "v": [1.0]}), f"{path}/part-{i}.parquet")
+    assert spark.read.parquet(root).schema["x"].dataType == DoubleType()
+    comparisons = [
         (F.col("x") > 10.0, 3),   # 20 + two NaNs
         (F.col("x") >= 5.0, 4),
         (F.col("x") < 10.0, 2),
         (F.col("x") <= 1.0, 1),
-    ]:
-        df = spark.read.parquet(f).filter(pred).select("k", "v")
-        assert arrow_agg._native_parquet_splits(df, ["k", "v"]) is not None
-        got = tdigest_count_agg(df, "v", 100, keys=["k"]).collect()
-        n = got[0]["count"] if got else 0
-        assert n == df.count() == want_n, (str(pred), n, want_n)
+    ]
+    partition_only = [
+        (F.col("x").isNull(), 1),
+        (~(F.col("x") > 10.0), 2),  # NOT(NaN > 10) is FALSE, NULL drops
+        (F.col("x").isin(1.0, 5.0), 2),
+        ((F.col("x") > 10.0) | F.col("x").isNull(), 4),
+    ]
+    for table, preds in [(f, comparisons), (root, comparisons + partition_only)]:
+        for pred, want_n in preds:
+            df = spark.read.parquet(table).filter(pred).select("k", "v")
+            assert arrow_agg._native_parquet_splits(df, ["k", "v"]) is not None
+            got = tdigest_count_agg(df, "v", 100, keys=["k"]).collect()
+            n = got[0]["count"] if got else 0
+            assert n == df.count() == want_n, (table, str(pred), n, want_n)
     # NaN literal → Catalyst path
     nan_pred = spark.read.parquet(f).filter(
         F.col("x") == float("nan")
