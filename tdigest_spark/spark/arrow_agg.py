@@ -18,6 +18,9 @@ so the per-row path is entirely C/NumPy, for keys as well as values.
 The merge/finalize stage repartitions by key, concatenates a task's
 partial sketches into one batch and reuses the same grouping and batch
 protocol (one output row per group, no per-group pandas overhead).
+When the native scan plans at most one split, every group has exactly
+one partial: that one task finalizes its own partials in place, with
+no exchange and no merge stage.
 """
 
 from __future__ import annotations
@@ -30,7 +33,7 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import BinaryType, StructField, StructType
+from pyspark.sql.types import BinaryType, IntegerType, StructField, StructType
 
 GROUP_SENTINEL = "__sketch_group__"
 SKETCH_COL = "__sketch__"
@@ -867,26 +870,46 @@ def native_scan_ops(col_map, needed, pred_data=()):
     return ops, sources
 
 
-def _native_partials(
-    spark,
-    splits,
+def _bundle_folder(
     col_map: dict[str, tuple[str, tuple | None]],
     keys: Sequence[str],
     inputs: Sequence[str],
-    grouped: bool,
     new_state,
     fold,
-    serialize,
-    partial_schema: StructType,
     predicate=None,
     pred_part: dict[str, str] | None = None,
     pred_data: Sequence[str] = (),
+):
+    """Executor-side scan + fold of native split bundles: the returned
+    function reads each bundle with :func:`iter_bundle_batches` (the
+    residual ``predicate`` evaluated as an Arrow mask per batch, its
+    data columns read alongside the projected sources) and folds every
+    batch into one per-group state dict (``keys`` empty = ungrouped)."""
+    keys = list(keys)
+    inputs = list(inputs)
+    needed = list(dict.fromkeys([*keys, *inputs]))
+    ops, sources = native_scan_ops(col_map, needed, pred_data)
+
+    def fold_bundles(bundles) -> dict:
+        states: dict[tuple, Any] = {}
+        for bundle in bundles:
+            fold_group_batches(
+                iter_bundle_batches(
+                    bundle, needed, ops, sources, predicate, pred_part, pred_data
+                ),
+                keys, inputs, new_state, fold, states=states,
+            )
+        return states
+
+    return fold_bundles
+
+
+def _native_partials(
+    spark, splits, fold_bundles, serialize, partial_schema: StructType
 ) -> DataFrame:
-    """Partial phase over pyarrow-read splits: one Spark task per
-    file/row-group split, batches never touch the JVM row pipeline.
-    ``predicate`` (post-partition-pruning residual) is evaluated as an
-    Arrow compute mask per batch; its data columns are read alongside
-    the projected sources.
+    """Partial phase over pyarrow-read splits when the scan plans more
+    than one (a single split runs as :func:`_native_single`): one Spark
+    task per split, batches never touch the JVM row pipeline.
 
     The split list rides a broadcast and each task is seeded by a
     one-row ``spark.range(n, numPartitions=n)`` leaf (partition i holds
@@ -894,38 +917,63 @@ def _native_partials(
     ``range → MapInArrow → Exchange`` plan: no Python-RDD pickle
     serializer and no ``createDataFrame``-from-RDD conversion pass
     (measured ~0.1 s of per-query driver/plan overhead)."""
-    keys = list(keys)
-    inputs = list(inputs)
-    pred_part = pred_part or {}
-    pred_data = list(pred_data)
-    needed = list(dict.fromkeys([*keys, *inputs]))
-    ops, sources = native_scan_ops(col_map, needed, pred_data)
-    if not splits:
-        return spark.createDataFrame([], partial_schema)
-
     bc_splits = spark.sparkContext.broadcast(splits)
     key_names = [f.name for f in partial_schema.fields[:-1]]
 
     def scan_split(batches):
         from pyspark.sql.pandas.types import to_arrow_schema
 
-        states: dict[tuple, Any] = {}
-        for b in batches:
-            for idx in b.column(0).to_pylist():
-                fold_group_batches(
-                    iter_bundle_batches(
-                        bc_splits.value[idx], needed, ops, sources,
-                        predicate, pred_part, pred_data,
-                    ),
-                    keys if grouped else [],
-                    inputs, new_state, fold, states=states,
-                )
+        idx = [i for b in batches for i in b.column(0).to_pylist()]
+        states = fold_bundles([bc_splits.value[i] for i in idx])
         yield _partials_batch(
             states, key_names, serialize, to_arrow_schema(partial_schema)
         )
 
     n = len(splits)
     return spark.range(0, n, 1, n).mapInArrow(scan_split, partial_schema)
+
+
+def _single_task(splits) -> bool:
+    """At most one split: every group folds into exactly one partial,
+    so the whole aggregate runs as one task (:func:`_native_single`)."""
+    return len(splits) <= 1
+
+
+def _native_single(
+    spark, splits, fold_bundles, keys: Sequence[str], serialize, finalize,
+    result_schema: StructType, result_fields: Sequence[StructField],
+) -> DataFrame:
+    """The whole aggregate as ONE task for a scan of at most one split:
+    scan and fold the bundle, serialize each group's partial, finalize
+    every row in place.  With one partial per group there is nothing to
+    merge, so no Exchange, no merge stage and no AQE job; the bundle
+    list (empty when pruning left no file) rides the closure.  An
+    ungrouped aggregate emits its one row itself, with a NULL sketch
+    when nothing survives the scan (SQL: one NULL row over zero rows).
+    """
+    keys = list(keys)
+    partial_schema = StructType(
+        result_schema.fields[: len(keys)]
+        + [StructField(SKETCH_COL, BinaryType(), True)]
+    )
+    finalize = _batch(finalize, _finalize_each)
+
+    def scan_one(batches):
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        for _ in batches:  # the one-row range seed carries no data
+            pass
+        states = fold_bundles(splits)
+        partial_pa = to_arrow_schema(partial_schema)
+        if keys or states:
+            partial = _partials_batch(states, keys, serialize, partial_pa)
+        else:
+            partial = record_batch_exact({SKETCH_COL: [None]}, partial_pa)
+        yield _finalize_row_batch(
+            partial, keys, finalize, result_fields, to_arrow_schema(result_schema)
+        )
+
+    return spark.range(0, 1, 1, 1).mapInArrow(scan_one, result_schema)
 
 
 def _rg_maybe_matches(rg_meta, conjunct, col_idx: dict) -> bool:
@@ -1089,7 +1137,9 @@ def _hive_partition_value(path: str, col: str, ddl: str):
     from urllib.parse import unquote
 
     prefix = col + "="
-    for seg in path.split("/"):
+    # deepest directory first: Spark discovers partitions below the
+    # table root, so an ancestor named like a partition must not match
+    for seg in reversed(path.split("/")[:-1]):
         if seg.startswith(prefix):
             raw = unquote(seg[len(prefix):])
             if raw == "__HIVE_DEFAULT_PARTITION__":
@@ -1155,7 +1205,9 @@ def sketch_groupby_arrow(
     salt: int | None = None,
     merge_bytes: Callable[[list[bytes]], bytes | None] | None = None,
 ) -> DataFrame:
-    """partial(mapInArrow) → [salted merge] → merge+finalize.
+    """partial(mapInArrow) → [salted merge] → merge+finalize; or, when
+    the native scan plans at most one split, scan+fold+finalize in one
+    task (no Exchange, no merge stage; salt is a no-op there).
 
     ``fold(state, **{col: pa.Array})`` folds one group-slice of one
     batch into the state; slices arrive as pyarrow Arrays.
@@ -1163,40 +1215,59 @@ def sketch_groupby_arrow(
     keys = list(keys)
     inputs = list(inputs)
     grouped = bool(keys)
+    if salt and salt > 1 and merge_bytes is None:
+        raise ValueError("salt requires merge_bytes")
     native = (
         _native_parquet_splits(df, list(dict.fromkeys([*keys, *inputs])))
         if NATIVE_SCAN
         else None
     )
-    if not grouped:
-        df = df.withColumn(GROUP_SENTINEL, F.lit(0))
-        keys = [GROUP_SENTINEL]
-    df = df.select(*dict.fromkeys([*keys, *inputs]))
-
-    partial_schema = StructType(
-        _key_schema(df, keys) + [StructField(SKETCH_COL, BinaryType(), True)]
+    # an ungrouped aggregate groups its partials on a constant sentinel
+    # column (F.lit(0): a non-nullable int).  Only the Catalyst path
+    # projects the input; the native scan never runs those DataFrames
+    group_keys = keys if grouped else [GROUP_SENTINEL]
+    if native is None:
+        if not grouped:
+            df = df.withColumn(GROUP_SENTINEL, F.lit(0))
+        df = df.select(*dict.fromkeys([*group_keys, *inputs]))
+    key_fields = _key_schema(df, keys)
+    group_fields = (
+        key_fields if grouped else [StructField(GROUP_SENTINEL, IntegerType(), False)]
     )
-
-    def run_partial(batches):
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        # ungrouped: _group_rows skips the encode/sort entirely (keys
-        # is the constant sentinel column)
-        states = fold_group_batches(
-            batches, keys if grouped else [], inputs, new_state, fold
-        )
-        yield _partials_batch(states, keys, serialize, to_arrow_schema(partial_schema))
+    partial_schema = StructType(
+        group_fields + [StructField(SKETCH_COL, BinaryType(), True)]
+    )
+    result_schema = StructType(key_fields + list(result_fields))
 
     if native is not None:
         splits, col_map, predicate, pred_part, pred_data = native
-        n_input_parts = max(1, len(splits))
-        partials = _native_partials(
-            df.sparkSession, splits, col_map,
-            keys if grouped else [], inputs, grouped,
-            new_state, fold, serialize, partial_schema,
+        fold_bundles = _bundle_folder(
+            col_map, keys, inputs, new_state, fold,
             predicate=predicate, pred_part=pred_part, pred_data=pred_data,
         )
+        if _single_task(splits):
+            result = _native_single(
+                df.sparkSession, splits, fold_bundles, keys, serialize,
+                finalize, result_schema, result_fields,
+            )
+            result._sketch_single_row_groups = tuple(keys)
+            return result
+        n_input_parts = len(splits)
+        partials = _native_partials(
+            df.sparkSession, splits, fold_bundles, serialize, partial_schema
+        )
     else:
+
+        def run_partial(batches):
+            from pyspark.sql.pandas.types import to_arrow_schema
+
+            # ungrouped: _group_rows skips the encode/sort entirely (keys
+            # is the constant sentinel column)
+            states = fold_group_batches(batches, keys, inputs, new_state, fold)
+            yield _partials_batch(
+                states, group_keys, serialize, to_arrow_schema(partial_schema)
+            )
+
         # the count only matters for the ungrouped fan-in
         n_input_parts = 1 if grouped else _num_partitions(df)
         partials = df.mapInArrow(run_partial, partial_schema)
@@ -1221,22 +1292,18 @@ def sketch_groupby_arrow(
         )
         partials = partials.unionByName(seed)
 
-    result_schema = StructType(_key_schema(df, keys) + list(result_fields))
-
     if salt and salt > 1:
         # intermediate merge round keyed by (keys, partition_id % salt):
         # caps reducer fan-in for hot groups before the final merge
-        if merge_bytes is None:
-            raise ValueError("salt requires merge_bytes")
         salted = partials.withColumn(
             "__salt__", F.pmod(F.spark_partition_id(), F.lit(salt))
         )
         partials = _merge_pass(
             salted,
-            [*keys, "__salt__"],
+            [*group_keys, "__salt__"],
             partial_schema,
             _merge_bytes_process(merge_bytes),
-            emit_keys=keys,
+            emit_keys=group_keys,
         )
 
     if not grouped and merge_bytes is not None:
@@ -1253,24 +1320,47 @@ def sketch_groupby_arrow(
             )
             partials = _merge_pass(
                 bucketed,
-                [*keys, "__fanin__"],
+                [*group_keys, "__fanin__"],
                 partial_schema,
                 _merge_bytes_process(merge_bytes),
-                emit_keys=keys,
+                emit_keys=group_keys,
             )
 
     result = _merge_pass(
-        partials, keys, result_schema, finalize, emit_keys=keys,
+        partials, group_keys, result_schema, finalize, emit_keys=keys,
         result_fields=result_fields,
     )
-    if not grouped:
-        result = result.drop(GROUP_SENTINEL)
     # the merge pass emits exactly one row per group of these keys —
     # chained digest re-aggregation (rollup, union-then-quantile) keys
     # off this marker to skip its redundant partial phase, or the whole
     # shuffle when it re-groups by the same keys (tdigest_agg._run_digests)
-    result._sketch_single_row_groups = tuple(keys) if grouped else ()
+    result._sketch_single_row_groups = tuple(keys)
     return result
+
+
+def _finalize_row_batch(
+    batch: pa.RecordBatch,
+    keys: Sequence[str],
+    finalize,
+    result_fields: Sequence[StructField],
+    schema_pa: "pa.Schema",
+) -> pa.RecordBatch:
+    """Finalize a batch in which every row holds its group's ONE sketch:
+    the ``keys`` columns pass through, each row's sketch becomes its
+    result columns (``finalize`` is a batch finalizer)."""
+    cols: dict[str, Any] = {
+        k: batch.column(batch.schema.get_field_index(k)) for k in keys
+    }
+    if batch.num_rows:
+        # every row is its own group
+        tails = finalize(
+            batch.column(batch.schema.get_field_index(SKETCH_COL)),
+            None, np.arange(batch.num_rows + 1),
+        )
+    else:
+        tails = [[] for _ in result_fields]
+    cols.update((f.name, col) for f, col in zip(result_fields, tails))
+    return record_batch_exact(cols, schema_pa)
 
 
 def finalize_rows(
@@ -1294,19 +1384,7 @@ def finalize_rows(
 
         schema_pa = to_arrow_schema(out_schema)
         for batch in batches:
-            cols: dict[str, Any] = {
-                k: batch.column(batch.schema.get_field_index(k)) for k in keys
-            }
-            if batch.num_rows:
-                # every row is its own group
-                tails = finalize(
-                    batch.column(batch.schema.get_field_index(SKETCH_COL)),
-                    None, np.arange(batch.num_rows + 1),
-                )
-            else:
-                tails = [[] for _ in tail_fields]
-            cols.update((f.name, col) for f, col in zip(tail_fields, tails))
-            yield record_batch_exact(cols, schema_pa)
+            yield _finalize_row_batch(batch, keys, finalize, tail_fields, schema_pa)
 
     return df.mapInArrow(run_rows, out_schema)
 

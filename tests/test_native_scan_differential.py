@@ -281,3 +281,22 @@ def test_multikey_grouped_counts_match_catalyst(spark, tmp_path_factory):
     }
     assert got == want
     assert any(k[0] is None for k in got)  # null keys exercised
+
+
+def test_partition_value_ignores_partition_like_ancestor(spark, tmp_path_factory):
+    """A table stored under an ancestor directory named like a partition
+    (``.../x=9/tbl/x=1/p.parquet``) takes its partition values from the
+    deepest ``x=`` directory, as Spark's partition discovery does."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    tbl = tmp_path_factory.mktemp("anc") / "x=9" / "tbl"
+    for x, n in ((1, 10), (2, 20)):
+        d = tbl / f"x={x}"
+        d.mkdir(parents=True)
+        pq.write_table(pa.table({"v": np.arange(float(n))}), str(d / "p.parquet"))
+    df = spark.read.parquet(str(tbl))
+    assert arrow_agg._native_parquet_splits(df, ["x", "v"]) is not None
+    got = sorted(tuple(r) for r in tdigest_count_agg(df, "v", 100, keys=["x"]).collect())
+    want = sorted(tuple(r) for r in df.groupBy("x").count().collect())
+    assert got == want == [(1, 10), (2, 20)]
