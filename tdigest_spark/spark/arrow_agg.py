@@ -19,8 +19,9 @@ The merge/finalize stage repartitions by key, concatenates a task's
 partial sketches into one batch and reuses the same grouping and batch
 protocol (one output row per group, no per-group pandas overhead).
 When the native scan plans at most one split, every group has exactly
-one partial: that one task finalizes its own partials in place, with
-no exchange and no merge stage.
+one partial: unless its key columns allow more groups than one task
+should finalize, that one task finalizes its own partials in place,
+with no exchange and no merge stage.
 """
 
 from __future__ import annotations
@@ -37,6 +38,10 @@ from pyspark.sql.types import BinaryType, IntegerType, StructField, StructType
 
 GROUP_SENTINEL = "__sketch_group__"
 SKETCH_COL = "__sketch__"
+# an ungrouped aggregate's partials group on this constant column; the
+# Catalyst path projects it as a literal cast to this field's type
+_SENTINEL_FIELD = StructField(GROUP_SENTINEL, IntegerType(), False)
+_SKETCH_FIELD = StructField(SKETCH_COL, BinaryType(), True)
 
 # a global (no-key) aggregate funnels one partial per input partition
 # into a single merge task; beyond this many partials, bounded fan-in
@@ -66,6 +71,15 @@ MAX_FOOTER_READS = 4096
 # FileIndex caches on the same assumption).
 _PIECE_CACHE: dict = {}
 _PIECE_CACHE_MAX = 64
+
+# the one-task route finalizes every group in that one task, where the
+# merged route spreads the finalize over the merge partitions.  Past
+# about this many groups the lost parallelism costs more than the
+# skipped exchange and merge stage save (BENCH.md, 4 cores: one task
+# wins at 4096 groups, breaks even near 8192, runs 2x slower at 65536)
+_SINGLE_TASK_MAX_GROUPS = 4096
+# memoized distinct-value counts per (file signature, row groups, column)
+_DISTINCT_CACHE: dict = {}
 
 
 def record_batch_exact(cols: dict, schema_pa: "pa.Schema") -> "pa.RecordBatch":
@@ -137,6 +151,11 @@ _RADIX_MAX = 1 << 62
 _BINCOUNT_MAX = 4096
 _SCAN_MAX_GROUPS = 128
 
+# the one NaN every decoded float key uses: NaN != NaN and its hash is
+# per object, so a fresh NaN per batch would split one group into one
+# state per batch wherever states are keyed by decoded tuples
+_NAN = float("nan")
+
 
 def _decode_key(code: int, radix, dicts) -> tuple:
     key = []
@@ -186,12 +205,24 @@ def _group_rows(batch: pa.RecordBatch, keys: Sequence[str]):
                 )
                 dicts.append(list(range(mn, mx + 1)))
                 continue
+        floating = pa.types.is_floating(col.type)
+        if floating:
+            import pyarrow.compute as pc
+
+            # Spark groups -0.0 with 0.0; x + 0.0 turns -0.0 into 0.0
+            # and leaves every other value (NaN, null) as it is
+            col = pc.add(col, pa.scalar(0.0, col.type))
         dcol = col.dictionary_encode()
         # nulls in keys → code -1 → shift to a dedicated slot; the
         # fill_null + zero-copy route avoids pyarrow's pandas fallback
         # (a ~0.18 s pandas import on every fresh python worker)
         code_arrays.append(arrow_ints(dcol.indices, fill=-1) + 1)
-        dicts.append(dcol.dictionary.to_pylist())
+        values = dcol.dictionary.to_pylist()
+        if floating:
+            # the encode keeps one NaN per batch; make it the same object
+            # in every batch, as Spark's groupBy treats all NaNs as one
+            values = [_NAN if v != v else v for v in values]
+        dicts.append(values)
     radix = [len(d) + 1 for d in dicts]
     total = 1
     for r in radix:
@@ -908,8 +939,9 @@ def _native_partials(
     spark, splits, fold_bundles, serialize, partial_schema: StructType
 ) -> DataFrame:
     """Partial phase over pyarrow-read splits when the scan plans more
-    than one (a single split runs as :func:`_native_single`): one Spark
-    task per split, batches never touch the JVM row pipeline.
+    than one, or one that may hold too many groups for one task (see
+    :func:`_single_task`): one Spark task per split, batches never
+    touch the JVM row pipeline.
 
     The split list rides a broadcast and each task is seeded by a
     one-row ``spark.range(n, numPartitions=n)`` leaf (partition i holds
@@ -933,14 +965,65 @@ def _native_partials(
     return spark.range(0, n, 1, n).mapInArrow(scan_split, partial_schema)
 
 
-def _single_task(splits) -> bool:
+def _single_task(splits, keys, col_map) -> bool:
     """At most one split: every group folds into exactly one partial,
-    so the whole aggregate runs as one task (:func:`_native_single`)."""
-    return len(splits) <= 1
+    so the whole aggregate runs as one task (:func:`_native_single`) —
+    unless that split may hold more than _SINGLE_TASK_MAX_GROUPS
+    groups, whose finalize runs faster spread over a merge stage."""
+    if len(splits) > 1:
+        return False
+    return (
+        not splits
+        or not keys
+        or _group_bound(splits[0], keys, col_map) <= _SINGLE_TASK_MAX_GROUPS
+    )
+
+
+def _group_bound(bundle, keys: Sequence[str], col_map) -> int:
+    """An upper bound on the groups one split bundle folds into: the
+    product over ``keys`` of each key's distinct values (NULL counted)
+    in the bundle.  A cast or length of a column has at most as many
+    values as the column; a partition key has one per file.  Stops
+    reading once the bound passes _SINGLE_TASK_MAX_GROUPS."""
+    bound = 1
+    for k in keys:
+        src, op = col_map[k]
+        if op is not None and op[0] == "partition":
+            bound *= len({_hive_partition_value(p, src, op[1]) for p, _ in bundle})
+        else:
+            bound *= sum(_distinct_values(p, rgs, src) for p, rgs in bundle)
+        if bound > _SINGLE_TASK_MAX_GROUPS:
+            break
+    return bound
+
+
+def _distinct_values(path: str, row_groups, col: str) -> int:
+    """Distinct values (NULL counted) of one column over a file's row
+    groups, read on the driver once per file version.  A string column
+    is read as its parquet dictionary: the entries bound its distinct
+    values without hashing a row."""
+    st = os.stat(path)
+    memo = (path, st.st_size, st.st_mtime_ns, row_groups, col)
+    n = _DISTINCT_CACHE.get(memo)
+    if n is None:
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        pf = pq.ParquetFile(path, read_dictionary=[col])
+        rgs = range(pf.num_row_groups) if row_groups is None else row_groups
+        data = pf.read_row_groups(list(rgs), columns=[col]).column(0)
+        if pa.types.is_dictionary(data.type):
+            n = sum(len(c.dictionary) for c in data.chunks) + (data.null_count > 0)
+        else:
+            n = pc.count_distinct(data, mode="all").as_py()
+        if len(_DISTINCT_CACHE) >= _PIECE_CACHE_MAX:
+            _DISTINCT_CACHE.pop(next(iter(_DISTINCT_CACHE)))
+        _DISTINCT_CACHE[memo] = n
+    return n
 
 
 def _native_single(
-    spark, splits, fold_bundles, keys: Sequence[str], serialize, finalize,
+    spark, splits, fold_bundles, serialize, finalize, partial_schema: StructType,
     result_schema: StructType, result_fields: Sequence[StructField],
 ) -> DataFrame:
     """The whole aggregate as ONE task for a scan of at most one split:
@@ -950,12 +1033,9 @@ def _native_single(
     list (empty when pruning left no file) rides the closure.  An
     ungrouped aggregate emits its one row itself, with a NULL sketch
     when nothing survives the scan (SQL: one NULL row over zero rows).
+    ``partial_schema`` is the key columns + the sketch column.
     """
-    keys = list(keys)
-    partial_schema = StructType(
-        result_schema.fields[: len(keys)]
-        + [StructField(SKETCH_COL, BinaryType(), True)]
-    )
+    keys = [f.name for f in partial_schema.fields[:-1]]
     finalize = _batch(finalize, _finalize_each)
 
     def scan_one(batches):
@@ -1206,8 +1286,10 @@ def sketch_groupby_arrow(
     merge_bytes: Callable[[list[bytes]], bytes | None] | None = None,
 ) -> DataFrame:
     """partial(mapInArrow) → [salted merge] → merge+finalize; or, when
-    the native scan plans at most one split, scan+fold+finalize in one
-    task (no Exchange, no merge stage; salt is a no-op there).
+    the native scan plans at most one split of at most
+    _SINGLE_TASK_MAX_GROUPS groups (:func:`_single_task`),
+    scan+fold+finalize in one task (no Exchange, no merge stage; salt
+    is a no-op there).
 
     ``fold(state, **{col: pa.Array})`` folds one group-slice of one
     batch into the state; slices arrive as pyarrow Arrays.
@@ -1223,20 +1305,18 @@ def sketch_groupby_arrow(
         else None
     )
     # an ungrouped aggregate groups its partials on a constant sentinel
-    # column (F.lit(0): a non-nullable int).  Only the Catalyst path
-    # projects the input; the native scan never runs those DataFrames
+    # column.  Only the Catalyst path projects the input; the native
+    # scan never runs those DataFrames
     group_keys = keys if grouped else [GROUP_SENTINEL]
     if native is None:
         if not grouped:
-            df = df.withColumn(GROUP_SENTINEL, F.lit(0))
+            df = df.withColumn(
+                GROUP_SENTINEL, F.lit(0).cast(_SENTINEL_FIELD.dataType)
+            )
         df = df.select(*dict.fromkeys([*group_keys, *inputs]))
     key_fields = _key_schema(df, keys)
-    group_fields = (
-        key_fields if grouped else [StructField(GROUP_SENTINEL, IntegerType(), False)]
-    )
-    partial_schema = StructType(
-        group_fields + [StructField(SKETCH_COL, BinaryType(), True)]
-    )
+    group_fields = key_fields if grouped else [_SENTINEL_FIELD]
+    partial_schema = StructType(group_fields + [_SKETCH_FIELD])
     result_schema = StructType(key_fields + list(result_fields))
 
     if native is not None:
@@ -1245,10 +1325,11 @@ def sketch_groupby_arrow(
             col_map, keys, inputs, new_state, fold,
             predicate=predicate, pred_part=pred_part, pred_data=pred_data,
         )
-        if _single_task(splits):
+        if _single_task(splits, keys, col_map):
             result = _native_single(
-                df.sparkSession, splits, fold_bundles, keys, serialize,
-                finalize, result_schema, result_fields,
+                df.sparkSession, splits, fold_bundles, serialize, finalize,
+                StructType(key_fields + [_SKETCH_FIELD]), result_schema,
+                result_fields,
             )
             result._sketch_single_row_groups = tuple(keys)
             return result

@@ -125,14 +125,19 @@ def _rows(df):
     return sorted((tuple(r) for r in df.collect()), key=repr)
 
 
-def _routes(monkeypatch, build):
-    """(one-task rows, merged rows, split counts the route test saw)."""
+def _routes(monkeypatch, build, rows=_rows):
+    """(one-task rows, merged rows, what the route test answered)."""
     seen = []
     real = arrow_agg._single_task
-    monkeypatch.setattr(arrow_agg, "_single_task", lambda s: seen.append(len(s)) or real(s))
-    one = _rows(build())
-    monkeypatch.setattr(arrow_agg, "_single_task", lambda s: False)
-    merged = _rows(build())
+
+    def spy(*args):
+        seen.append(real(*args))
+        return seen[-1]
+
+    monkeypatch.setattr(arrow_agg, "_single_task", spy)
+    one = rows(build())
+    monkeypatch.setattr(arrow_agg, "_single_task", lambda *args: False)
+    merged = rows(build())
     monkeypatch.setattr(arrow_agg, "_single_task", real)
     return one, merged, seen
 
@@ -142,7 +147,7 @@ def test_one_task_route_equals_merged_route(spark, one_file, stored, monkeypatch
     for name, build, native in _families(one_file, stored, keys):
         one, merged, seen = _routes(monkeypatch, build)
         if native:
-            assert seen == [1], (name, seen)
+            assert seen == [True], (name, seen)
         assert one == merged, name
         assert one, name
 
@@ -264,3 +269,118 @@ def test_one_task_result_keeps_single_row_marker(spark, one_file):
     again = tdigest_percentile_digests(dig, "tdigest", 0.5, keys=["k"])
     _, jobs, plan = _jobs_and_plan(spark, again)
     assert "Exchange" not in plan and jobs == 1, plan
+
+
+def test_float_keys_group_as_spark_across_batches():
+    """Every batch decodes its float keys afresh: all NaNs must land in
+    one group (NaN != NaN, and its hash is per object) and -0.0 in
+    0.0's group, as Spark's groupBy has it, also when the states are
+    keyed across batches."""
+    import math
+
+    import pyarrow as pa
+
+    batches = [
+        pa.record_batch({"x": pa.array(x), "v": pa.array([1.0] * len(x))})
+        for x in ([-0.0, float("nan"), 1.0], [float("nan"), 0.0], [float("nan")])
+    ]
+    states = arrow_agg.fold_group_batches(
+        batches, ["x"], ["v"], list, lambda st, v: st.append(len(v))
+    )
+    assert len(states) == 3
+    by_key = {repr(k[0]): sum(st) for k, st in states.items()}
+    assert by_key == {"nan": 3, "0.0": 2, "1.0": 1}
+    zero = next(k[0] for k in states if k[0] == 0.0)
+    assert math.copysign(1.0, zero) == 1.0
+
+
+def _float_keyed(rows):
+    # repr tells NaN (never == itself) and -0.0 (== 0.0) apart
+    return sorted(tuple(repr(c) if isinstance(c, float) else c for c in r) for r in rows)
+
+
+def test_nan_keys_in_one_split_of_several_batches(spark, tmp_path, monkeypatch):
+    """One row group read as several batches (wide rows → 65536-row
+    batches), with NaN keys in every batch and a -0.0 key first: the
+    one-task route finalizes its states without a merge stage, so the
+    fold itself must keep one state per Spark group."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    n = 70_000
+    x = np.where(np.arange(n) % 7 == 0, np.nan, (np.arange(n) % 3).astype(float))
+    x[1] = -0.0
+    path = str(tmp_path / "wide.parquet")
+    pq.write_table(
+        pa.table(
+            {
+                "x": x,
+                "v": np.arange(n, dtype=float),
+                # an unread column that makes the row group wide: ~520
+                # bytes a row sizes the reader's batches at 65536 rows
+                "pad": pa.array([b"p" * 520] * n, type=pa.binary()),
+            }
+        ),
+        path,
+        row_group_size=n,
+        use_dictionary=["x", "v"],
+        compression="zstd",
+    )
+    df = spark.read.parquet(path)
+    splits, col_map, *_ = arrow_agg._native_parquet_splits(df, ["x", "v"])
+    assert len(splits) == 1
+    ops, sources = arrow_agg.native_scan_ops(col_map, ["x", "v"])
+    batches = list(arrow_agg.iter_bundle_batches(splits[0], ["x", "v"], ops, sources))
+    assert len(batches) >= 2
+    assert all(np.isnan(b.column(0).to_numpy()).any() for b in batches)
+
+    build = lambda: tdigest_count_agg(df, "v", 100, keys=["x"])  # noqa: E731
+    expected = _float_keyed(df.groupBy("x").count().collect())
+    assert expected == [("0.0", 20001), ("1.0", 19999), ("2.0", 20000), ("nan", 10000)]
+    one, merged, seen = _routes(
+        monkeypatch, build, rows=lambda df: _float_keyed(df.collect())
+    )
+    assert seen == [True]
+    assert one == merged == expected
+
+
+def test_many_groups_keep_the_merge_stage(spark, tmp_path, monkeypatch):
+    """One split whose key columns may hold more groups than one task
+    should finalize keeps its Exchange: the merge stage spreads that
+    finalize.  The route test bounds the groups by each key's distinct
+    values in the split (string keys by their parquet dictionaries)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    n = 12_000
+    rng = np.random.RandomState(3)
+    path = str(tmp_path / "many.parquet")
+    pq.write_table(
+        pa.table(
+            {
+                "id": pa.array(np.arange(n) % 5000, type=pa.int64()),
+                "s": pa.array([f"s{i % 4500}" for i in range(n)]),
+                "few": pa.array([None if i % 5 == 0 else f"f{i % 3}" for i in range(n)]),
+                "v": rng.rand(n),
+            }
+        ),
+        path,
+        row_group_size=n,
+    )
+    df = spark.read.parquet(path)
+    splits, col_map, *_ = arrow_agg._native_parquet_splits(df, ["id", "s", "few", "v"])
+    bound = lambda keys: arrow_agg._group_bound(splits[0], keys, col_map)  # noqa: E731
+    assert bound(["few"]) == 4  # three strings and NULL
+    assert bound(["id"]) == 5000
+    assert bound(["s"]) == 4500
+    assert bound(["few", "few"]) == 16
+    for keys, single in ((["few"], True), (["id"], False), (["s"], False)):
+        assert arrow_agg._single_task(splits, keys, col_map) is single
+        _, _, plan = _jobs_and_plan(
+            spark, tdigest_percentile(df, "v", 100, 0.5, keys=keys)
+        )
+        assert ("Exchange" in plan) is not single, plan
+    one, merged, seen = _routes(
+        monkeypatch, lambda: tdigest_percentile(df, "v", 100, 0.5, keys=["id"])
+    )
+    assert seen == [False] and one == merged and len(one) == 5000
