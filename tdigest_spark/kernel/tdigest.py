@@ -37,10 +37,12 @@ cumulative weight, with per-digest compression and scan direction.
 Both then reduce the cuts with the same ``_cut_means`` (one
 ``np.add.reduceat``), so they give byte-identical digests.  The engine
 uses the segmented kernel through ``compact_many`` (a batch of
-``TDigest.compact``), ``merge_blobs_into`` (a batch of
-``merge_digest``) and the batch wire codec ``decode_many`` /
-``encode_many``; ``deserialize`` is the codec's one-blob case, so one
-set of validation rules remains.
+``TDigest.compact``), ``fold_chunks`` / ``merge_into`` (a batch of
+``merge_digest``, in flush rounds over flat arrays) and the batch wire
+codec ``decode_many`` / ``encode_many``; ``deserialize`` is the codec's
+one-blob case, so one set of validation rules remains.  The scalar
+``TDigest`` methods stay the reference the batch forms are tested
+against, byte for byte.
 
 Results are deterministic for a given input partitioning and satisfy
 the same q(1-q)/compression error envelope; they are not (and need not
@@ -653,47 +655,85 @@ def _merge_segments(means, counts, offsets, totals, compression, reverse):
     places the next cut of every still-active segment, with the same
     closed-form bound per segment and one ``searchsorted`` on a global
     cumulative weight.  Compression and scan direction are per segment.
-    Returns the merged (means, counts, offsets)."""
+
+    A segment whose widest legal centroid, floor(q0*(1-q0)/normalizer),
+    is at most 1 everywhere merges nothing: q0*(1-q0) <= 0.25 holds in
+    floating point too, and any two centroids weigh at least 2.  Such a
+    segment (at compression 100, one of at most 35 items) compacts to
+    its sorted input and skips the loop.  Fewer than
+    _SEGMENTED_MIN_DIGESTS working segments take the scalar loop of
+    :func:`_merge_sorted` instead.  Returns the merged (means, counts,
+    offsets)."""
     sizes = np.diff(offsets)
     nseg = sizes.size
     totals = np.asarray(totals, dtype=np.int64)
-    flip = np.asarray(reverse, dtype=bool) & (sizes > 1)
+    compression = np.asarray(compression)
+    reverse = np.asarray(reverse, dtype=bool)
+    work = sizes > 1  # one centroid (or none) merges into itself
+    norm = np.ones(nseg)
+    norm[work] = _normalizer(compression[work], totals[work])
+    work &= 0.25 / norm >= 2.0
+    nwork = int(np.count_nonzero(work))
+    if not nwork:
+        return means, counts, offsets
+    if nwork < _SEGMENTED_MIN_DIGESTS:
+        parts_m, parts_c, prev = [], [], 0
+        out_sizes = sizes.copy()
+        for g in np.flatnonzero(work).tolist():
+            lo, hi = int(offsets[g]), int(offsets[g + 1])
+            m, c = _merge_sorted(
+                means[lo:hi], counts[lo:hi], int(totals[g]), int(compression[g]),
+                bool(reverse[g]),
+            )
+            parts_m += [means[prev:lo], m]
+            parts_c += [counts[prev:lo], c]
+            out_sizes[g] = m.size
+            prev = hi
+        return (
+            np.concatenate(parts_m + [means[prev:]]),
+            np.concatenate(parts_c + [counts[prev:]]),
+            np.concatenate(([0], np.cumsum(out_sizes))),
+        )
+    flip = reverse & work
     if flip.any():
         perm = _reversing(means.size, offsets[:-1][flip], offsets[1:][flip])
         means, counts = means[perm], counts[perm]
     csum = np.cumsum(counts)
-    base = np.concatenate(([0], csum))[offsets[:-1]]
-    ends = offsets[1:]
-    work = sizes > 1  # one centroid (or none) merges into itself
-    ftotal = totals.astype(np.float64)
-    norm = np.ones(nseg)
-    norm[work] = _normalizer(np.asarray(compression)[work], totals[work])
-
-    cut_pos = [np.flatnonzero(~work[np.repeat(np.arange(nseg), sizes)])]
-    i = offsets[:-1].copy()
-    s = np.zeros(nseg, dtype=np.int64)
+    # the state of every working segment, kept compact: dropped as each
+    # segment places its last cut
     act = np.flatnonzero(work)
-    while act.size:
-        ii, ss, nn = i[act], s[act].astype(np.float64), ftotal[act]
-        nz = norm[act]
+    i = offsets[:-1][act]
+    end = offsets[1:][act]
+    base = np.concatenate(([0], csum))[i]
+    s = np.zeros(act.size, dtype=np.int64)
+    nn = totals[act].astype(np.float64)
+    nz = norm[act]
+    nnz = nn * nn * nz
+    cut = np.repeat(~work, sizes)  # every centroid of a resting segment
+    while i.size:
+        cut[i] = True
+        ss = s.astype(np.float64)
         q0 = ss / nn
         r1 = q0 * (1.0 - q0) / nz
-        b = nn - 2.0 * ss - nn * nn * nz
+        b = nn - 2.0 * ss - nnz
         c = ss * nn - ss * ss
         disc = b * b + 4.0 * c
         sq = np.sqrt(np.maximum(disc, 0.0))
         r2 = np.maximum((-b - sq) / -2.0, (-b + sq) / -2.0)
         wmax = np.floor(np.where(disc < 0.0, 0.0, np.minimum(r1, r2)))
-        single = wmax < counts[ii]
+        single = wmax < counts[i]
         # non-finite bounds cannot occur (N >= 2), so the cast is exact
-        goal = base[act] + s[act] + np.where(single, 0, wmax).astype(np.int64)
+        goal = base + s + np.where(single, 0, wmax).astype(np.int64)
         j = np.searchsorted(csum, goal, side="right")
-        j = np.where(single, ii + 1, np.clip(j, ii + 1, ends[act]))
-        s[act] = csum[j - 1] - base[act]
-        i[act] = j
-        cut_pos.append(ii)
-        act = act[j < ends[act]]
-    starts = np.sort(np.concatenate(cut_pos))
+        j = np.where(single, i + 1, np.clip(j, i + 1, end))
+        s = csum[j - 1] - base
+        i = j
+        more = j < end
+        if not more.all():
+            i, end, base, s, nn, nz, nnz = (
+                x[more] for x in (i, end, base, s, nn, nz, nnz)
+            )
+    starts = np.flatnonzero(cut)
     cs0 = np.concatenate(([0], csum))
     w = cs0[np.append(starts[1:], means.size)] - cs0[starts]
     m = _cut_means(means, counts, starts, w)
@@ -706,71 +746,134 @@ def _merge_segments(means, counts, offsets, totals, compression, reverse):
     return m, w, out_off
 
 
+def _segment_order(means, key2, offsets):
+    """An order equal to ``np.lexsort((key2, means, seg))``: every
+    segment sorted by (mean, key2), stable.  One float argsort ranks the
+    means (equal means, -0.0 and 0.0 too, share a rank) and one argsort
+    of a packed int64 (segment, rank, key2) key orders them, a fraction
+    of the three-key lexsort's time; the lexsort remains for keys that
+    would not fit in 63 bits.
+
+    Callers make every tie of the packed key a tie of equal bits (a
+    stored centroid's key2 is unique in its segment where counts do not
+    break its ties), so the order of tied elements is only visible for
+    -0.0 next to 0.0: the packed sort is unstable unless a -0.0 is
+    present."""
+    n = means.size
+    if n < 2:
+        return np.arange(n)
+    nseg = offsets.size - 1
+    seg = np.repeat(np.arange(nseg), np.diff(offsets))
+    o = np.argsort(means)
+    sm = means[o]
+    rank = np.empty(n, dtype=np.int64)
+    rank[o] = np.concatenate(([0], np.cumsum(sm[1:] != sm[:-1])))
+    nrank = int(rank[o[-1]]) + 1
+    nkey2 = int(key2.max()) + 1
+    if nseg * nrank * nkey2 >= 1 << 63:
+        return np.lexsort((key2, means, seg))
+    stable = np.signbit(means[means == 0.0]).any()
+    return np.argsort(
+        (seg * nrank + rank) * nkey2 + key2, kind="stable" if stable else None
+    )
+
+
 def _compact_segments(means, counts, key2, offsets, totals, compression, reverse):
     """Sort every segment by (mean, key2), stable; rebalance its
     equal-mean runs; run the merge pass — ``TDigest.compact`` for many
     digests, on flat arrays."""
-    seg = np.repeat(np.arange(offsets.size - 1), np.diff(offsets))
-    order = np.lexsort((key2, means, seg))
+    order = _segment_order(means, key2, offsets)
     means, counts = means[order], counts[order]
     counts = _rebalance_segments(means, counts, offsets, totals)
     return _merge_segments(means, counts, offsets, totals, compression, reverse)
 
 
+# Crossovers of the flat passes against the per-digest scalar ones
+# (measured on a 4-vCPU box, BENCH.md "Flat many-digest kernel").  The
+# segmented merge loop pays ~60 us per output rank however few segments
+# are active: below ~16-32 working segments the scalar loop wins.  The
+# flat sort loses to the scalar all-singleton sort (one SIMD float
+# sort per digest) on few digests and on large ones: compact_many keeps
+# the scalar compact below 32 digests or above 256 centroids a digest.
 _SEGMENTED_MIN_DIGESTS = 32
 _SEGMENTED_MAX_MEAN = 256  # centroids per digest, stored + pending
 
 
-def compact_many(digests) -> None:
-    """``d.compact()`` for every digest, as one segmented pass.
+def compact_many(digests):
+    """``d.compact()`` for every digest, as one segmented pass; returns
+    the compacted centroids of all ``digests`` as flat ``(means, counts,
+    offsets)`` (digest g at ``offsets[g]:offsets[g+1]``).
 
     Each digest is one segment of its stored centroids followed by its
     pending chunks.  The per-segment sort key reproduces the scalar
     paths: (mean, count) in general; for an all-singleton tail, pending
-    values before stored centroids of equal mean (the insert fast path).
+    values before stored centroids of equal mean, the stored ones in
+    their order (the insert fast path).  The only Python work per digest
+    is gathering its arrays and writing the result back.
 
-    The segmented pass pays off on many small digests only: its loop
-    runs once per output rank across segments and its sort is one
-    three-key lexsort over all of them.  A few digests, or large ones,
-    keep the scalar boundary loop (measured crossover on a 4-vCPU box:
-    about 32 digests of up to a few hundred centroids each)."""
-    ds = [d for d in digests if d is not None and d._pending_n]
-    sizes = [d.means.size + d._pending_n for d in ds]
-    if len(ds) < _SEGMENTED_MIN_DIGESTS or sum(sizes) > _SEGMENTED_MAX_MEAN * len(ds):
+    The flat sort pays off on many small digests only: a few digests, or
+    large ones, keep the scalar ``compact`` (see _SEGMENTED_MIN_DIGESTS),
+    whose all-singleton sort is one SIMD float sort."""
+    ds = [d for d in digests if d._pending_n]
+    if len(ds) < _SEGMENTED_MIN_DIGESTS or (
+        sum(d.means.size + d._pending_n for d in ds) > _SEGMENTED_MAX_MEAN * len(ds)
+    ):
         for d in ds:
             d.compact()
-        return
-    parts_m, parts_c, parts_k = [], [], []
-    for d in ds:
-        singles = all(c is None for c in d._pending_counts)
-        parts_m.append(d.means)
-        parts_c.append(d.counts)
-        parts_k.append(np.ones(d.means.size, dtype=np.int64) if singles else d.counts)
-        for m, c in zip(d._pending_means, d._pending_counts):
-            parts_m.append(m)
-            if c is None:
-                c = np.ones(m.size, dtype=np.int64)
-                parts_k.append(np.zeros(m.size, dtype=np.int64) if singles else c)
-            else:
-                parts_k.append(c)
-            parts_c.append(c)
-    offsets = np.concatenate(([0], np.cumsum(sizes))).astype(np.int64)
-    m, c, off = _compact_segments(
-        np.concatenate(parts_m),
-        np.concatenate(parts_c),
-        np.concatenate(parts_k),
-        offsets,
-        np.array([d.count for d in ds], dtype=np.int64),
-        np.array([d.compression for d in ds], dtype=np.int64),
-        np.array([d.ncompactions % 2 == 0 for d in ds]),  # odd after +1 → reverse
+        ds = []
+    if ds:
+        chunks_m = [a for d in ds for a in (d.means, *d._pending_means)]
+        chunks_c = [a for d in ds for a in (d.counts, *d._pending_counts)]
+        nchunk = np.fromiter((1 + len(d._pending_means) for d in ds), np.int64, len(ds))
+        clen = np.fromiter(map(len, chunks_m), np.int64, len(chunks_m))
+        ones = np.fromiter((c is None for c in chunks_c), bool, len(chunks_c))
+        means = np.concatenate(chunks_m)
+        if ones.any():
+            counts = np.ones(means.size, dtype=np.int64)
+            counts[~np.repeat(ones, clen)] = np.concatenate(
+                [c for c in chunks_c if c is not None]
+            )
+        else:
+            counts = np.concatenate(chunks_c)
+        # stored chunks hold counts: a digest is all-singleton when every
+        # chunk but its first one is
+        first = np.cumsum(nchunk) - nchunk
+        weighted = ~ones
+        weighted[first] = False
+        singles = ~np.logical_or.reduceat(weighted, first)
+        offsets = np.concatenate(([0], np.cumsum(np.add.reduceat(clen, first))))
+        key2 = counts
+        if singles.any():
+            # 1 + its index for a stored centroid, 0 for a pending value
+            stored = np.zeros(len(chunks_m), dtype=bool)
+            stored[first] = True
+            cstart = np.cumsum(clen) - clen
+            index = np.arange(means.size) - np.repeat(cstart, clen)
+            key2 = np.where(
+                np.repeat(singles, np.diff(offsets)),
+                np.where(np.repeat(stored, clen), 1 + index, 0),
+                counts,
+            )
+        m, c, off = _compact_segments(
+            means, counts, key2, offsets,
+            np.fromiter((d.count for d in ds), np.int64, len(ds)),
+            np.fromiter((d.compression for d in ds), np.int64, len(ds)),
+            np.fromiter((d.ncompactions % 2 == 0 for d in ds), bool, len(ds)),  # odd after +1 → reverse
+        )
+        for d, lo, hi in zip(ds, off[:-1].tolist(), off[1:].tolist()):
+            d.means = m[lo:hi]
+            d.counts = c[lo:hi]
+            d._pending_means = []
+            d._pending_counts = []
+            d._pending_n = 0
+            d.ncompactions += 1
+        if len(ds) == len(digests):
+            return m, c, off
+    return (
+        np.concatenate([d.means for d in digests]) if digests else np.empty(0),
+        np.concatenate([d.counts for d in digests]) if digests else np.empty(0, np.int64),
+        np.concatenate(([0], np.cumsum([d.means.size for d in digests]))).astype(np.int64),
     )
-    for g, d in enumerate(ds):
-        d.means = m[off[g]:off[g + 1]]
-        d.counts = c[off[g]:off[g + 1]]
-        d._pending_means = []
-        d._pending_counts = []
-        d._pending_n = 0
-        d.ncompactions += 1
 
 
 def add_values_many(digests, values: np.ndarray, bounds: np.ndarray) -> None:
@@ -793,42 +896,140 @@ def add_values_many(digests, values: np.ndarray, bounds: np.ndarray) -> None:
     compact_many(full)
 
 
-def merge_blobs_into(digests, gids, means, counts, offsets, count) -> None:
-    """``digests[gids[b]].merge_digest(blob b)`` for every decoded blob b
-    in order (see :func:`decode_many`), batched.  Each digest compacts
-    at the same points as the one-by-one fold — when its stored plus
-    pending centroids reach the flush threshold — and the digests that
-    reach such a point together compact in one :func:`compact_many`
-    round."""
-    sizes = np.diff(offsets).tolist()
-    cnt = np.asarray(count).tolist()
-    off = np.asarray(offsets).tolist()
-    order = np.argsort(gids, kind="stable")
-    bounds = np.searchsorted(gids[order], np.arange(len(digests) + 1)).tolist()
-    order = order.tolist()
-    todo = [
-        [d, order[bounds[g]:bounds[g + 1]], 0]
-        for g, d in enumerate(digests)
-        if bounds[g] < bounds[g + 1]
+def _splice(means, counts, offsets, segs, new_m, new_c, new_off):
+    """Flat digests with the segments ``segs`` (ascending) replaced by
+    the flat ``new_*`` digests, in order."""
+    sizes = np.diff(offsets)
+    keep = np.ones(sizes.size, dtype=bool)
+    keep[segs] = False
+    sizes[segs] = np.diff(new_off)
+    out_off = np.concatenate(([0], np.cumsum(sizes)))
+    src = _ranges(offsets[:-1][keep], sizes[keep])
+    dst = _ranges(out_off[:-1][keep], sizes[keep])
+    new = _ranges(out_off[:-1][segs], sizes[segs])
+    out_m = np.empty(int(out_off[-1]), dtype=np.float64)
+    out_c = np.empty(out_m.size, dtype=np.int64)
+    out_m[dst], out_c[dst] = means[src], counts[src]
+    out_m[new], out_c[new] = new_m, new_c
+    return out_m, out_c, out_off
+
+
+def fold_chunks(
+    means, counts, offsets, seg, compression, ncompactions, count,
+    prefix=None, final=True,
+):
+    """Add chunks of centroids to digests in order, as ``add_centroids``
+    one chunk at a time would, with every digest on flat arrays.
+
+    Chunk k (centroids ``offsets[k]:offsets[k+1]``, ``offsets`` starting
+    at 0) goes to digest ``seg[k]``; ``seg`` is non-decreasing.  A
+    digest starts from its ``prefix`` centroids (flat means, counts,
+    offsets: stored then pending, as ``compact`` concatenates them; none
+    when omitted; pending ones only without ``final``).  It compacts right
+    after the chunk that brings its centroids to the flush threshold;
+    the digests that reach such a point in the same round compact in one
+    :func:`_compact_segments`, so a round costs flat passes however many
+    digests take part.  With ``final`` every digest that still holds
+    pending centroids compacts at the end, like ``centroid_arrays``.
+    ``compression``, ``ncompactions`` and ``count`` are per digest.
+
+    Returns ``((means, counts, offsets), compacted, ncompactions, count,
+    pending)``: every digest's prefix, replaced by its last compaction
+    where ``compacted``; and ``pending``, its first chunk added after
+    that compaction (the chunks from there on stay pending)."""
+    nseg = compression.size
+    bounds = np.searchsorted(seg, np.arange(nseg + 1))
+    lo, hi = bounds[:-1], bounds[1:]
+    if prefix is None:
+        prefix = (np.empty(0), np.empty(0, np.int64), np.zeros(nseg + 1, np.int64))
+    pm, pc, poff = prefix
+    csize = np.diff(offsets)
+    ccount = np.concatenate(([0], np.cumsum(counts)))
+    count = count + ccount[offsets[hi]] - ccount[offsets[lo]]
+    limit = np.maximum(10 * compression, _MIN_FLUSH)
+    ncomp = np.array(ncompactions, dtype=np.int64)
+    compacted = np.zeros(nseg, dtype=bool)
+    p = lo.copy()
+    act = np.flatnonzero(p < hi)
+    while act.size:
+        # the first chunk of each active digest that fills it
+        n = hi[act] - p[act]
+        j = _ranges(p[act], n)
+        d = np.repeat(act, n)
+        fill = np.diff(poff)[d] + offsets[j + 1] - offsets[p[d]]
+        full = (csize[j] > 0) & (fill >= limit[d])
+        flushing, first = np.unique(d[full], return_index=True)
+        end = hi.copy()
+        end[flushing] = j[full][first] + 1
+        due = np.zeros(nseg, dtype=bool)
+        due[flushing] = True
+        if final:
+            due[act] |= offsets[hi[act]] > offsets[p[act]]
+        comp = np.flatnonzero(due)
+        if not comp.size:
+            break
+        # each compacting digest's prefix, then its chunks up to the flush
+        n_pre = np.diff(poff)[comp]
+        n_new = offsets[end[comp]] - offsets[p[comp]]
+        soff = np.concatenate(([0], np.cumsum(n_pre + n_new)))
+        dst_pre = _ranges(soff[:-1], n_pre)
+        dst_new = _ranges(soff[:-1] + n_pre, n_new)
+        src_pre = _ranges(poff[:-1][comp], n_pre)
+        src_new = _ranges(offsets[p[comp]], n_new)
+        m = np.empty(int(soff[-1]), dtype=np.float64)
+        c = np.empty(m.size, dtype=np.int64)
+        m[dst_pre], c[dst_pre] = pm[src_pre], pc[src_pre]
+        m[dst_new], c[dst_new] = means[src_new], counts[src_new]
+        cs = np.concatenate(([0], np.cumsum(c)))
+        out = _compact_segments(
+            m, c, c, soff, cs[soff[1:]] - cs[soff[:-1]],
+            compression[comp], ncomp[comp] % 2 == 0,  # odd after +1 → reverse
+        )
+        pm, pc, poff = _splice(pm, pc, poff, comp, *out)
+        ncomp[comp] += 1
+        compacted[comp] = True
+        p[comp] = end[comp]
+        act = flushing[p[flushing] < hi[flushing]]
+    return (pm, pc, poff), compacted, ncomp, count, p
+
+
+def merge_into(digests, seg, means, counts, offsets) -> None:
+    """``digests[seg[k]].merge_digest(chunk k)`` for every chunk k in
+    order (``decode_many``'s flat layout, see :func:`fold_chunks`), as
+    one :func:`fold_chunks`.  Each digest compacts at the same points as
+    the one-by-one fold and keeps what follows its last compaction
+    pending, as one chunk."""
+    if not digests:
+        return
+    chunks_m = [a for d in digests for a in (d.means, *d._pending_means)]
+    chunks_c = [
+        np.ones(m.size, dtype=np.int64) if c is None else c
+        for d in digests
+        for m, c in zip((d.means, *d._pending_means), (d.counts, *d._pending_counts))
     ]
-    while todo:
-        full = []
-        for item in todo:
-            d, blobs, p = item
-            while p < len(blobs):
-                b = blobs[p]
-                p += 1
-                if sizes[b]:
-                    d._pending_means.append(means[off[b]:off[b + 1]])
-                    d._pending_counts.append(counts[off[b]:off[b + 1]])
-                    d._pending_n += sizes[b]
-                    d.count += cnt[b]
-                    if d._full():
-                        full.append(d)
-                        break
-            item[2] = p
-        compact_many(full)
-        todo = [item for item in todo if item[2] < len(item[1])]
+    sizes = np.fromiter((d.means.size + d._pending_n for d in digests), np.int64, len(digests))
+    (pm, pc, poff), compacted, ncomp, count, pending = fold_chunks(
+        means, counts, offsets, seg,
+        np.fromiter((d.compression for d in digests), np.int64, len(digests)),
+        np.fromiter((d.ncompactions for d in digests), np.int64, len(digests)),
+        np.fromiter((d.count for d in digests), np.int64, len(digests)),
+        prefix=(np.concatenate(chunks_m), np.concatenate(chunks_c),
+                np.concatenate(([0], np.cumsum(sizes)))),
+        final=False,
+    )
+    ends = np.searchsorted(seg, np.arange(1, len(digests) + 1))
+    for d, done, a, b, lo, hi, k, n in zip(
+        digests, compacted.tolist(), poff[:-1].tolist(), poff[1:].tolist(),
+        offsets[pending].tolist(), offsets[ends].tolist(), ncomp.tolist(), count.tolist(),
+    ):
+        if done:
+            d.means, d.counts = pm[a:b], pc[a:b]
+            d._pending_means, d._pending_counts, d._pending_n = [], [], 0
+        if hi > lo:
+            d._pending_means.append(means[lo:hi])
+            d._pending_counts.append(counts[lo:hi])
+            d._pending_n += hi - lo
+        d.ncompactions, d.count = k, n
 
 
 def generate_counts(compression: int, count: int) -> np.ndarray:
@@ -1002,17 +1203,19 @@ def serialize(means: np.ndarray, counts: np.ndarray, count: int, compression: in
 
 
 def _wire_pairs(means: np.ndarray, counts: np.ndarray) -> np.ndarray:
-    """Big-endian (mean, count) wire pairs, one 16-byte row each."""
-    pairs = np.empty((means.size, 16), dtype=np.uint8)
-    pairs[:, :8] = means.astype(">f8", copy=False).view(np.uint8).reshape(-1, 8)
-    pairs[:, 8:] = counts.astype(">i8", copy=False).view(np.uint8).reshape(-1, 8)
+    """Big-endian (mean, count) wire pairs, one 16-byte record each."""
+    pairs = np.empty(means.size, dtype=_PAIR_DT)
+    pairs["mean"] = means
+    pairs["count"] = counts
     return pairs
 
 
-# the wire header as a NumPy record, for decoding/encoding many blobs
+# the wire header and centroid as NumPy records, for decoding/encoding
+# many blobs
 _HEADER_DT = np.dtype(
     [("flags", ">i4"), ("count", ">i8"), ("compression", ">i4"), ("n", ">i4")]
 )
+_PAIR_DT = np.dtype([("mean", ">f8"), ("count", ">i8")])
 _COMPRESSION_MSG = (
     f"compression for t-digest must be in [{MIN_COMPRESSION}, {MAX_COMPRESSION}]"
 )
@@ -1118,8 +1321,7 @@ def _decode(data: np.ndarray, starts: np.ndarray, lengths: np.ndarray):
     hsize = _HEADER.size
     has_header = lengths >= hsize
     hdr = np.zeros(starts.size, dtype=_HEADER_DT)
-    raw = data[starts[has_header][:, None] + np.arange(hsize)]
-    hdr[has_header] = raw.view(_HEADER_DT).ravel()
+    hdr[has_header] = _records(data, _HEADER_DT)[starts[has_header]]
     flags = hdr["flags"].astype(np.int64)
     count = hdr["count"].astype(np.int64)
     compression = hdr["compression"].astype(np.int64)
@@ -1128,13 +1330,10 @@ def _decode(data: np.ndarray, starts: np.ndarray, lengths: np.ndarray):
     sizes = np.where(body, n, 0)
     offsets = np.concatenate(([0], np.cumsum(sizes)))
 
-    # body bytes of every kept blob, in order: mark [start+24, end) and
-    # compress — one gather for all centroids
-    lo = starts[body] + hsize
-    mark = np.zeros(data.size + 1, dtype=np.int8)
-    mark[lo] = 1
-    mark[lo + 16 * n[body]] -= 1
-    means, counts = _centroids(data[np.cumsum(mark[:-1], dtype=np.int8) > 0])
+    # the 16-byte (mean, count) pair of every centroid of every kept
+    # blob, in order: one gather for all of them
+    pos = np.repeat(starts[body] + hsize - 16 * offsets[:-1][body], sizes[body])
+    means, counts = _centroids(_records(data, _PAIR_DT)[pos + 16 * np.arange(offsets[-1])])
     legacy = body & ((flags & TDIGEST_STORES_MEAN) == 0)
     if legacy.any():
         with np.errstate(divide="ignore", invalid="ignore"):
@@ -1156,13 +1355,18 @@ def _wire_checks(frame, body, empty, digest) -> list:
     ]
 
 
-def _centroids(body: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+def _records(data: np.ndarray, dtype: np.dtype) -> np.ndarray:
+    """A view of the byte array ``data`` with a ``dtype`` record starting
+    at every byte: indexing it with byte offsets reads (or writes) the
+    records there in one gather (or scatter)."""
+    n = max(data.size - dtype.itemsize + 1, 0)
+    return np.ndarray((n,), dtype=dtype, buffer=data, strides=(1,))
+
+
+def _centroids(pairs: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     """(means, counts) of big-endian (mean, count) wire pairs — the
     inverse of :func:`_wire_pairs`."""
-    pairs = body.reshape(-1, 16)
-    means = pairs[:, :8].copy().view(">f8").ravel().astype(np.float64)
-    counts = pairs[:, 8:].copy().view(">i8").ravel().astype(np.int64)
-    return means, counts
+    return pairs["mean"].astype(np.float64), pairs["count"].astype(np.int64)
 
 
 def decode_many(blobs):
@@ -1206,11 +1410,9 @@ def encode_many(means, counts, offsets, count, compression):
     hdr["compression"] = compression
     hdr["n"] = sizes
     out = np.empty(int(boff[-1]), dtype=np.uint8)
-    hpos = (boff[:-1, None] + np.arange(_HEADER.size)).ravel()
-    in_body = np.ones(out.size, dtype=bool)
-    in_body[hpos] = False
-    out[hpos] = hdr.view(np.uint8)
-    out[in_body] = _wire_pairs(means, counts).ravel()
+    _records(out, _HEADER_DT)[boff[:-1]] = hdr
+    pos = np.repeat(boff[:-1] + _HEADER.size - 16 * offsets[:-1], sizes)
+    _records(out, _PAIR_DT)[pos + 16 * np.arange(means.size)] = _wire_pairs(means, counts)
     large = boff[-1] >= 1 << 31
     return pa.Array.from_buffers(
         pa.large_binary() if large else pa.binary(), nblob,
@@ -1228,8 +1430,8 @@ def deserialize(data: bytes) -> tuple[np.ndarray, np.ndarray, int, int]:
     )
     checks, body, empty = _frame_checks(size, flags, count, n)
     means, counts = _centroids(
-        np.frombuffer(data, dtype=np.uint8, count=16 * n, offset=_HEADER.size)
-        if body else np.empty(0, dtype=np.uint8)
+        np.frombuffer(data, dtype=_PAIR_DT, count=n, offset=_HEADER.size)
+        if body else np.empty(0, dtype=_PAIR_DT)
     )
     if body and not flags & TDIGEST_STORES_MEAN:
         with np.errstate(divide="ignore", invalid="ignore"):

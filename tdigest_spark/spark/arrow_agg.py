@@ -936,30 +936,36 @@ def _bundle_folder(
 
 
 def _native_partials(
-    spark, splits, fold_bundles, serialize, partial_schema: StructType
+    spark, splits, fold_bundles, serialize, partial_schema: StructType,
+    grouped: bool,
 ) -> DataFrame:
     """Partial phase over pyarrow-read splits when the scan plans more
     than one, or one that may hold too many groups for one task (see
     :func:`_single_task`): one Spark task per split, batches never
     touch the JVM row pipeline.
 
-    The split list rides a broadcast and each task is seeded by a
-    one-row ``spark.range(n, numPartitions=n)`` leaf (partition i holds
-    exactly id i), so the partial stage is a plain
-    ``range → MapInArrow → Exchange`` plan: no Python-RDD pickle
-    serializer and no ``createDataFrame``-from-RDD conversion pass
-    (measured ~0.1 s of per-query driver/plan overhead)."""
-    bc_splits = spark.sparkContext.broadcast(splits)
+    The split list rides the task closure (pyspark broadcasts a command
+    over 1 MB itself) and each task is seeded by a one-row
+    ``spark.range(n, numPartitions=n)`` leaf (partition i holds exactly
+    id i), so the partial stage is a plain ``range → MapInArrow →
+    Exchange`` plan: no Python-RDD pickle serializer and no
+    ``createDataFrame``-from-RDD conversion pass (measured ~0.1 s of
+    per-query driver/plan overhead).  Ungrouped, the task holding split
+    0 emits the sentinel group with a NULL sketch when its fold is
+    empty: the merge pass then sees that group however much the scan
+    prunes, and answers one NULL row over zero rows as SQL does."""
     key_names = [f.name for f in partial_schema.fields[:-1]]
 
     def scan_split(batches):
         from pyspark.sql.pandas.types import to_arrow_schema
 
         idx = [i for b in batches for i in b.column(0).to_pylist()]
-        states = fold_bundles([bc_splits.value[i] for i in idx])
-        yield _partials_batch(
-            states, key_names, serialize, to_arrow_schema(partial_schema)
-        )
+        states = fold_bundles([splits[i] for i in idx])
+        schema_pa = to_arrow_schema(partial_schema)
+        if grouped or states or 0 not in idx:
+            yield _partials_batch(states, key_names, serialize, schema_pa)
+        else:
+            yield record_batch_exact({GROUP_SENTINEL: [0], SKETCH_COL: [None]}, schema_pa)
 
     n = len(splits)
     return spark.range(0, n, 1, n).mapInArrow(scan_split, partial_schema)
@@ -1335,7 +1341,7 @@ def sketch_groupby_arrow(
             return result
         n_input_parts = len(splits)
         partials = _native_partials(
-            df.sparkSession, splits, fold_bundles, serialize, partial_schema
+            df.sparkSession, splits, fold_bundles, serialize, partial_schema, grouped
         )
     else:
 
@@ -1352,26 +1358,26 @@ def sketch_groupby_arrow(
         # the count only matters for the ungrouped fan-in
         n_input_parts = 1 if grouped else _num_partitions(df)
         partials = df.mapInArrow(run_partial, partial_schema)
-    if not grouped:
-        # SQL semantics: an ungrouped aggregate over zero rows still
-        # yields one row (NULL result).  One literal seed row with a
-        # NULL sketch guarantees the sentinel group reaches the merge
-        # pass even when the scan prunes to nothing; merge ignores NULL
-        # sketches otherwise.  Built from range(1) + typed literals —
-        # pure JVM, unlike createDataFrame's per-query Python→JVM
-        # conversion pass.
-        seed = (
-            df.sparkSession.range(1)
-            .select(
-                *[
-                    F.lit(0 if f.name == GROUP_SENTINEL else None)
-                    .cast(f.dataType)
-                    .alias(f.name)
-                    for f in partial_schema.fields
-                ]
+        if not grouped:
+            # SQL semantics: an ungrouped aggregate over zero rows still
+            # yields one row (NULL result).  One literal seed row with a
+            # NULL sketch guarantees the sentinel group reaches the
+            # merge pass even when the input is empty; merge ignores
+            # NULL sketches otherwise.  Built from range(1) + typed
+            # literals — pure JVM, unlike createDataFrame's per-query
+            # Python→JVM conversion pass.
+            seed = (
+                df.sparkSession.range(1)
+                .select(
+                    *[
+                        F.lit(0 if f.name == GROUP_SENTINEL else None)
+                        .cast(f.dataType)
+                        .alias(f.name)
+                        for f in partial_schema.fields
+                    ]
+                )
             )
-        )
-        partials = partials.unionByName(seed)
+            partials = partials.unionByName(seed)
 
     if salt and salt > 1:
         # intermediate merge round keyed by (keys, partition_id % salt):

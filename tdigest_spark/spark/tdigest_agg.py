@@ -42,9 +42,10 @@ from tdigest_spark.kernel.tdigest import (
     compact_many,
     decode_many,
     encode_many,
+    fold_chunks,
     generate_counts,
     merge_all,
-    merge_blobs_into,
+    merge_into,
 )
 from tdigest_spark.kernel.arrownp import arrow_floats, arrow_ints
 from tdigest_spark.spark.arrow_agg import sketch_groupby_arrow
@@ -119,19 +120,16 @@ class _DigestAcc:
 
 
 def _decode_groups(blobs, rows, bounds):
-    """Decode a grouped batch of digest blobs: the decoded centroids in
-    group order plus the group of each decoded (non-null) blob."""
+    """Decode a grouped batch of digest blobs: the groups holding a
+    non-null blob, the compression of the first such blob of each, the
+    group of every decoded blob as an index into those groups, and the
+    decoded centroids in group order (``decode_many``)."""
     if rows is not None:
         blobs = blobs.take(pa.array(rows))
     gid = np.repeat(np.arange(bounds.size - 1), np.diff(bounds))
-    kept, means, counts, offsets, count, compression = decode_many(blobs)
-    return gid[kept], (means, counts, offsets, count), compression
-
-
-def _first_per_group(gid):
-    """(group, first decoded blob of the group) pairs."""
-    groups, first = np.unique(gid, return_index=True)
-    return zip(groups.tolist(), first.tolist())
+    kept, means, counts, offsets, _, compression = decode_many(blobs)
+    groups, first, seg = np.unique(gid[kept], return_index=True, return_inverse=True)
+    return groups, compression[first], seg, (means, counts, offsets)
 
 
 def _fold_digests(digest_col: str):
@@ -145,12 +143,14 @@ def _fold_digests(digest_col: str):
             st.d.merge_digest(incoming)
 
     def fold_batch(states, cols, rows, bounds) -> None:
-        gid, decoded, compression = _decode_groups(cols[digest_col], rows, bounds)
-        for g, b in _first_per_group(gid):
-            st = states[g]
+        groups, compression, seg, (means, counts, offsets) = _decode_groups(
+            cols[digest_col], rows, bounds
+        )
+        accs = [states[g] for g in groups.tolist()]
+        for st, c in zip(accs, compression.tolist()):
             if st.d is None:
-                st.d = TDigest(st.compression or int(compression[b]))
-        merge_blobs_into([st.d for st in states], gid, *decoded)
+                st.d = TDigest(st.compression or c)
+        merge_into([st.d for st in accs], seg, means, counts, offsets)
 
     fold.batch = fold_batch
     return fold
@@ -165,45 +165,44 @@ def _serialize_td(st) -> bytes | None:
     return d.to_bytes() if d is not None and d.count > 0 else None
 
 
-def _encode(digests) -> pa.Array:
-    """``d.to_bytes()`` for every digest (NULL where None) as one binary
-    array: one segmented compaction, one encode."""
-    live = [d for d in digests if d is not None]
-    compact_many(live)
-    enc = encode_many(
-        np.concatenate([d.means for d in live]) if live else np.empty(0),
-        np.concatenate([d.counts for d in live]) if live else np.empty(0, np.int64),
-        np.concatenate(([0], np.cumsum([d.means.size for d in live]))).astype(np.int64),
-        [d.count for d in live],
-        [d.compression for d in live],
-    )
-    if len(live) == len(digests):
+def _with_nulls(enc: pa.Array, present: np.ndarray, n: int) -> pa.Array:
+    """``enc`` (one entry per ``present`` position) spread over ``n``
+    rows, NULL elsewhere."""
+    if present.size == n:
         return enc
-    pos = np.cumsum([d is not None for d in digests]) - 1
-    return enc.take(pa.array(
-        [int(p) if d is not None else None for p, d in zip(pos, digests)], pa.int64()
-    ))
+    idx = np.full(n, -1, dtype=np.int64)
+    idx[present] = np.arange(present.size)
+    return enc.take(pa.array(idx, mask=idx < 0))
 
 
-_serialize_td.batch = lambda states: _encode([
-    d if d is not None and d.count > 0 else None for d in map(_digest_of, states)
-])
+def _serialize_batch(states) -> pa.Array:
+    """``_serialize_td`` for every state as one binary array: one
+    segmented compaction, one encode."""
+    ds = [_digest_of(st) for st in states]
+    live = np.fromiter((d is not None and d.count > 0 for d in ds), bool, len(ds))
+    ds = [d for d, keep in zip(ds, live) if keep]
+    enc = encode_many(
+        *compact_many(ds), [d.count for d in ds], [d.compression for d in ds]
+    )
+    return _with_nulls(enc, np.flatnonzero(live), len(states))
+
+
+_serialize_td.batch = _serialize_batch
 
 
 def _merged(sketches: list[bytes]) -> TDigest | None:
     return merge_all(TDigest.from_bytes(s) for s in sketches)
 
 
-def _merged_groups(blobs, rows, bounds) -> list[TDigest | None]:
+def _merged_groups(blobs, rows, bounds):
     """:func:`_merged` for every group of a grouped batch of blobs,
-    compacted: decode_many, then the segmented merge."""
-    gid, decoded, compression = _decode_groups(blobs, rows, bounds)
-    digests: list[TDigest | None] = [None] * (bounds.size - 1)
-    for g, b in _first_per_group(gid):
-        digests[g] = TDigest(int(compression[b]))
-    merge_blobs_into(digests, gid, *decoded)
-    compact_many(digests)
-    return digests
+    compacted, on flat arrays (no ``TDigest`` per group): the groups
+    holding a non-null blob and their digests as ``(means, counts,
+    offsets, count, compression)``."""
+    groups, compression, seg, (means, counts, offsets) = _decode_groups(blobs, rows, bounds)
+    zeros = np.zeros(groups.size, dtype=np.int64)
+    flat, _, _, count, _ = fold_chunks(means, counts, offsets, seg, compression, zeros, zeros)
+    return groups, (*flat, count, compression)
 
 
 def _merge_bytes_td(sketches: list[bytes]) -> bytes | None:
@@ -211,9 +210,12 @@ def _merge_bytes_td(sketches: list[bytes]) -> bytes | None:
     return m.to_bytes() if m is not None else None
 
 
-_merge_bytes_td.batch = lambda blobs, rows, bounds: _encode(
-    _merged_groups(blobs, rows, bounds)
-)
+def _merge_bytes_batch(blobs, rows, bounds) -> pa.Array:
+    groups, merged = _merged_groups(blobs, rows, bounds)
+    return _with_nulls(encode_many(*merged), groups, bounds.size - 1)
+
+
+_merge_bytes_td.batch = _merge_bytes_batch
 
 
 # ----------------------------------------------------------------------
@@ -228,10 +230,18 @@ def _finalizer(estimate, empty=None):
         return (estimate(d) if d is not None else empty,)
 
     def fin_batch(blobs, rows, bounds):
-        return [[
-            estimate(d) if d is not None else empty
-            for d in _merged_groups(blobs, rows, bounds)
-        ]]
+        out = [empty] * (bounds.size - 1)
+        groups, (means, counts, offsets, count, compression) = _merged_groups(
+            blobs, rows, bounds
+        )
+        for g, lo, hi, n, c in zip(
+            groups.tolist(), offsets[:-1].tolist(), offsets[1:].tolist(),
+            count.tolist(), compression.tolist(),
+        ):
+            d = TDigest(c)
+            d.means, d.counts, d.count = means[lo:hi], counts[lo:hi], n
+            out[g] = estimate(d)
+        return [out]
 
     fin.batch = fin_batch
     return fin
@@ -256,7 +266,7 @@ def _fin_percentile_of_array(vs):
 
 
 _fin_digest = _finalizer(lambda d: d.to_bytes())
-_fin_digest.batch = lambda blobs, rows, bounds: [_merge_bytes_td.batch(blobs, rows, bounds)]
+_fin_digest.batch = lambda blobs, rows, bounds: [_merge_bytes_batch(blobs, rows, bounds)]
 
 _fin_count = _finalizer(lambda d: int(d.count), 0)
 

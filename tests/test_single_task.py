@@ -72,6 +72,17 @@ def one_file(spark, tmp_path_factory):
 
 
 @pytest.fixture(scope="module")
+def two_files(spark, tmp_path_factory):
+    """Two one-row-group files: the native scan plans two splits."""
+    root = tmp_path_factory.mktemp("two_files")
+    _write_one_row_group(str(root / "a.parquet"), seed=1)
+    _write_one_row_group(str(root / "b.parquet"), seed=2)
+    df = spark.read.parquet(str(root))
+    assert len(arrow_agg._native_parquet_splits(df, ["k", "v"])[0]) == 2
+    return df
+
+
+@pytest.fixture(scope="module")
 def stored(spark, one_file, tmp_path_factory):
     """Stored per-(k, g) t-digests and HLL sketches, read back as one
     single-row-group file each (re-aggregation inputs on the native
@@ -153,17 +164,21 @@ def test_one_task_route_equals_merged_route(spark, one_file, stored, monkeypatch
 
 
 @pytest.mark.parametrize("keys", [["k"], []], ids=["grouped", "ungrouped"])
-def test_filter_keeping_no_rows(spark, one_file, stored, monkeypatch, keys):
+def test_filter_keeping_no_rows(spark, one_file, two_files, stored, monkeypatch, keys):
     """A residual filter that no row passes (row-group stats cannot
     prune IS NULL): still one split, and SQL's empty-input results —
-    one NULL row ungrouped, zero rows grouped."""
+    one NULL row ungrouped, zero rows grouped.  Over two files the
+    merged route gives the same: ungrouped, the task holding split 0
+    emits the empty group."""
     empty = one_file.filter(F.col("c").isNull())
     assert len(arrow_agg._native_parquet_splits(empty, ["k", "v"])[0]) == 1
+    answers = {}
     for name, build, native in _families(empty, stored, keys):
         if name in ("union_digests", "percentile_digests", "hll_union"):
             continue  # stored inputs are not filtered
         one, merged, _ = _routes(monkeypatch, build)
         assert one == merged, name
+        answers[name] = one
         if name != "topk":  # explodes its one NULL sketch into no rows
             assert len(one) == (0 if keys else 1), (name, one)
     rows = tdigest_percentile(empty, "v", 100, 0.5, keys=keys).collect()
@@ -171,6 +186,11 @@ def test_filter_keeping_no_rows(spark, one_file, stored, monkeypatch, keys):
         assert rows == []
     else:
         assert len(rows) == 1 and rows[0]["percentile"] is None
+        empty2 = two_files.filter(F.col("c").isNull())
+        assert len(arrow_agg._native_parquet_splits(empty2, ["k", "v"])[0]) == 2
+        for name, build, _ in _families(empty2, stored, keys):
+            if name in answers:
+                assert _rows(build()) == answers[name], name
 
 
 @pytest.mark.parametrize("keys", [["k"], []], ids=["grouped", "ungrouped"])
@@ -235,17 +255,35 @@ def test_single_split_runs_one_job_without_exchange(spark, one_file, keys):
     assert plan.count("MapInArrow") == 1, plan
 
 
-def test_two_files_keep_their_exchange(spark, tmp_path_factory):
-    root = tmp_path_factory.mktemp("two_files")
-    _write_one_row_group(str(root / "a.parquet"), seed=1)
-    _write_one_row_group(str(root / "b.parquet"), seed=2)
-    df = spark.read.parquet(str(root))
-    assert len(arrow_agg._native_parquet_splits(df, ["k", "v"])[0]) == 2
+def test_two_files_keep_their_exchange(spark, two_files):
     for keys in (["k"], []):
         _, _, plan = _jobs_and_plan(
-            spark, tdigest_percentile(df, "v", 100, 0.5, keys=keys)
+            spark, tdigest_percentile(two_files, "v", 100, 0.5, keys=keys)
         )
         assert "Exchange" in plan, plan
+        # the ungrouped native plan needs no seed row: one scan leaf
+        assert plan.count("Range") == 1, plan
+
+
+def test_multi_split_queries_leave_no_files(spark, two_files):
+    """A multi-split native aggregate ships its split list in the task
+    closure: repeated queries add no broadcast file to the session's
+    temp directory."""
+    import gc
+    import os
+
+    temp = spark.sparkContext._temp_dir
+
+    def files():
+        gc.collect()
+        return sum(len(names) for _, _, names in os.walk(temp))
+
+    query = lambda: tdigest_percentile(two_files, "v", 100, 0.5, keys=["k"])  # noqa: E731
+    query().collect()
+    before = files()
+    for _ in range(10):
+        query().collect()
+    assert files() == before
 
 
 def test_salt_is_a_no_op_on_one_split(spark, one_file):

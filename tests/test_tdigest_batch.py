@@ -1,14 +1,19 @@
-"""The segmented t-digest path against the per-group scalar kernel.
+"""The flat many-digest t-digest path against the per-group scalar kernel.
 
 The engine folds, merges and encodes all groups of a batch at once
 (``fold.batch`` / ``serialize.batch`` / ``finalize.batch`` in
-tdigest_agg, over ``decode_many`` / ``compact_many`` /
-``merge_blobs_into`` / ``encode_many`` in the kernel).  Every digest it
+tdigest_agg, over ``decode_many`` / ``compact_many`` / ``fold_chunks``
+/ ``merge_into`` / ``encode_many`` in the kernel).  Every digest it
 produces must be byte-identical to folding each group on its own with
-``TDigest.add_values`` / ``merge_digest`` / ``to_bytes``.  Inputs are
-generated: group counts from 1 to 5,000, group sizes on both sides of
-the 4,096-value flush threshold, equal-mean runs, NaN and ±0.0, mixed
-compressions, and null, legacy flags=0 and header-only blobs.
+``TDigest.add_values`` / ``merge_digest`` / ``to_bytes``, the scalar
+path that stays the reference.  Inputs are generated: group counts from
+1 to 5,000, group sizes on both sides of the 4,096-value flush
+threshold and of the size below which a digest cannot merge two
+centroids (35 items at compression 100), states carried across
+batches, compressions 10 to 10,000, equal-mean runs, NaN and ±0.0, and
+null, all-null, legacy flags=0 and header-only blobs.  Every test runs
+twice: with each digest set forced through the flat segmented passes,
+and with the default scalar fallback for few or large digests.
 """
 
 from __future__ import annotations
@@ -33,13 +38,15 @@ from tdigest_spark.kernel.tdigest import (
 from tdigest_spark.spark import arrow_agg as A
 from tdigest_spark.spark import tdigest_agg as T
 
-@pytest.fixture(autouse=True, scope="module")
-def _segmented_always():
-    """Send every multi-digest compaction through the segmented pass,
-    whatever the digest sizes, so the comparison always covers it."""
+@pytest.fixture(autouse=True, scope="module", params=["segmented", "default"])
+def _segmented(request):
+    """``segmented``: every compaction and merge loop takes the flat
+    segmented pass, whatever the digest count and sizes.  ``default``:
+    few or large digests take the scalar fallback."""
     with pytest.MonkeyPatch.context() as mp:
-        mp.setattr(K, "_SEGMENTED_MIN_DIGESTS", 2)
-        mp.setattr(K, "_SEGMENTED_MAX_MEAN", 1 << 62)
+        if request.param == "segmented":
+            mp.setattr(K, "_SEGMENTED_MIN_DIGESTS", 1)
+            mp.setattr(K, "_SEGMENTED_MAX_MEAN", 1 << 62)
         yield
 
 
@@ -66,10 +73,14 @@ def _values(rng, n):
 
 
 def _sizes(rng, ngroups, big):
-    """Mostly small groups; ``big`` of them straddle the flush threshold."""
+    """Mostly small groups, on both sides of the no-merge size at
+    compressions 10 and 100; ``big`` of them straddle the flush
+    threshold, and as many hold 1,000-2,500 values (the no-merge size
+    at compression 10,000 is ~1,700)."""
     sizes = rng.integers(0, 40, ngroups)
-    pick = rng.choice(ngroups, min(big, ngroups), replace=False)
-    sizes[pick] = rng.integers(3_900, 4_400, pick.size)
+    pick = rng.choice(ngroups, min(2 * big, ngroups), replace=False)
+    sizes[pick[:big]] = rng.integers(3_900, 4_400, pick[:big].size)
+    sizes[pick[big:]] = rng.integers(1_000, 2_500, pick[big:].size)
     return sizes
 
 
@@ -100,15 +111,22 @@ def _blob(rng, n, compression, form):
 
 def _blob_batch(rng, ngroups, per_group):
     """Digest blobs of ``ngroups`` groups in random row order, drawn
-    from a pool that mixes compressions and every blob form."""
+    from a pool that mixes compressions, small and large digests and
+    every blob form; the last group holds only NULL blobs."""
     forms = ["plain", "plain", "plain", "legacy", "empty", "null"]
     pool = [
         None if form == "null"
-        else _blob(rng, int(rng.integers(1, 2_000)), int(rng.choice([10, 25, 100])), form)
-        for form in (forms[i % len(forms)] for i in range(48))
+        else _blob(
+            rng,
+            int(rng.integers(1, 40 if i % 4 else 2_000)),
+            int(rng.choice([10, 25, 100, 10_000])),
+            form,
+        )
+        for i, form in enumerate((forms * 11)[:64])
     ]
     gid = rng.permutation(np.repeat(np.arange(ngroups), rng.integers(1, per_group + 1, ngroups)))
-    return gid, [pool[i] for i in rng.integers(0, len(pool), gid.size)]
+    blobs = [pool[i] for i in rng.integers(0, len(pool), gid.size)]
+    return np.append(gid, [ngroups, ngroups]), blobs + [None, None]
 
 
 # ----------------------------------------------------------------------
@@ -120,7 +138,7 @@ def _blob_batch(rng, ngroups, per_group):
     ngroups=st.integers(1, 5_000),
     big=st.integers(0, 3),
     nbatches=st.integers(1, 4),
-    compression=st.sampled_from([10, 100, 400]),
+    compression=st.sampled_from([10, 100, 400, 10_000]),
 )
 @example(seed=1, ngroups=5_000, big=2, nbatches=3, compression=100)
 @example(seed=2, ngroups=1, big=1, nbatches=4, compression=100)
@@ -150,26 +168,35 @@ def test_values_fold_matches_scalar(seed, ngroups, big, nbatches, compression):
 # ----------------------------------------------------------------------
 @settings(max_examples=25, **SETTINGS)
 @given(seed=st.integers(0, 2**32 - 1), ndigests=st.integers(2, 40))
+@example(seed=4, ndigests=40)
 def test_compact_many_matches_compact(seed, ndigests):
     rng = np.random.default_rng(seed)
     digests = []
     for _ in range(ndigests):
-        d = TDigest(int(rng.choice([10, 20, 100])))
+        d = TDigest(int(rng.choice([10, 20, 100, 10_000])))
+        # small digests sit on both sides of the no-merge size
+        hi = 3_000 if rng.random() < 0.5 else 60
         for _ in range(rng.integers(0, 3)):  # stored centroids
-            d.add_values(_values(rng, int(rng.integers(1, 3_000))))
+            d.add_values(_values(rng, int(rng.integers(1, hi))))
             d.compact()
         if rng.random() < 0.5:  # all-singleton tail (the insert path)
-            d.add_values(_values(rng, int(rng.integers(1, 3_000))), compact_threshold=1 << 62)
+            d.add_values(_values(rng, int(rng.integers(1, hi))), compact_threshold=1 << 62)
         else:  # a tail with weights (the lexsort path)
-            other = tdigest_from_values(_values(rng, int(rng.integers(1, 3_000))), 10)
+            other = tdigest_from_values(_values(rng, int(rng.integers(1, hi))), 10)
             d.add_centroids(*other.centroid_arrays(), compact_threshold=1 << 62)
         digests.append(d)
+    digests.append(copy.deepcopy(digests[0]))
+    digests[-1].compact()  # nothing pending: left as it is
     ref = copy.deepcopy(digests)
-    K.compact_many(digests)
+    means, counts, offsets = K.compact_many(digests)
     for d in ref:
         d.compact()
     assert [d.to_bytes() for d in digests] == [d.to_bytes() for d in ref]
     assert [d.ncompactions for d in digests] == [d.ncompactions for d in ref]
+    for g, d in enumerate(ref):
+        lo, hi = offsets[g], offsets[g + 1]
+        assert means[lo:hi].tobytes() == d.means.tobytes()
+        assert counts[lo:hi].tobytes() == d.counts.tobytes()
 
 
 # ----------------------------------------------------------------------
@@ -191,14 +218,27 @@ def test_digest_paths_match_scalar(seed, ngroups, per_group):
     order = np.arange(len(blobs)) if rows is None else rows
     groups = [[blobs[r] for r in order[lo:hi]] for lo, hi in zip(bounds[:-1], bounds[1:])]
 
-    # digest fold (partial phase of *_digests aggregates)
+    # digest fold (partial phase of *_digests aggregates), its states
+    # carried over the batches of a task
+    fold = T._fold_digests("d")
     for compression in (None, 50):
-        states = [T._DigestAcc(compression) for _ in keys]
-        T._fold_digests("d").batch(states, {"d": batch.column(1)}, rows, bounds)
-        ref = [T._DigestAcc(compression) for _ in keys]
-        for acc, blob_list in zip(ref, groups):
-            T._fold_digests("d")(acc, d=pa.array(blob_list, pa.binary()))
-        assert T._serialize_td.batch(states).to_pylist() == [T._serialize_td(a) for a in ref]
+        states = {}
+        parts = np.array_split(np.arange(len(blobs)), int(rng.integers(1, 4)))
+        for part in parts:
+            A.fold_group_batches(
+                [batch.take(pa.array(part))], ["g"], ["d"],
+                lambda: T._DigestAcc(compression), fold, states=states,
+            )
+        ref = {}
+        for key, blob_list in zip(keys, groups):
+            acc = ref[key] = T._DigestAcc(compression)
+            fold(acc, d=pa.array(blob_list, pa.binary()))
+        assert T._serialize_td.batch([states[k] for k in keys]).to_pylist() == [
+            T._serialize_td(ref[k]) for k in keys
+        ]
+        assert [states[k].d and states[k].d.ncompactions for k in keys] == [
+            ref[k].d and ref[k].d.ncompactions for k in keys
+        ]
 
     # merge pass finalizers and the intermediate-round merge
     sketches = batch.column(1)
@@ -215,6 +255,37 @@ def test_digest_paths_match_scalar(seed, ngroups, per_group):
         None if w is None else np.asarray(w).tobytes() for w in want
     ]
     assert T._fin_count.batch(sketches, rows, bounds)[0] == [T._fin_count(x)[0] for x in live]
+
+
+def _raw_blob(compression, pairs):
+    """A wire blob of the given (mean, count) pairs, as stored."""
+    return struct.pack(">iqii", 1, sum(c for _, c in pairs), compression, len(pairs)) + (
+        b"".join(struct.pack(">dq", m, c) for m, c in pairs)
+    )
+
+
+def test_equal_means_keep_their_input_order():
+    """Centroids of equal mean and count tie in the sort: they keep
+    their input order, which shows in the bits of a -0.0 next to a 0.0;
+    equal means with different counts order by count.  Sixty-four
+    groups take the segmented passes, and each merges beyond the
+    no-merge size."""
+    pairs = [[(-0.0, 2), (1.0, 3), (2.0, 1)], [(0.0, 2), (1.0, 1), (2.0, 5)],
+             [(-0.0, 2), (0.0, 1), (1.0, 3)], [(0.0, 2), (2.0, 5), (3.0, 40)]]
+    blobs, gid = [], []
+    for g in range(64):
+        for i in range(4):
+            blobs.append(_raw_blob(100, pairs[(g + i) % 4]))
+            gid.append(g)
+    sketches = pa.array(blobs, pa.binary())
+    bounds = np.arange(0, len(blobs) + 1, 4)
+    got = T._fin_digest.batch(sketches, None, bounds)[0].to_pylist()
+    want = [T._fin_digest(blobs[lo:lo + 4])[0] for lo in bounds[:-1]]
+    assert got == want
+    assert len({w[24:40] for w in want}) == 2  # -0.0 first, or 0.0 first
+    states = [T._DigestAcc(None) for _ in range(64)]
+    T._fold_digests("d").batch(states, {"d": sketches}, None, bounds)
+    assert T._serialize_td.batch(states).to_pylist() == want
 
 
 def test_merge_all_compression_rule_in_batch():
