@@ -11,9 +11,10 @@ path that stays the reference.  Inputs are generated: group counts from
 threshold and of the size below which a digest cannot merge two
 centroids (35 items at compression 100), states carried across
 batches, compressions 10 to 10,000, equal-mean runs, NaN and ±0.0, and
-null, all-null, legacy flags=0 and header-only blobs.  Every test runs
-twice: with each digest set forced through the flat segmented passes,
-and with the default scalar fallback for few or large digests.
+null, all-null, legacy flags=0 and header-only blobs.  Here every digest
+set is forced through the flat segmented passes; the same tests run at
+the default crossover, where few or large digests take the scalar
+fallback, in test_tdigest_batch_default.py.
 """
 
 from __future__ import annotations
@@ -38,15 +39,15 @@ from tdigest_spark.kernel.tdigest import (
 from tdigest_spark.spark import arrow_agg as A
 from tdigest_spark.spark import tdigest_agg as T
 
-@pytest.fixture(autouse=True, scope="module", params=["segmented", "default"])
-def _segmented(request):
-    """``segmented``: every compaction and merge loop takes the flat
-    segmented pass, whatever the digest count and sizes.  ``default``:
-    few or large digests take the scalar fallback."""
+@pytest.fixture(autouse=True, scope="module")
+def _segmented_always():
+    """Send every compaction and merge loop through the flat segmented
+    pass, whatever the digest count and sizes.  The fixture is local to
+    this module: test_tdigest_batch_default.py runs the same tests at
+    the default crossover."""
     with pytest.MonkeyPatch.context() as mp:
-        if request.param == "segmented":
-            mp.setattr(K, "_SEGMENTED_MIN_DIGESTS", 1)
-            mp.setattr(K, "_SEGMENTED_MAX_MEAN", 1 << 62)
+        mp.setattr(K, "_SEGMENTED_MIN_DIGESTS", 1)
+        mp.setattr(K, "_SEGMENTED_MAX_MEAN", 1 << 62)
         yield
 
 
