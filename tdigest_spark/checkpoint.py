@@ -17,6 +17,8 @@ from __future__ import annotations
 import os
 from collections.abc import Sequence
 
+import numpy as np
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -27,7 +29,18 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from tdigest_spark.kernel.tdigest import TDigest
+from tdigest_spark.kernel.tdigest import decode_many
+from tdigest_spark.spark import arrow_agg
+from tdigest_spark.spark.arrow_agg import (
+    SKETCH_COL,
+    _SKETCH_FIELD,
+    _bundle_folder,
+    _native_parquet_splits,
+    _partials_batch,
+    fold_group_batches,
+    record_batch_exact,
+)
+from tdigest_spark.spark.tdigest_agg import _values_sketch
 
 LINEAGE_COLS = ["split_id", "n_rows", "n_centroids", "n_bytes"]
 
@@ -79,81 +92,52 @@ def build_partial_digests(
         ]
     )
 
-    def fold_batches(batches):
-        import numpy as np
-        import pyarrow as pa
+    sketch = _values_sketch(value_col, compression)
+    projected = df.select(*keys, value_col)
 
-        from tdigest_spark.spark.arrow_agg import _group_slices
-
-        acc: dict[tuple, TDigest] = {}
-        rows_seen: dict[tuple, int] = {}
-        for batch in batches:
-            vcol = batch.column(batch.schema.get_field_index(value_col))
-            for gkey, rows in _group_slices(batch, keys):
-                d = acc.get(gkey)
-                if d is None:
-                    d = acc[gkey] = TDigest(compression)
-                    rows_seen[gkey] = 0
-                sliced = vcol.take(pa.array(rows)) if rows is not None else vcol
-                from tdigest_spark.kernel.arrownp import arrow_floats
-
-                arr = arrow_floats(sliced)
-                d.add_values(arr)
-                # count only rows the digest actually ingested —
-                # add_values drops NaN/NULL, and the lineage invariant
-                # (sum n_rows == sum digest counts) must hold with them
-                rows_seen[gkey] += int(np.count_nonzero(~np.isnan(arr)))
-        for gkey, d in acc.items():
-            blob = d.to_bytes() if d.count > 0 else None
-            yield gkey, blob, rows_seen[gkey], len(d.means)
-
-    def emit(split_id, batches):
+    def emit(split_id, states):
+        """The split's partial digests, with lineage read off each blob."""
         from pyspark.sql.pandas.types import to_arrow_schema
 
-        from tdigest_spark.spark.arrow_agg import record_batch_exact
-
-        out: dict[str, list] = {f.name: [] for f in schema.fields}
-        for gkey, blob, n_rows, n_cent in fold_batches(batches):
-            # ungrouped: zip drops _group_slices' sentinel (0,) key
-            for kname, kval in zip(keys, gkey):
-                out[kname].append(kval)
-            out["digest"].append(blob)
-            out["split_id"].append(split_id)
-            out["n_rows"].append(n_rows)
-            out["n_centroids"].append(n_cent)
-            out["n_bytes"].append(len(blob) if blob else 0)
+        part = _partials_batch(
+            states, keys, sketch, to_arrow_schema(StructType(key_fields + [_SKETCH_FIELD]))
+        )
+        blobs = part.column(SKETCH_COL)
+        kept, _, _, offsets, count, _ = decode_many(blobs)
+        n_rows = np.zeros(len(blobs), np.int64)
+        n_rows[kept] = count
+        n_centroids = np.zeros(len(blobs), np.int32)
+        n_centroids[kept] = np.diff(offsets)
+        out = {k: part.column(k) for k in keys}
+        out.update(
+            digest=blobs,
+            split_id=np.full(len(blobs), split_id, np.int32),
+            n_rows=n_rows,
+            n_centroids=n_centroids,
+            n_bytes=pc.binary_length(blobs).fill_null(0),
+        )
         return record_batch_exact(out, to_arrow_schema(schema))
 
     def build(batches):
         from pyspark import TaskContext
 
-        yield emit(TaskContext.get().partitionId(), batches)
+        states = fold_group_batches(batches, keys, [value_col], sketch)
+        yield emit(TaskContext.get().partitionId(), states)
 
-    from tdigest_spark.spark.arrow_agg import (
-        NATIVE_SCAN,
-        _native_parquet_splits,
-        iter_bundle_batches,
-        native_scan_ops,
-    )
-
-    projected = df.select(*keys, value_col)
     needed = [*keys, value_col]
-    native = _native_parquet_splits(projected, needed) if NATIVE_SCAN else None
+    native = _native_parquet_splits(projected, needed) if arrow_agg.NATIVE_SCAN else None
     if native is not None:
         splits, col_map, predicate, pred_part, pred_data = native
-        ops, sources = native_scan_ops(col_map, needed, pred_data)
+        fold_bundles = _bundle_folder(
+            col_map, keys, [value_col], sketch,
+            predicate=predicate, pred_part=pred_part, pred_data=pred_data,
+        )
 
         def scan_build(ids):
             # one range id per task: range id = bundle index = split_id
             for b in ids:
                 for split_id in b.column(0).to_pylist():
-                    yield emit(
-                        split_id,
-                        iter_bundle_batches(
-                            splits[split_id], needed, ops, sources,
-                            predicate, pred_part, pred_data,
-                        ),
-                    )
+                    yield emit(split_id, fold_bundles([splits[split_id]]))
 
         n = len(splits)
         partials_df = (

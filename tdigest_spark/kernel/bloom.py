@@ -12,6 +12,7 @@ import struct
 
 import numpy as np
 
+from tdigest_spark.kernel import merge_sketches
 from tdigest_spark.kernel.hashing import as_u64, double_hash
 
 _MAGIC = b"BLM1"
@@ -56,6 +57,9 @@ class Bloom:
         present = (self.bits[pos >> 3] & (1 << (pos & 7)).astype(np.uint8)) != 0
         return present.all(axis=0)
 
+    def empty(self) -> "Bloom":
+        return Bloom(self.m, self.k)
+
     def merge(self, other: "Bloom") -> None:
         if (other.m, other.k) != (self.m, self.k):
             raise ValueError("cannot merge bloom filters of different shape")
@@ -83,12 +87,4 @@ class Bloom:
         return b
 
 
-def merge_all_bloom(sketches) -> Bloom | None:
-    out: Bloom | None = None
-    for s in sketches:
-        if s is None:
-            continue
-        if out is None:
-            out = Bloom(s.m, s.k)
-        out.merge(s)
-    return out
+merge_all_bloom = merge_sketches

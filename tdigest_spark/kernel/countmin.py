@@ -14,6 +14,7 @@ import struct
 
 import numpy as np
 
+from tdigest_spark.kernel import merge_sketches
 from tdigest_spark.kernel.hashing import as_u64, double_hash
 
 _MAGIC = b"CMS1"
@@ -57,6 +58,9 @@ class CountMin:
             np.minimum(est, self.table[i][idx], out=est)
         return est
 
+    def empty(self) -> "CountMin":
+        return CountMin(self.width, self.depth)
+
     def merge(self, other: "CountMin") -> None:
         if (other.width, other.depth) != (self.width, self.depth):
             raise ValueError("cannot merge count-min sketches of different shape")
@@ -85,12 +89,4 @@ class CountMin:
         return cm
 
 
-def merge_all_cm(sketches) -> CountMin | None:
-    out: CountMin | None = None
-    for s in sketches:
-        if s is None:
-            continue
-        if out is None:
-            out = CountMin(s.width, s.depth)
-        out.merge(s)
-    return out
+merge_all_cm = merge_sketches

@@ -17,6 +17,7 @@ import struct
 
 import numpy as np
 
+from tdigest_spark.kernel import merge_sketches
 from tdigest_spark.kernel.hashing import as_u64
 
 _MAGIC = b"HLL1"
@@ -62,6 +63,9 @@ class HLL:
         rho = np.minimum(clz + 1, 64 - self.p + 1).astype(np.uint8)
         np.maximum.at(self.regs, idx, rho)
 
+    def empty(self) -> "HLL":
+        return HLL(self.p)
+
     def merge(self, other: "HLL") -> None:
         if other.p != self.p:
             raise ValueError("cannot merge HLL sketches with different precision")
@@ -96,12 +100,4 @@ class HLL:
         return h
 
 
-def merge_all_hll(sketches) -> HLL | None:
-    out: HLL | None = None
-    for s in sketches:
-        if s is None:
-            continue
-        if out is None:
-            out = HLL(s.p)
-        out.merge(s)
-    return out
+merge_all_hll = merge_sketches

@@ -22,6 +22,8 @@ import struct
 
 import numpy as np
 
+from tdigest_spark.kernel import merge_sketches
+
 _MAGIC = b"KLL1"
 _C = 2.0 / 3.0
 
@@ -84,6 +86,9 @@ class KLL:
         self.levels[h + 1] = np.concatenate([self.levels[h + 1], promoted])
 
     # ------------------------------------------------------------------
+    def empty(self) -> "KLL":
+        return KLL(self.k)
+
     def merge(self, other: "KLL") -> None:
         if other.k != self.k:
             raise ValueError("cannot merge KLL sketches with different k")
@@ -167,12 +172,4 @@ class KLL:
         return s
 
 
-def merge_all_kll(sketches) -> KLL | None:
-    out: KLL | None = None
-    for s in sketches:
-        if s is None:
-            continue
-        if out is None:
-            out = KLL(s.k)
-        out.merge(s)
-    return out
+merge_all_kll = merge_sketches

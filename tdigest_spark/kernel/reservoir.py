@@ -20,6 +20,7 @@ import struct
 
 import numpy as np
 
+from tdigest_spark.kernel import merge_sketches
 from tdigest_spark.kernel.hashing import as_u64, splitmix64
 
 _MAGIC = b"RSV1"
@@ -61,6 +62,9 @@ class Reservoir:
         self.prios = all_p[uniq][: self.k]
         self.hashes = all_h[uniq][: self.k]
 
+    def empty(self) -> "Reservoir":
+        return Reservoir(self.k, self.seed)
+
     def merge(self, other: "Reservoir") -> None:
         if (other.k, other.seed) != (self.k, self.seed):
             raise ValueError("cannot merge reservoirs with different (k, seed)")
@@ -95,12 +99,4 @@ class Reservoir:
         return r
 
 
-def merge_all_reservoir(sketches) -> Reservoir | None:
-    out: Reservoir | None = None
-    for s in sketches:
-        if s is None:
-            continue
-        if out is None:
-            out = Reservoir(s.k, s.seed)
-        out.merge(s)
-    return out
+merge_all_reservoir = merge_sketches

@@ -16,6 +16,8 @@ from __future__ import annotations
 
 import struct
 
+from tdigest_spark.kernel import merge_sketches
+
 _MAGIC = b"TOPK"
 
 
@@ -51,6 +53,9 @@ class SpaceSaving:
                 self.errors.pop(evict, None)
                 self.counts[item] = base + c
                 self.errors[item] = base
+
+    def empty(self) -> "SpaceSaving":
+        return SpaceSaving(self.m)
 
     def merge(self, other: "SpaceSaving") -> None:
         if other.m != self.m:
@@ -117,12 +122,4 @@ class SpaceSaving:
         return s
 
 
-def merge_all_topk(sketches) -> SpaceSaving | None:
-    out: SpaceSaving | None = None
-    for s in sketches:
-        if s is None:
-            continue
-        if out is None:
-            out = SpaceSaving(s.m)
-        out.merge(s)
-    return out
+merge_all_topk = merge_sketches

@@ -8,16 +8,19 @@ The engine consumes raw Arrow RecordBatches, never pandas:
 * each batch is grouped once (``_group_rows``): a bincount scan for few
   groups, else a stable argsort of the packed codes, giving the rows of
   every group as one permutation plus group bounds
-* the sketch then folds the whole grouped batch (the batch sketch
-  protocol below): t-digest folds, merges and encodes all groups in
-  one segmented NumPy pass; the other sketches run their per-group
-  fold behind one adapter
+* the sketch then folds the whole grouped batch through its ``Sketch``
+  record (below), the one declaration of a family the engine reads:
+  t-digest folds, merges and encodes all groups in one segmented NumPy
+  pass; the other families declare per-group forms that
+  :func:`sketch_of` lifts to batches
 
 so the per-row path is entirely C/NumPy, for keys as well as values.
 
 The merge/finalize stage repartitions by key, concatenates a task's
-partial sketches into one batch and reuses the same grouping and batch
-protocol (one output row per group, no per-group pandas overhead).
+partial sketches into one batch and reuses the same grouping and
+record (one output row per group, no per-group pandas overhead).
+Every family merges, so salt and the ungrouped fan-in rounds hold
+for all of them.
 When the native scan plans at most one split, every group has exactly
 one partial: unless its key columns allow more groups than one task
 should finalize, that one task finalizes its own partials in place,
@@ -28,13 +31,15 @@ from __future__ import annotations
 
 import os
 from collections.abc import Callable, Sequence
-from typing import Any
+from typing import Any, NamedTuple
 
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import BinaryType, IntegerType, StructField, StructType
+
+from tdigest_spark.kernel import merge_sketches
 
 GROUP_SENTINEL = "__sketch_group__"
 SKETCH_COL = "__sketch__"
@@ -129,6 +134,19 @@ def record_batch_exact(cols: dict, schema_pa: "pa.Schema") -> "pa.RecordBatch":
 def _key_schema(df: DataFrame, keys: Sequence[str]) -> list[StructField]:
     by_name = {f.name: f for f in df.schema.fields}
     return [by_name[k] for k in keys]
+
+
+def _numeric_check(df: DataFrame, col: str, family: str) -> None:
+    """Plan-time check that ``col`` holds numbers, which ``family``
+    ingests as doubles."""
+    from pyspark.sql.types import BooleanType, NumericType
+
+    dt = df.schema[col].dataType
+    if not isinstance(dt, NumericType) or isinstance(dt, BooleanType):
+        raise TypeError(
+            f"column {col!r} has type {dt.simpleString()}; {family} ingests "
+            "numeric values only (cast explicitly)"
+        )
 
 
 def _column_views(batch: pa.RecordBatch, inputs: Sequence[str]):
@@ -279,21 +297,40 @@ def _group_slices(batch: pa.RecordBatch, keys: Sequence[str]):
 
 
 # ----------------------------------------------------------------------
-# batch sketch protocol
+# sketch records
 #
-# The engine hands a sketch whole batches: every callable below has a
-# per-group form (what a sketch module writes) and a batch form.  A
-# sketch may attach its own batch form as ``fn.batch`` (t-digest does:
-# tdigest_agg); the others get the per-group adapter here.
-#   fold:      fold(state, **{col: pa.Array})
-#              .batch(states, cols, rows, bounds)
-#   serialize: serialize(state) -> bytes | None
-#              .batch(states) -> list | pa.Array
-#   finalize:  finalize(blobs: list[bytes]) -> tuple
-#              .batch(blobs: pa.Array, rows, bounds) -> list of columns
-# ``rows``/``bounds`` are :func:`_group_rows`' output for the batch.
+# The engine drives every sketch family through one ``Sketch`` record.
+# Its forms take whole batches grouped by :func:`_group_rows`
+# (``rows``/``bounds`` as it returns them).  t-digest declares flat
+# batch forms (tdigest_agg); the other families declare per-group forms
+# and get their record from :func:`sketch_of`.
 # ----------------------------------------------------------------------
+class Sketch(NamedTuple):
+    """One sketch family, as the batch engine drives it.
+
+    * ``new()``: an empty state;
+    * ``fold(states, cols, rows, bounds)``: folds group g's rows of
+      ``cols`` (input name → pa.Array) into ``states[g]``;
+    * ``serialize(states)``: one blob per state, None for an empty one
+      (a list or a binary pa.Array);
+    * ``merge(blobs, rows, bounds)``: one blob per group, its non-NULL
+      blobs merged, None for a group without any;
+    * ``merged(blobs, rows, bounds)``: ``(groups, sketches)``, the
+      list of groups holding a non-NULL blob and an iterable of the
+      merged sketch of each, which :func:`_finalizer`'s estimators read.
+    """
+
+    new: Callable[[], Any]
+    fold: Callable[..., None]
+    serialize: Callable[[list], Any]
+    merge: Callable[..., Any]
+    merged: Callable[..., tuple]
+
+
 def _fold_each(fold):
+    """A batch fold from ``fold(state, **{col: pa.Array})``, which folds
+    one group's slice of a batch."""
+
     def fold_batch(states, cols, rows, bounds):
         for g, st in enumerate(states):
             lo, hi = int(bounds[g]), int(bounds[g + 1])
@@ -306,64 +343,93 @@ def _fold_each(fold):
     return fold_batch
 
 
-def _serialize_each(serialize):
-    return lambda states: [serialize(st) for st in states]
+def sketch_of(new, fold, from_bytes) -> Sketch:
+    """The record of a family declared by per-group forms: ``new()``,
+    ``fold(state, **{col: pa.Array})`` over one group's slice,
+    ``state.to_bytes()``, and ``from_bytes`` to decode the blobs that
+    :func:`merge_sketches` merges per group."""
 
-
-def _finalize_each(process):
-    def finalize_batch(blobs, rows, bounds):
+    def merged(blobs, rows, bounds):
         py = blobs.to_pylist()
         order = range(len(py)) if rows is None else rows.tolist()
-        tails = [
-            process([py[r] for r in order[lo:hi] if py[r] is not None])
-            for lo, hi in zip(bounds[:-1].tolist(), bounds[1:].tolist())
-        ]
-        return [list(col) for col in zip(*tails)]
+        groups, sketches = [], []
+        for g, (lo, hi) in enumerate(zip(bounds[:-1].tolist(), bounds[1:].tolist())):
+            m = merge_sketches(from_bytes(py[r]) for r in order[lo:hi] if py[r] is not None)
+            if m is not None:
+                groups.append(g)
+                sketches.append(m)
+        return groups, sketches
 
-    return finalize_batch
+    def merge(blobs, rows, bounds):
+        out = [None] * (len(bounds) - 1)
+        for g, m in zip(*merged(blobs, rows, bounds)):
+            out[g] = m.to_bytes()
+        return out
 
-
-def _batch(fn, adapter):
-    return getattr(fn, "batch", None) or adapter(fn)
-
-
-def _merge_bytes_process(merge_bytes):
-    """Finalizer of an intermediate (salt / fan-in) merge round: the
-    merged sketch per group, NULL for a group of only NULL sketches."""
-
-    def process(blobs):
-        return (merge_bytes(blobs) if blobs else None,)
-
-    if hasattr(merge_bytes, "batch"):
-        process.batch = lambda blobs, rows, bounds: [merge_bytes.batch(blobs, rows, bounds)]
-    return process
+    return Sketch(
+        new, _fold_each(fold), lambda states: [st.to_bytes() for st in states],
+        merge, merged,
+    )
 
 
-def fold_group_batches(batches, keys, inputs, new_state, fold, states=None):
+def union_of(from_bytes, col: str) -> Sketch:
+    """The record of a union aggregate over ``col``, a column of stored
+    blobs that ``from_bytes`` decodes.  A state is a list holding the
+    running union, or nothing: a stored sketch's parameters come with
+    its blob."""
+    base = sketch_of(list, None, from_bytes)
+
+    def fold(states, cols, rows, bounds):
+        for g, m in zip(*base.merged(cols[col], rows, bounds)):
+            states[g][:] = [merge_sketches([*states[g], m])]
+
+    def serialize(states):
+        return [st[0].to_bytes() if st else None for st in states]
+
+    return base._replace(fold=fold, serialize=serialize)
+
+
+def _finalizer(sketch: Sketch, estimate=None, empty=None):
+    """A FINALFUNC over a grouped batch of blobs: ``estimate`` of each
+    group's merged sketch, ``empty`` for a group without one; with no
+    ``estimate``, the merged sketch's blob.  A tuple ``empty`` spreads
+    the result over that many columns (``estimate`` returns tuples)."""
+    if estimate is None:
+        return lambda blobs, rows, bounds: [sketch.merge(blobs, rows, bounds)]
+
+    def fin(blobs, rows, bounds):
+        out = [empty] * (len(bounds) - 1)
+        for g, m in zip(*sketch.merged(blobs, rows, bounds)):
+            out[g] = estimate(m)
+        return [list(c) for c in zip(*out)] if isinstance(empty, tuple) else [out]
+
+    return fin
+
+
+def fold_group_batches(batches, keys, inputs, sketch: Sketch, states=None):
     """Fold RecordBatches into per-group sketch states — the one
-    group/fold loop shared by the mapInArrow partial phase and the
-    native-scan split reader: each batch is grouped once and folded
-    with the sketch's batch fold.  Pass ``states`` to accumulate across
-    multiple batch iterators."""
+    group/fold loop shared by the mapInArrow partial phase, the
+    native-scan split reader and the checkpoint builder: each batch is
+    grouped once and folded with the sketch's batch fold.  Pass
+    ``states`` to accumulate across multiple batch iterators."""
     states = {} if states is None else states
-    fold_batch = _batch(fold, _fold_each)
     for batch in batches:
         group_keys, rows, bounds = _group_rows(batch, keys)
         group_states = []
         for key in group_keys:
             st = states.get(key)
             if st is None:
-                st = states[key] = new_state()
+                st = states[key] = sketch.new()
             group_states.append(st)
         if group_states:
-            fold_batch(group_states, _column_views(batch, inputs), rows, bounds)
+            sketch.fold(group_states, _column_views(batch, inputs), rows, bounds)
     return states
 
 
-def _partials_batch(states: dict, key_names, serialize, out_schema) -> pa.RecordBatch:
+def _partials_batch(states: dict, key_names, sketch: Sketch, out_schema) -> pa.RecordBatch:
     """One output row per group: its key columns and serialized sketch."""
     cols = {k: [key[i] for key in states] for i, k in enumerate(key_names)}
-    cols[SKETCH_COL] = _batch(serialize, _serialize_each)(list(states.values()))
+    cols[SKETCH_COL] = sketch.serialize(list(states.values()))
     return record_batch_exact(cols, out_schema)
 
 
@@ -884,8 +950,7 @@ def _bundle_pieces(df, pieces, col_map, needed, batch_predicate, pred_part, pred
 def native_scan_ops(col_map, needed, pred_data=()):
     """Per-output ops and the physical parquet column list for a native
     scan (partition-synthesized outputs are not read; predicate-only
-    columns are).  Shared by the aggregate pipeline and the
-    checkpointed builder."""
+    columns are)."""
     ops = {c: col_map[c] for c in needed}
     sources = list(
         dict.fromkeys(
@@ -905,8 +970,7 @@ def _bundle_folder(
     col_map: dict[str, tuple[str, tuple | None]],
     keys: Sequence[str],
     inputs: Sequence[str],
-    new_state,
-    fold,
+    sketch: Sketch,
     predicate=None,
     pred_part: dict[str, str] | None = None,
     pred_data: Sequence[str] = (),
@@ -928,7 +992,7 @@ def _bundle_folder(
                 iter_bundle_batches(
                     bundle, needed, ops, sources, predicate, pred_part, pred_data
                 ),
-                keys, inputs, new_state, fold, states=states,
+                keys, inputs, sketch, states=states,
             )
         return states
 
@@ -936,7 +1000,7 @@ def _bundle_folder(
 
 
 def _native_partials(
-    spark, splits, fold_bundles, serialize, partial_schema: StructType,
+    spark, splits, fold_bundles, sketch: Sketch, partial_schema: StructType,
     grouped: bool,
 ) -> DataFrame:
     """Partial phase over pyarrow-read splits when the scan plans more
@@ -963,7 +1027,7 @@ def _native_partials(
         states = fold_bundles([splits[i] for i in idx])
         schema_pa = to_arrow_schema(partial_schema)
         if grouped or states or 0 not in idx:
-            yield _partials_batch(states, key_names, serialize, schema_pa)
+            yield _partials_batch(states, key_names, sketch, schema_pa)
         else:
             yield record_batch_exact({GROUP_SENTINEL: [0], SKETCH_COL: [None]}, schema_pa)
 
@@ -1029,7 +1093,7 @@ def _distinct_values(path: str, row_groups, col: str) -> int:
 
 
 def _native_single(
-    spark, splits, fold_bundles, serialize, finalize, partial_schema: StructType,
+    spark, splits, fold_bundles, sketch: Sketch, finalize, partial_schema: StructType,
     result_schema: StructType, result_fields: Sequence[StructField],
 ) -> DataFrame:
     """The whole aggregate as ONE task for a scan of at most one split:
@@ -1042,7 +1106,6 @@ def _native_single(
     ``partial_schema`` is the key columns + the sketch column.
     """
     keys = [f.name for f in partial_schema.fields[:-1]]
-    finalize = _batch(finalize, _finalize_each)
 
     def scan_one(batches):
         from pyspark.sql.pandas.types import to_arrow_schema
@@ -1052,7 +1115,7 @@ def _native_single(
         states = fold_bundles(splits)
         partial_pa = to_arrow_schema(partial_schema)
         if keys or states:
-            partial = _partials_batch(states, keys, serialize, partial_pa)
+            partial = _partials_batch(states, keys, sketch, partial_pa)
         else:
             partial = record_batch_exact({SKETCH_COL: [None]}, partial_pa)
         yield _finalize_row_batch(
@@ -1283,13 +1346,10 @@ def sketch_groupby_arrow(
     df: DataFrame,
     keys: Sequence[str],
     inputs: Sequence[str],
-    new_state: Callable[[], Any],
-    fold: Callable[..., None],
-    serialize: Callable[[Any], bytes | None],
-    finalize: Callable[[list[bytes]], tuple],
+    sketch: Sketch,
+    finalize: Callable[..., list],
     result_fields: Sequence[StructField],
     salt: int | None = None,
-    merge_bytes: Callable[[list[bytes]], bytes | None] | None = None,
 ) -> DataFrame:
     """partial(mapInArrow) → [salted merge] → merge+finalize; or, when
     the native scan plans at most one split of at most
@@ -1297,14 +1357,14 @@ def sketch_groupby_arrow(
     scan+fold+finalize in one task (no Exchange, no merge stage; salt
     is a no-op there).
 
-    ``fold(state, **{col: pa.Array})`` folds one group-slice of one
-    batch into the state; slices arrive as pyarrow Arrays.
+    ``sketch`` folds the ``inputs`` columns and merges partials (salt
+    and fan-in rounds); ``finalize(blobs, rows, bounds)`` turns each
+    group's partials into its ``result_fields`` columns
+    (:func:`_finalizer`).
     """
     keys = list(keys)
     inputs = list(inputs)
     grouped = bool(keys)
-    if salt and salt > 1 and merge_bytes is None:
-        raise ValueError("salt requires merge_bytes")
     native = (
         _native_parquet_splits(df, list(dict.fromkeys([*keys, *inputs])))
         if NATIVE_SCAN
@@ -1328,12 +1388,12 @@ def sketch_groupby_arrow(
     if native is not None:
         splits, col_map, predicate, pred_part, pred_data = native
         fold_bundles = _bundle_folder(
-            col_map, keys, inputs, new_state, fold,
+            col_map, keys, inputs, sketch,
             predicate=predicate, pred_part=pred_part, pred_data=pred_data,
         )
         if _single_task(splits, keys, col_map):
             result = _native_single(
-                df.sparkSession, splits, fold_bundles, serialize, finalize,
+                df.sparkSession, splits, fold_bundles, sketch, finalize,
                 StructType(key_fields + [_SKETCH_FIELD]), result_schema,
                 result_fields,
             )
@@ -1341,7 +1401,7 @@ def sketch_groupby_arrow(
             return result
         n_input_parts = len(splits)
         partials = _native_partials(
-            df.sparkSession, splits, fold_bundles, serialize, partial_schema, grouped
+            df.sparkSession, splits, fold_bundles, sketch, partial_schema, grouped
         )
     else:
 
@@ -1350,9 +1410,9 @@ def sketch_groupby_arrow(
 
             # ungrouped: _group_rows skips the encode/sort entirely (keys
             # is the constant sentinel column)
-            states = fold_group_batches(batches, keys, inputs, new_state, fold)
+            states = fold_group_batches(batches, keys, inputs, sketch)
             yield _partials_batch(
-                states, group_keys, serialize, to_arrow_schema(partial_schema)
+                states, group_keys, sketch, to_arrow_schema(partial_schema)
             )
 
         # the count only matters for the ungrouped fan-in
@@ -1362,12 +1422,13 @@ def sketch_groupby_arrow(
             # SQL semantics: an ungrouped aggregate over zero rows still
             # yields one row (NULL result).  One literal seed row with a
             # NULL sketch guarantees the sentinel group reaches the
-            # merge pass even when the input is empty; merge ignores
-            # NULL sketches otherwise.  Built from range(1) + typed
-            # literals — pure JVM, unlike createDataFrame's per-query
-            # Python→JVM conversion pass.
+            # merge pass even when the input is empty (or has no
+            # partitions); merge ignores NULL sketches otherwise.  Built
+            # from a one-partition range + typed literals — pure JVM,
+            # one task, unlike createDataFrame's per-query Python→JVM
+            # conversion pass.
             seed = (
-                df.sparkSession.range(1)
+                df.sparkSession.range(0, 1, 1, 1)
                 .select(
                     *[
                         F.lit(0 if f.name == GROUP_SENTINEL else None)
@@ -1379,6 +1440,7 @@ def sketch_groupby_arrow(
             )
             partials = partials.unionByName(seed)
 
+    merge = _finalizer(sketch)
     if salt and salt > 1:
         # intermediate merge round keyed by (keys, partition_id % salt):
         # caps reducer fan-in for hot groups before the final merge
@@ -1386,14 +1448,11 @@ def sketch_groupby_arrow(
             "__salt__", F.pmod(F.spark_partition_id(), F.lit(salt))
         )
         partials = _merge_pass(
-            salted,
-            [*group_keys, "__salt__"],
-            partial_schema,
-            _merge_bytes_process(merge_bytes),
+            salted, [*group_keys, "__salt__"], partial_schema, merge,
             emit_keys=group_keys,
         )
 
-    if not grouped and merge_bytes is not None:
+    if not grouped:
         # tree-merge rounds for global aggregation: round count is fixed
         # at plan time from the input partition count (no actions), and
         # each round's bucket column caps a merge task's fan-in at
@@ -1406,10 +1465,7 @@ def sketch_groupby_arrow(
                 "__fanin__", F.pmod(F.spark_partition_id(), F.lit(width))
             )
             partials = _merge_pass(
-                bucketed,
-                [*group_keys, "__fanin__"],
-                partial_schema,
-                _merge_bytes_process(merge_bytes),
+                bucketed, [*group_keys, "__fanin__"], partial_schema, merge,
                 emit_keys=group_keys,
             )
 
@@ -1434,7 +1490,7 @@ def _finalize_row_batch(
 ) -> pa.RecordBatch:
     """Finalize a batch in which every row holds its group's ONE sketch:
     the ``keys`` columns pass through, each row's sketch becomes its
-    result columns (``finalize`` is a batch finalizer)."""
+    result columns (``finalize`` as :func:`_finalizer` builds it)."""
     cols: dict[str, Any] = {
         k: batch.column(batch.schema.get_field_index(k)) for k in keys
     }
@@ -1454,7 +1510,7 @@ def finalize_rows(
     df: DataFrame,
     keys: Sequence[str],
     out_schema: StructType,
-    process: Callable[[list[bytes]], tuple],
+    finalize: Callable[..., list],
     result_fields: Sequence[StructField],
 ) -> DataFrame:
     """Per-row finalize for inputs that already hold exactly ONE sketch
@@ -1464,7 +1520,6 @@ def finalize_rows(
     merge stage."""
     keys = list(keys)
     tail_fields = list(result_fields)
-    finalize = _batch(process, _finalize_each)
 
     def run_rows(batches):
         from pyspark.sql.pandas.types import to_arrow_schema
@@ -1480,7 +1535,7 @@ def _merge_pass(
     partials: DataFrame,
     group_keys: Sequence[str],
     out_schema: StructType,
-    process: Callable[[list[bytes]], tuple],
+    finalize: Callable[..., list],
     emit_keys: Sequence[str],
     result_fields: Sequence[StructField] | None = None,
 ) -> DataFrame:
@@ -1496,8 +1551,6 @@ def _merge_pass(
         if result_fields is not None
         else [f for f in out_schema.fields if f.name not in emit_keys]
     )
-
-    finalize = _batch(process, _finalize_each)
 
     def run_merge(batches):
         from pyspark.sql.pandas.types import to_arrow_schema

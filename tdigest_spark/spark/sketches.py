@@ -26,11 +26,17 @@ from pyspark.sql.types import (
     StructField,
 )
 
-from tdigest_spark.kernel.bloom import Bloom, merge_all_bloom
-from tdigest_spark.kernel.countmin import CountMin, merge_all_cm
-from tdigest_spark.kernel.hll import HLL, merge_all_hll
-from tdigest_spark.kernel.kll import KLL, merge_all_kll
-from tdigest_spark.spark.arrow_agg import sketch_groupby_arrow
+from tdigest_spark.kernel.bloom import Bloom
+from tdigest_spark.kernel.countmin import CountMin
+from tdigest_spark.kernel.hll import HLL
+from tdigest_spark.kernel.kll import KLL
+from tdigest_spark.spark.arrow_agg import (
+    _finalizer,
+    _numeric_check,
+    sketch_groupby_arrow,
+    sketch_of,
+    union_of,
+)
 
 _HASH_COL = "__h64__"
 
@@ -58,8 +64,12 @@ def _hash_np(col) -> np.ndarray:
 # ----------------------------------------------------------------------
 # HLL
 # ----------------------------------------------------------------------
-def _fold_hll(st, **cols):
+def _fold_hashes(st, **cols):
     st.add_hashes(_hash_np(cols[_HASH_COL]))
+
+
+def _hll(p: int):
+    return sketch_of(lambda: HLL(p), _fold_hashes, HLL.from_bytes)
 
 
 def hll_sketch(
@@ -67,17 +77,10 @@ def hll_sketch(
     result_col: str = "hll", salt: int | None = None,
 ) -> DataFrame:
     """Build a serialized HLL per group (mergeable, re-aggregatable)."""
-    df = _with_hash(df, col, keep=keys)
+    hll = _hll(p)
     return sketch_groupby_arrow(
-        df, keys, [_HASH_COL], lambda: HLL(p), _fold_hll,
-        lambda s: s.to_bytes(),
-        lambda blobs: (merge_all_hll(HLL.from_bytes(b) for b in blobs).to_bytes()
-                       if blobs else None,),
-        [StructField(result_col, BinaryType(), True)],
-        salt=salt,
-        merge_bytes=lambda blobs: merge_all_hll(
-            HLL.from_bytes(b) for b in blobs
-        ).to_bytes(),
+        _with_hash(df, col, keep=keys), keys, [_HASH_COL], hll, _finalizer(hll),
+        [StructField(result_col, BinaryType(), True)], salt=salt,
     )
 
 
@@ -86,20 +89,11 @@ def hll_count_distinct(
     result_col: str = "approx_distinct", salt: int | None = None,
 ) -> DataFrame:
     """Approximate COUNT(DISTINCT col) per group; σ ≈ 1.04/√(2^p)."""
-    df = _with_hash(df, col, keep=keys)
-
-    def fin(blobs):
-        m = merge_all_hll(HLL.from_bytes(b) for b in blobs) if blobs else None
-        return (int(m.cardinality()) if m else 0,)
-
+    hll = _hll(p)
     return sketch_groupby_arrow(
-        df, keys, [_HASH_COL], lambda: HLL(p), _fold_hll,
-        lambda s: s.to_bytes(), fin,
-        [StructField(result_col, LongType(), True)],
-        salt=salt,
-        merge_bytes=lambda blobs: merge_all_hll(
-            HLL.from_bytes(b) for b in blobs
-        ).to_bytes(),
+        _with_hash(df, col, keep=keys), keys, [_HASH_COL], hll,
+        _finalizer(hll, lambda m: int(m.cardinality()), 0),
+        [StructField(result_col, LongType(), True)], salt=salt,
     )
 
 
@@ -118,28 +112,9 @@ def hll_union_agg(
     result_col: str = "hll",
 ) -> DataFrame:
     """Re-aggregate stored HLL sketches (rollup path)."""
-
-    class Acc:
-        __slots__ = ("s",)
-
-        def __init__(self):
-            self.s = None
-
-    def fold(st, **cols):
-        for blob in cols[sketch_col].to_pylist():
-            if blob is None:
-                continue
-            h = HLL.from_bytes(bytes(blob))
-            if st.s is None:
-                st.s = h
-            else:
-                st.s.merge(h)
-
+    union = union_of(HLL.from_bytes, sketch_col)
     return sketch_groupby_arrow(
-        df, keys, [sketch_col], Acc, fold,
-        lambda st: st.s.to_bytes() if st.s is not None else None,
-        lambda blobs: (merge_all_hll(HLL.from_bytes(b) for b in blobs).to_bytes()
-                       if blobs else None,),
+        df, keys, [sketch_col], union, _finalizer(union),
         [StructField(result_col, BinaryType(), True)],
     )
 
@@ -175,16 +150,10 @@ def countmin_sketch(
     (e/width)·N with prob 1-(1/e)^depth."""
     df = _with_hash(df, col, keep=[*keys, *([count_col] if count_col else [])])
     inputs = [_HASH_COL] + ([count_col] if count_col else [])
+    cm = sketch_of(lambda: CountMin(width, depth), _cm_fold(count_col), CountMin.from_bytes)
     return sketch_groupby_arrow(
-        df, keys, inputs, lambda: CountMin(width, depth), _cm_fold(count_col),
-        lambda s: s.to_bytes(),
-        lambda blobs: (merge_all_cm(CountMin.from_bytes(b) for b in blobs).to_bytes()
-                       if blobs else None,),
-        [StructField(result_col, BinaryType(), True)],
-        salt=salt,
-        merge_bytes=lambda blobs: merge_all_cm(
-            CountMin.from_bytes(b) for b in blobs
-        ).to_bytes(),
+        df, keys, inputs, cm, _finalizer(cm),
+        [StructField(result_col, BinaryType(), True)], salt=salt,
     )
 
 
@@ -246,21 +215,10 @@ def bloom_filter(
     result_col: str = "bloom", salt: int | None = None,
 ) -> DataFrame:
     """Build a serialized Bloom filter of the values per group."""
-    df = _with_hash(df, col, keep=keys)
-
-    def fold(st, **cols):
-        st.add_hashes(_hash_np(cols[_HASH_COL]))
-
+    bloom = sketch_of(lambda: Bloom(m, k), _fold_hashes, Bloom.from_bytes)
     return sketch_groupby_arrow(
-        df, keys, [_HASH_COL], lambda: Bloom(m, k), fold,
-        lambda s: s.to_bytes(),
-        lambda blobs: (merge_all_bloom(Bloom.from_bytes(b) for b in blobs).to_bytes()
-                       if blobs else None,),
-        [StructField(result_col, BinaryType(), True)],
-        salt=salt,
-        merge_bytes=lambda blobs: merge_all_bloom(
-            Bloom.from_bytes(b) for b in blobs
-        ).to_bytes(),
+        _with_hash(df, col, keep=keys), keys, [_HASH_COL], bloom, _finalizer(bloom),
+        [StructField(result_col, BinaryType(), True)], salt=salt,
     )
 
 
@@ -291,41 +249,25 @@ def bloom_might_contain(sketch: Column, probe: Column) -> Column:
 # ----------------------------------------------------------------------
 # KLL
 # ----------------------------------------------------------------------
-def _numeric_check(df, col):
-    from pyspark.sql.types import BooleanType, NumericType
+def _kll(df: DataFrame, value_col: str, k: int):
+    _numeric_check(df, value_col, "KLL")
 
-    dt = df.schema[col].dataType
-    if not isinstance(dt, NumericType) or isinstance(dt, BooleanType):
-        raise TypeError(
-            f"column {col!r} has type {dt.simpleString()}; KLL ingests "
-            "numeric values only (cast explicitly)"
-        )
-
-
-def _kll_fold(value_col):
     def fold(st, **cols):
         from tdigest_spark.kernel.arrownp import arrow_floats
 
         st.add_values(arrow_floats(cols[value_col]))
 
-    return fold
+    return sketch_of(lambda: KLL(k), fold, KLL.from_bytes)
 
 
 def kll_sketch(
     df: DataFrame, value_col: str, keys: Sequence[str] = (), k: int = 200,
     result_col: str = "kll", salt: int | None = None,
 ) -> DataFrame:
-    _numeric_check(df, value_col)
+    kll = _kll(df, value_col, k)
     return sketch_groupby_arrow(
-        df, keys, [value_col], lambda: KLL(k), _kll_fold(value_col),
-        lambda s: s.to_bytes(),
-        lambda blobs: (merge_all_kll(KLL.from_bytes(b) for b in blobs).to_bytes()
-                       if blobs else None,),
-        [StructField(result_col, BinaryType(), True)],
-        salt=salt,
-        merge_bytes=lambda blobs: merge_all_kll(
-            KLL.from_bytes(b) for b in blobs
-        ).to_bytes(),
+        df, keys, [value_col], kll, _finalizer(kll),
+        [StructField(result_col, BinaryType(), True)], salt=salt,
     )
 
 
@@ -335,23 +277,11 @@ def kll_quantile(
 ) -> DataFrame:
     """Approximate quantile with uniform rank error ~O(1/k) — the
     cross-check estimator next to tdigest_percentile."""
-
-    _numeric_check(df, value_col)
-
-    def fin(blobs):
-        m = merge_all_kll(KLL.from_bytes(b) for b in blobs) if blobs else None
-        return (float(m.quantile(q)) if m and m.n else None,)
-
+    kll = _kll(df, value_col, k)
     return sketch_groupby_arrow(
-        df, keys, [value_col], lambda: KLL(k), _kll_fold(value_col),
-        lambda s: s.to_bytes(), fin,
-        [StructField(result_col, DoubleType(), True)],
-        salt=salt,
-        # without merge_bytes, salt raised at plan time and the
-        # ungrouped bounded fan-in tree merge was disabled
-        merge_bytes=lambda blobs: merge_all_kll(
-            KLL.from_bytes(b) for b in blobs
-        ).to_bytes(),
+        df, keys, [value_col], kll,
+        _finalizer(kll, lambda m: float(m.quantile(q)) if m.n else None),
+        [StructField(result_col, DoubleType(), True)], salt=salt,
     )
 
 

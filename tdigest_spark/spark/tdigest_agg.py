@@ -48,27 +48,36 @@ from tdigest_spark.kernel.tdigest import (
     merge_into,
 )
 from tdigest_spark.kernel.arrownp import arrow_floats, arrow_ints
-from tdigest_spark.spark.arrow_agg import sketch_groupby_arrow
+from tdigest_spark.spark.arrow_agg import (
+    Sketch,
+    _finalizer,
+    _fold_each,
+    _numeric_check,
+    sketch_groupby_arrow,
+)
 
 # expansion chunk bound for the (value, count) ingestion path
 _EXPAND_CHUNK = 1 << 20
 
 
 # ----------------------------------------------------------------------
-# folds: one Arrow group-slice → kernel state.  Each also carries a
-# ``.batch`` form that the engine calls with a whole batch grouped by
-# ``arrow_agg._group_rows`` (see the batch sketch protocol there); it
-# leaves every digest exactly as the per-group fold would.
+# folds.  The per-group forms (one Arrow group-slice → one state) are
+# the reference the batch tests compare against; the engine calls the
+# ``_many`` forms over a whole batch grouped by ``arrow_agg._group_rows``,
+# which leave every digest exactly as the per-group forms would.
 # ----------------------------------------------------------------------
 def _fold_values(value_col: str):
     def fold(st: TDigest, **cols) -> None:
         st.add_values(arrow_floats(cols[value_col]))
 
-    def fold_batch(states, cols, rows, bounds) -> None:
+    return fold
+
+
+def _fold_values_many(value_col: str):
+    def fold(states, cols, rows, bounds) -> None:
         v = arrow_floats(cols[value_col])
         add_values_many(states, v if rows is None else v[rows], bounds)
 
-    fold.batch = fold_batch
     return fold
 
 
@@ -142,7 +151,11 @@ def _fold_digests(digest_col: str):
                 st.d = TDigest(st.compression or incoming.compression)
             st.d.merge_digest(incoming)
 
-    def fold_batch(states, cols, rows, bounds) -> None:
+    return fold
+
+
+def _fold_digests_many(digest_col: str):
+    def fold(states, cols, rows, bounds) -> None:
         groups, compression, seg, (means, counts, offsets) = _decode_groups(
             cols[digest_col], rows, bounds
         )
@@ -152,7 +165,6 @@ def _fold_digests(digest_col: str):
                 st.d = TDigest(st.compression or c)
         merge_into([st.d for st in accs], seg, means, counts, offsets)
 
-    fold.batch = fold_batch
     return fold
 
 
@@ -175,7 +187,7 @@ def _with_nulls(enc: pa.Array, present: np.ndarray, n: int) -> pa.Array:
     return enc.take(pa.array(idx, mask=idx < 0))
 
 
-def _serialize_batch(states) -> pa.Array:
+def _serialize_many(states) -> pa.Array:
     """``_serialize_td`` for every state as one binary array: one
     segmented compaction, one encode."""
     ds = [_digest_of(st) for st in states]
@@ -185,9 +197,6 @@ def _serialize_batch(states) -> pa.Array:
         *compact_many(ds), [d.count for d in ds], [d.compression for d in ds]
     )
     return _with_nulls(enc, np.flatnonzero(live), len(states))
-
-
-_serialize_td.batch = _serialize_batch
 
 
 def _merged(sketches: list[bytes]) -> TDigest | None:
@@ -205,101 +214,83 @@ def _merged_groups(blobs, rows, bounds):
     return groups, (*flat, count, compression)
 
 
-def _merge_bytes_td(sketches: list[bytes]) -> bytes | None:
-    m = _merged(sketches)
-    return m.to_bytes() if m is not None else None
-
-
-def _merge_bytes_batch(blobs, rows, bounds) -> pa.Array:
+def _merge_many(blobs, rows, bounds) -> pa.Array:
     groups, merged = _merged_groups(blobs, rows, bounds)
     return _with_nulls(encode_many(*merged), groups, bounds.size - 1)
 
 
-_merge_bytes_td.batch = _merge_bytes_batch
+def _merged_many(blobs, rows, bounds):
+    """The groups holding a digest and, lazily, each one's merged
+    ``TDigest`` for an estimator (``Sketch.merged``)."""
+    groups, (means, counts, offsets, count, compression) = _merged_groups(
+        blobs, rows, bounds
+    )
 
-
-# ----------------------------------------------------------------------
-# finalizers (reference FINALFUNCs, tdigest.c:2064-2191, 3364-3428)
-# ----------------------------------------------------------------------
-def _finalizer(estimate, empty=None):
-    """A FINALFUNC: ``estimate(merged digest)`` per group, ``empty`` for
-    a group without digests; ``.batch`` finalizes a grouped batch."""
-
-    def fin(sketches):
-        d = _merged(sketches)
-        return (estimate(d) if d is not None else empty,)
-
-    def fin_batch(blobs, rows, bounds):
-        out = [empty] * (bounds.size - 1)
-        groups, (means, counts, offsets, count, compression) = _merged_groups(
-            blobs, rows, bounds
-        )
-        for g, lo, hi, n, c in zip(
-            groups.tolist(), offsets[:-1].tolist(), offsets[1:].tolist(),
-            count.tolist(), compression.tolist(),
+    def digests():
+        for lo, hi, n, c in zip(
+            offsets[:-1].tolist(), offsets[1:].tolist(), count.tolist(),
+            compression.tolist(),
         ):
             d = TDigest(c)
             d.means, d.counts, d.count = means[lo:hi], counts[lo:hi], n
-            out[g] = estimate(d)
-        return [out]
+            yield d
 
-    fin.batch = fin_batch
-    return fin
+    return groups.tolist(), digests()
 
 
-def _fin_percentile(q: float):
-    return _finalizer(lambda d: float(d.quantile(q)))
+def _tdigest(new, fold) -> Sketch:
+    """The t-digest record: each aggregate brings its ``new`` state and
+    batch ``fold``; serialize and merge are the shared flat passes."""
+    return Sketch(new, fold, _serialize_many, _merge_many, _merged_many)
 
 
-def _fin_percentile_array(qs):
+def _values_sketch(value_col: str, compression: int) -> Sketch:
+    """The record of a t-digest over the raw values of ``value_col``."""
+    return _tdigest(lambda: TDigest(compression), _fold_values_many(value_col))
+
+
+# ----------------------------------------------------------------------
+# estimators of the merged digest (reference FINALFUNCs,
+# tdigest.c:2064-2191, 3364-3428), for ``arrow_agg._finalizer``
+# ----------------------------------------------------------------------
+def _percentiles(qs):
     qs = list(qs)
-    return _finalizer(lambda d: d.quantiles(qs).tolist())
+    return lambda d: d.quantiles(qs).tolist()
 
 
-def _fin_percentile_of(v: float):
-    return _finalizer(lambda d: float(d.quantile_of(v)))
+def _count(d) -> int:
+    return int(d.count)
 
 
-def _fin_percentile_of_array(vs):
-    vs = list(vs)
-    return _finalizer(lambda d: d.quantiles_of(vs).tolist())
-
-
-_fin_digest = _finalizer(lambda d: d.to_bytes())
-_fin_digest.batch = lambda blobs, rows, bounds: [_merge_bytes_batch(blobs, rows, bounds)]
-
-_fin_count = _finalizer(lambda d: int(d.count), 0)
-
-
-def _fin_trimmed(low: float, high: float, want_avg: bool):
+def _trimmed(low: float, high: float, want_avg: bool):
     if want_avg:
-        return _finalizer(lambda d: d.trimmed_avg(low, high))
-    return _finalizer(lambda d: d.trimmed_sum(low, high))
+        return lambda d: d.trimmed_avg(low, high)
+    return lambda d: d.trimmed_sum(low, high)
+
+
+def _recompressed(estimate, compression: int):
+    """``estimate`` of the merged digest downsampled to ``compression``
+    (a ``partial_compression`` build)."""
+
+    def est(d):
+        final = TDigest(compression)
+        final.merge_digest(d)
+        return estimate(_merged([final.to_bytes()]))
+
+    return est
 
 
 # ----------------------------------------------------------------------
 # dispatch helpers
 # ----------------------------------------------------------------------
-def _numeric_check(df, col):
-    from pyspark.sql.types import BooleanType, NumericType
-
-    dt = df.schema[col].dataType
-    if not isinstance(dt, NumericType) or isinstance(dt, BooleanType):
-        raise TypeError(
-            f"column {col!r} has type {dt.simpleString()}; t-digest ingests "
-            "numeric values only (cast explicitly, the reference supports "
-            "double precision — README.md:777-780)"
-        )
-
-
 def _run_values(
-    df, keys, value_col, count_col, compression, fin, fields, salt,
-    partial_compression=None,
+    df, keys, value_col, count_col, compression, estimate, fields, salt,
+    partial_compression=None, empty=None,
 ):
     check_compression(compression)  # fail at plan time, not in the executor
-    _numeric_check(df, value_col)
+    _numeric_check(df, value_col, "t-digest")
     if count_col is not None:
-        _numeric_check(df, count_col)
+        _numeric_check(df, count_col, "t-digest")
     build_c = compression
     if partial_compression is not None:
         # accuracy boost: build/merge partials at higher resolution,
@@ -310,32 +301,24 @@ def _run_values(
         if partial_compression < compression:
             raise ValueError("partial_compression must be >= compression")
         build_c = partial_compression
-
-        inner = fin
-
-        def fin(blobs):  # noqa: F811 — deliberate wrap
-            m = _merged(blobs)
-            if m is None:
-                return inner([])
-            final = TDigest(compression)
-            final.merge_digest(m)
-            return inner([final.to_bytes()])
+        estimate = _recompressed(estimate, compression)
 
     if count_col is None:
-        fold = _fold_values(value_col)
+        sketch = _values_sketch(value_col, build_c)
         inputs = [value_col]
     else:
-        fold = _fold_value_counts(value_col, count_col, build_c)
+        fold = _fold_each(_fold_value_counts(value_col, count_col, build_c))
+        sketch = _tdigest(lambda: TDigest(build_c), fold)
         inputs = [value_col, count_col]
     return sketch_groupby_arrow(
-        df, keys, inputs,
-        lambda: TDigest(build_c),
-        fold, _serialize_td, fin, fields,
-        salt=salt, merge_bytes=_merge_bytes_td,
+        df, keys, inputs, sketch, _finalizer(sketch, estimate, empty), fields,
+        salt=salt,
     )
 
 
-def _run_digests(df, keys, digest_col, compression, fin, fields, salt):
+def _run_digests(df, keys, digest_col, compression, estimate, fields, salt, empty=None):
+    sketch = _tdigest(lambda: _DigestAcc(compression), _fold_digests_many(digest_col))
+    fin = _finalizer(sketch, estimate, empty)
     marker = getattr(df, "_sketch_single_row_groups", None)
     if keys and not salt and compression is None and marker is not None:
         # the input is one of our own aggregate outputs: exactly one
@@ -369,32 +352,30 @@ def _run_digests(df, keys, digest_col, compression, fin, fields, salt):
             )
         out._sketch_single_row_groups = tuple(keys)
         return out
-    return sketch_groupby_arrow(
-        df, keys, [digest_col],
-        lambda: _DigestAcc(compression),
-        _fold_digests(digest_col), _serialize_td, fin, fields,
-        salt=salt, merge_bytes=_merge_bytes_td,
-    )
+    return sketch_groupby_arrow(df, keys, [digest_col], sketch, fin, fields, salt=salt)
 
 
-def _percentile_fin_fields(quantiles, result_col):
+def _percentile_fields(quantiles, result_col):
     if np.isscalar(quantiles):
         check_percentiles([quantiles])
-        return _fin_percentile(float(quantiles)), [
+        q = float(quantiles)
+        return lambda d: float(d.quantile(q)), [
             StructField(result_col, DoubleType(), True)
         ]
     check_percentiles(quantiles)
-    return _fin_percentile_array(quantiles), [
+    return _percentiles(quantiles), [
         StructField(result_col, ArrayType(DoubleType()), True)
     ]
 
 
-def _percentile_of_fin_fields(values, result_col):
+def _percentile_of_fields(values, result_col):
     if np.isscalar(values):
-        return _fin_percentile_of(float(values)), [
+        v = float(values)
+        return lambda d: float(d.quantile_of(v)), [
             StructField(result_col, DoubleType(), True)
         ]
-    return _fin_percentile_of_array(values), [
+    vs = list(values)
+    return lambda d: d.quantiles_of(vs).tolist(), [
         StructField(result_col, ArrayType(DoubleType()), True)
     ]
 
@@ -415,8 +396,8 @@ def tdigest_percentile(
 ) -> DataFrame:
     """tdigest_percentile(value [, count], accuracy, quantile[s]) —
     SURVEY §2.1.1 #1-4."""
-    fin, fields = _percentile_fin_fields(quantiles, result_col)
-    return _run_values(df, keys, value_col, count_col, compression, fin, fields,
+    estimate, fields = _percentile_fields(quantiles, result_col)
+    return _run_values(df, keys, value_col, count_col, compression, estimate, fields,
                        salt, partial_compression)
 
 
@@ -433,8 +414,8 @@ def tdigest_percentile_of(
 ) -> DataFrame:
     """tdigest_percentile_of(value [, count], accuracy, hypothetical[s])
     — SURVEY §2.1.1 #5-8 (relative rank / inverse CDF)."""
-    fin, fields = _percentile_of_fin_fields(values, result_col)
-    return _run_values(df, keys, value_col, count_col, compression, fin, fields,
+    estimate, fields = _percentile_of_fields(values, result_col)
+    return _run_values(df, keys, value_col, count_col, compression, estimate, fields,
                        salt, partial_compression)
 
 
@@ -451,7 +432,7 @@ def tdigest(
     SURVEY §2.1.1 #9-10; the pre-aggregation workhorse."""
     fields = [StructField(result_col, BinaryType(), True)]
     return _run_values(
-        df, keys, value_col, count_col, compression, _fin_digest, fields, salt
+        df, keys, value_col, count_col, compression, None, fields, salt
     )
 
 
@@ -472,7 +453,7 @@ def tdigest_avg(
     fields = [StructField(result_col, DoubleType(), True)]
     return _run_values(
         df, keys, value_col, count_col, compression,
-        _fin_trimmed(low, high, True), fields, salt,
+        _trimmed(low, high, True), fields, salt,
     )
 
 
@@ -493,7 +474,7 @@ def tdigest_sum(
     fields = [StructField(result_col, DoubleType(), True)]
     return _run_values(
         df, keys, value_col, count_col, compression,
-        _fin_trimmed(low, high, False), fields, salt,
+        _trimmed(low, high, False), fields, salt,
     )
 
 
@@ -510,8 +491,8 @@ def tdigest_percentile_digests(
     salt: int | None = None,
 ) -> DataFrame:
     """tdigest_percentile(tdigest, quantile[s]) — SURVEY §2.1.2 #15-16."""
-    fin, fields = _percentile_fin_fields(quantiles, result_col)
-    return _run_digests(df, keys, digest_col, compression, fin, fields, salt)
+    estimate, fields = _percentile_fields(quantiles, result_col)
+    return _run_digests(df, keys, digest_col, compression, estimate, fields, salt)
 
 
 def tdigest_percentile_of_digests(
@@ -524,8 +505,8 @@ def tdigest_percentile_of_digests(
     salt: int | None = None,
 ) -> DataFrame:
     """tdigest_percentile_of(tdigest, hypothetical[s]) — §2.1.2 #17-18."""
-    fin, fields = _percentile_of_fin_fields(values, result_col)
-    return _run_digests(df, keys, digest_col, compression, fin, fields, salt)
+    estimate, fields = _percentile_of_fields(values, result_col)
+    return _run_digests(df, keys, digest_col, compression, estimate, fields, salt)
 
 
 def tdigest_union_agg(
@@ -539,7 +520,7 @@ def tdigest_union_agg(
     """tdigest(tdigest) — digest-union aggregate, the tree-merge
     primitive (§2.1.2 #19)."""
     fields = [StructField(result_col, BinaryType(), True)]
-    return _run_digests(df, keys, digest_col, compression, _fin_digest, fields, salt)
+    return _run_digests(df, keys, digest_col, compression, None, fields, salt)
 
 
 def tdigest_avg_digests(
@@ -556,7 +537,7 @@ def tdigest_avg_digests(
     check_trim(low, high)
     fields = [StructField(result_col, DoubleType(), True)]
     return _run_digests(
-        df, keys, digest_col, compression, _fin_trimmed(low, high, True), fields, salt
+        df, keys, digest_col, compression, _trimmed(low, high, True), fields, salt
     )
 
 
@@ -574,7 +555,7 @@ def tdigest_sum_digests(
     check_trim(low, high)
     fields = [StructField(result_col, DoubleType(), True)]
     return _run_digests(
-        df, keys, digest_col, compression, _fin_trimmed(low, high, False), fields, salt
+        df, keys, digest_col, compression, _trimmed(low, high, False), fields, salt
     )
 
 
@@ -642,7 +623,7 @@ def tdigest_count_agg(
     tdigest_count (tdigest.c:2941-2947) lifted to an aggregate."""
     fields = [StructField(result_col, LongType(), True)]
     if digest_col is not None:
-        return _run_digests(df, keys, digest_col, None, _fin_count, fields, None)
+        return _run_digests(df, keys, digest_col, None, _count, fields, None, empty=0)
     return _run_values(
-        df, keys, value_col, count_col, compression, _fin_count, fields, None
+        df, keys, value_col, count_col, compression, _count, fields, None, empty=0
     )

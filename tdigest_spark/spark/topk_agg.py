@@ -10,8 +10,6 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-import numpy as np
-import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -23,17 +21,18 @@ from pyspark.sql.types import (
     StructField,
 )
 
-from tdigest_spark.kernel.reservoir import Reservoir, merge_all_reservoir
-from tdigest_spark.kernel.topk import SpaceSaving, merge_all_topk
-from tdigest_spark.spark.arrow_agg import sketch_groupby_arrow
-
-_HASH_COL = "__h64__"
+from tdigest_spark.kernel.reservoir import Reservoir
+from tdigest_spark.kernel.topk import SpaceSaving
+from tdigest_spark.spark.arrow_agg import _finalizer, sketch_groupby_arrow, sketch_of
+from tdigest_spark.spark.sketches import _HASH_COL, _fold_hashes, _with_hash
 
 
 # ----------------------------------------------------------------------
 # SpaceSaving top-k
 # ----------------------------------------------------------------------
-def _topk_fold(item_col: str):
+def _topk(df: DataFrame, item_col: str, keys: Sequence[str], m: int):
+    """The item column cast to string, and the SpaceSaving record."""
+
     def fold(st: SpaceSaving, **cols) -> None:
         col = cols[item_col].drop_null()
         if len(col) == 0:
@@ -43,7 +42,10 @@ def _topk_fold(item_col: str):
         counts = vc.field("counts").to_pylist()
         st.add_items([str(i) for i in items], counts)
 
-    return fold
+    df = df.select(*dict.fromkeys([*keys, item_col])).withColumn(
+        item_col, F.col(item_col).cast("string")
+    )
+    return df, sketch_of(lambda: SpaceSaving(m), fold, SpaceSaving.from_bytes)
 
 
 def topk_sketch(
@@ -52,19 +54,10 @@ def topk_sketch(
 ) -> DataFrame:
     """Serialized SpaceSaving sketch of item frequencies per group.
     Exact while #distinct <= m; otherwise error <= N/m one-sided."""
-    df = df.select(*dict.fromkeys([*keys, item_col])).withColumn(
-        item_col, F.col(item_col).cast("string")
-    )
+    df, topk = _topk(df, item_col, keys, m)
     return sketch_groupby_arrow(
-        df, keys, [item_col], lambda: SpaceSaving(m), _topk_fold(item_col),
-        lambda s: s.to_bytes(),
-        lambda blobs: (merge_all_topk(SpaceSaving.from_bytes(b) for b in blobs).to_bytes()
-                       if blobs else None,),
-        [StructField(result_col, BinaryType(), True)],
-        salt=salt,
-        merge_bytes=lambda blobs: merge_all_topk(
-            SpaceSaving.from_bytes(b) for b in blobs
-        ).to_bytes(),
+        df, keys, [item_col], topk, _finalizer(topk),
+        [StructField(result_col, BinaryType(), True)], salt=salt,
     )
 
 
@@ -74,14 +67,9 @@ def topk(
 ) -> DataFrame:
     """Top-k items per group: (keys..., rank int, item string,
     count_est long, error long), rank by (count desc, item asc)."""
-    df = df.select(*dict.fromkeys([*keys, item_col])).withColumn(
-        item_col, F.col(item_col).cast("string")
-    )
+    df, sketch = _topk(df, item_col, keys, m)
 
-    def fin(blobs):
-        s = merge_all_topk(SpaceSaving.from_bytes(b) for b in blobs) if blobs else None
-        if s is None:
-            return (None, None, None)
+    def top(s):
         rows = s.top(k)
         return (
             [it for it, _, _ in rows],
@@ -95,11 +83,8 @@ def topk(
         StructField("errors", ArrayType(LongType()), True),
     ]
     packed = sketch_groupby_arrow(
-        df, keys, [item_col], lambda: SpaceSaving(m), _topk_fold(item_col),
-        lambda s: s.to_bytes(), fin, fields, salt=salt,
-        merge_bytes=lambda blobs: merge_all_topk(
-            SpaceSaving.from_bytes(b) for b in blobs
-        ).to_bytes(),
+        df, keys, [item_col], sketch, _finalizer(sketch, top, (None, None, None)),
+        fields, salt=salt,
     )
     exploded = packed.select(
         *keys,
@@ -117,15 +102,6 @@ def topk(
 # ----------------------------------------------------------------------
 # reservoir sample
 # ----------------------------------------------------------------------
-def _reservoir_fold():
-    def fold(st: Reservoir, **cols) -> None:
-        from tdigest_spark.kernel.arrownp import arrow_ints
-
-        st.add_hashes(arrow_ints(cols[_HASH_COL].drop_null()))
-
-    return fold
-
-
 def reservoir_sample_hashes(
     df: DataFrame, col: str, k: int, keys: Sequence[str] = (),
     seed: int = 42, result_col: str = "sample_hashes",
@@ -134,24 +110,16 @@ def reservoir_sample_hashes(
     xxhash64 ids of the sampled rows (join back on xxhash64(col) to
     materialize payloads).  Bottom-k construction → merge-exact and
     partitioning-independent."""
-    hashed = df.withColumn(
-        _HASH_COL, F.when(F.col(col).isNotNull(), F.xxhash64(F.col(col)))
-    ).select(*dict.fromkeys([*keys, _HASH_COL]))
 
-    def fin(blobs):
-        r = merge_all_reservoir(Reservoir.from_bytes(b) for b in blobs) if blobs else None
-        if r is None:
-            return (None, 0)
-        return ([int(h) for h in r.sample_hashes()], int(r.n))
+    def sample(r):
+        return [int(h) for h in r.sample_hashes()], int(r.n)
 
+    reservoir = sketch_of(lambda: Reservoir(k, seed), _fold_hashes, Reservoir.from_bytes)
     fields = [
         StructField(result_col, ArrayType(LongType()), True),
         StructField("n_seen", LongType(), True),
     ]
     return sketch_groupby_arrow(
-        hashed, keys, [_HASH_COL], lambda: Reservoir(k, seed), _reservoir_fold(),
-        lambda s: s.to_bytes(), fin, fields,
-        merge_bytes=lambda blobs: merge_all_reservoir(
-            Reservoir.from_bytes(b) for b in blobs
-        ).to_bytes(),
+        _with_hash(df, col, keep=keys), keys, [_HASH_COL], reservoir,
+        _finalizer(reservoir, sample, (None, 0)), fields,
     )

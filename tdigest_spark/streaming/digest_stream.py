@@ -47,7 +47,7 @@ from pyspark.sql.types import (
 
 from tdigest_spark.kernel.tdigest import TDigest
 from tdigest_spark.spark.arrow_agg import SKETCH_COL, _partials_batch, fold_group_batches
-from tdigest_spark.spark.tdigest_agg import _fold_values, _serialize_td
+from tdigest_spark.spark.tdigest_agg import _values_sketch
 
 # ObjectHashAggregate (collect_set/collect_list partials) falls back to
 # a sort-based aggregate once a task sees more than this many groups
@@ -503,20 +503,18 @@ def _tdigest_partials(
     stream_df: DataFrame, keys: list, value_col: str, compression: int
 ) -> DataFrame:
     """The ``combine_partials=True`` partial phase: ``mapInArrow`` over
-    the batch engine's ``fold_group_batches`` with t-digest's batch
-    value fold, so each scan task emits one (keys..., partial digest)
-    row per key it saw — NULL for a key whose values were all NaN."""
+    the batch engine's ``fold_group_batches`` with t-digest's record,
+    so each scan task emits one (keys..., partial digest) row per key
+    it saw — NULL for a key whose values were all NaN."""
     key_fields = [f for f in stream_df.schema.fields if f.name in keys]
     schema = StructType(key_fields + [StructField(SKETCH_COL, BinaryType(), True)])
-    fold = _fold_values(value_col)
+    sketch = _values_sketch(value_col, compression)
 
     def build_partials(batches):
         from pyspark.sql.pandas.types import to_arrow_schema
 
-        states = fold_group_batches(
-            batches, keys, [value_col], lambda: TDigest(compression), fold
-        )
-        yield _partials_batch(states, keys, _serialize_td, to_arrow_schema(schema))
+        states = fold_group_batches(batches, keys, [value_col], sketch)
+        yield _partials_batch(states, keys, sketch, to_arrow_schema(schema))
 
     return stream_df.select(*keys, value_col).mapInArrow(build_partials, schema)
 

@@ -14,12 +14,14 @@ from tdigest_spark.checkpoint import (
     lineage_summary,
     verify_lineage,
 )
+from tdigest_spark.kernel.tdigest import TDigest, deserialize
 from tdigest_spark.pages import (
     extract_text,
     extract_text_col,
     generate_pages,
     render_html,
 )
+from tdigest_spark.spark import arrow_agg
 
 
 @pytest.fixture(scope="module")
@@ -158,3 +160,38 @@ def test_write_batch_digests_replay_idempotent(spark, tmp_path_factory):
         F.sum(tdigest_count(F.col("tdigest"))).alias("n")
     ).collect()[0]["n"]
     assert total == 5_000
+
+
+@pytest.mark.parametrize("native", [True, False], ids=["native", "catalyst"])
+def test_checkpoint_rows_are_scalar_digests(spark, tmp_path, monkeypatch, native):
+    """Over a one-split input, each checkpoint row holds the digest that
+    ``TDigest.add_values`` builds from its group's values, byte for
+    byte, and lineage read off that blob; an all-NaN group has a NULL
+    digest and zero rows, centroids and bytes."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rng = np.random.default_rng(7)
+    k = np.repeat(["big", "small", "nan"], [6000, 40, 25])
+    v = rng.lognormal(0.0, 1.0, k.size)
+    v[k == "nan"] = np.nan
+    v[rng.random(k.size) < 0.02] = np.nan
+    path = str(tmp_path / "in.parquet")
+    pq.write_table(pa.table({"k": k, "v": v}), path)
+    df = spark.read.parquet(path)
+    assert len(arrow_agg._native_parquet_splits(df, ["k", "v"])[0]) == 1
+    monkeypatch.setattr(arrow_agg, "NATIVE_SCAN", native)
+    rows = build_partial_digests(df, ["k"], "v", 100, str(tmp_path / "ckpt")).collect()
+    assert sorted(r["k"] for r in rows) == ["big", "nan", "small"]
+    for r in rows:
+        d = TDigest(100)
+        d.add_values(v[k == r["k"]])
+        assert r["split_id"] == 0
+        if r["k"] == "nan":
+            assert r["digest"] is None
+            assert (r["n_rows"], r["n_centroids"], r["n_bytes"]) == (0, 0, 0)
+            continue
+        blob = bytes(r["digest"])
+        assert blob == d.to_bytes()
+        means, _, count, _ = deserialize(blob)
+        assert (r["n_rows"], r["n_centroids"], r["n_bytes"]) == (count, means.size, len(blob))

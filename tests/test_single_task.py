@@ -289,12 +289,36 @@ def test_multi_split_queries_leave_no_files(spark, two_files):
 def test_salt_is_a_no_op_on_one_split(spark, one_file):
     salted = _rows(tdigest(one_file, "v", 100, keys=["k"], salt=4))
     assert salted == _rows(tdigest(one_file, "v", 100, keys=["k"]))
-    # the plan-time check still holds on this route
-    with pytest.raises(ValueError, match="salt requires merge_bytes"):
-        arrow_agg.sketch_groupby_arrow(
-            one_file, ["k"], ["v"], list, lambda st, **c: None,
-            lambda st: None, lambda blobs: (None,), [], salt=4,
+
+
+def _stage_tasks(spark, df):
+    """``df``'s rows and the task count of each stage its jobs ran, in
+    stage order."""
+    sc = spark.sparkContext
+    group = f"one_task_{next(_GROUPS)}"
+    sc.setJobGroup(group, "stage task counts")
+    try:
+        rows = df.collect()
+        tracker = sc.statusTracker()
+        stages = sorted(
+            s for j in tracker.getJobIdsForGroup(group) for s in tracker.getJobInfo(j).stageIds
         )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return rows, [tracker.getStageInfo(s).numTasks for s in stages]
+
+
+def test_catalyst_seed_is_one_task(spark, monkeypatch):
+    """Ungrouped on the Catalyst route, the seed row that answers an
+    empty input adds one task to the partial stage, and still gives one
+    NULL row over an empty input, also one with no partitions."""
+    monkeypatch.setattr(arrow_agg, "NATIVE_SCAN", False)
+    df = spark.range(0, 300, 1, 3).select(F.col("id").cast("double").alias("v"))
+    none = spark.createDataFrame(spark.sparkContext.emptyRDD(), df.schema)
+    for inp in (df, df.filter(F.col("v") < 0), none):
+        rows, tasks = _stage_tasks(spark, tdigest_percentile(inp, "v", 100, 0.5))
+        assert len(rows) == 1 and (rows[0]["percentile"] is None) == (inp is not df)
+        assert tasks[0] == inp.rdd.getNumPartitions() + 1, tasks
 
 
 def test_one_task_result_keeps_single_row_marker(spark, one_file):
@@ -323,7 +347,7 @@ def test_float_keys_group_as_spark_across_batches():
         for x in ([-0.0, float("nan"), 1.0], [float("nan"), 0.0], [float("nan")])
     ]
     states = arrow_agg.fold_group_batches(
-        batches, ["x"], ["v"], list, lambda st, v: st.append(len(v))
+        batches, ["x"], ["v"], arrow_agg.sketch_of(list, lambda st, v: st.append(len(v)), None)
     )
     assert len(states) == 3
     by_key = {repr(k[0]): sum(st) for k, st in states.items()}

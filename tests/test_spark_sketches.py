@@ -5,6 +5,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMALL
+from tdigest_spark.kernel.kll import KLL
+from tdigest_spark.kernel.topk import SpaceSaving
+from tdigest_spark.spark import arrow_agg
 from tdigest_spark.spark.sketches import (
     bloom_filter,
     bloom_might_contain,
@@ -19,6 +22,7 @@ from tdigest_spark.spark.sketches import (
     kll_rank,
     kll_sketch,
 )
+from tdigest_spark.spark.topk_agg import reservoir_sample_hashes, topk, topk_sketch
 
 
 @pytest.fixture(scope="module")
@@ -206,3 +210,82 @@ def test_reservoir_negative_seed():
     assert r.sample_hashes().size == 10
     back = Reservoir.from_bytes(r.to_bytes())
     assert np.array_equal(back.sample_hashes(), r.sample_hashes())
+
+
+# ----------------------------------------------------------------------
+# merge rounds: every family merges, so salt and the ungrouped fan-in
+# rounds hold for all of them
+# ----------------------------------------------------------------------
+class _Near(tuple):
+    """(n, estimate) of a KLL merge, which depends on merge order: equal
+    n, estimates within test_kll_quantile_salted's tolerance."""
+
+    def __eq__(self, other):
+        return self[0] == other[0] and abs(self[1] - other[1]) <= 0.1 * max(1.0, abs(self[1]))
+
+
+def _kll_n_median(r):
+    s = KLL.from_bytes(bytes(r["kll"]))
+    return _Near((s.n, s.quantile(0.5)))
+
+
+# name -> (builder, takes salt=, what to compare of a row).  Rows are
+# compared whole, byte for byte, unless a reader is given: KLL results
+# are compared _Near, and a SpaceSaving blob lists its items in merge
+# order (its counts are exact below capacity, as here).
+_MERGE_FAMILIES = {
+    "hll_sketch": (lambda df, **kw: hll_sketch(df, "user_id", p=10, **kw), True, None),
+    "hll_count_distinct":
+        (lambda df, **kw: hll_count_distinct(df, "user_id", p=10, **kw), True, None),
+    "hll_union_agg": (
+        lambda df, **kw: hll_union_agg(
+            hll_sketch(df, "user_id", keys=["event_type", "event_id"], p=10), "hll", **kw
+        ),
+        False, None,
+    ),
+    "countmin_sketch":
+        (lambda df, **kw: countmin_sketch(df, "user_id", width=64, depth=3, **kw), True, None),
+    "bloom_filter":
+        (lambda df, **kw: bloom_filter(df, "user_id", m=1 << 12, k=3, **kw), True, None),
+    "kll_sketch": (lambda df, **kw: kll_sketch(df, "value", **kw), True, _kll_n_median),
+    "kll_quantile": (
+        lambda df, **kw: kll_quantile(df, "value", 0.5, **kw), True,
+        lambda r: _Near((None, r["quantile"])),
+    ),
+    "topk_sketch": (
+        lambda df, **kw: topk_sketch(df, "event_type", m=64, **kw), True,
+        lambda r: SpaceSaving.from_bytes(bytes(r["topk"])).counts,
+    ),
+    "topk": (lambda df, **kw: topk(df, "event_type", 3, m=64, **kw), True, None),
+    "reservoir_sample_hashes":
+        (lambda df, **kw: reservoir_sample_hashes(df, "user_id", 16, **kw), False, None),
+}
+
+
+def _read(df, keys, read):
+    """(group key, compared value) per row, in a stable order."""
+    out = [(tuple(r[k] for k in keys), read(r) if read else tuple(r)) for r in df.collect()]
+    return sorted(out, key=lambda kv: repr(kv[0] if read else kv))
+
+
+@pytest.mark.parametrize("name", list(_MERGE_FAMILIES))
+def test_merge_rounds_match_plain_plan(events, monkeypatch, name):
+    """Salted (salt=4, grouped) and ungrouped with bounded fan-in
+    rounds (MERGE_FANOUT=2 over a Catalyst input of 3 partitions),
+    each against the plain plan of the same input."""
+    build, takes_salt, read = _MERGE_FAMILIES[name]
+    df = events.repartition(3)
+
+    def exchanges(out):
+        return out._jdf.queryExecution().executedPlan().toString().count("Exchange")
+
+    if takes_salt:
+        plain = build(df, keys=["event_type"])
+        salted = build(df, keys=["event_type"], salt=4)
+        assert exchanges(salted) > exchanges(plain)
+        assert _read(plain, ["event_type"], read) == _read(salted, ["event_type"], read)
+    plain = build(df)
+    monkeypatch.setattr(arrow_agg, "MERGE_FANOUT", 2)
+    fanned = build(df)
+    assert exchanges(fanned) > exchanges(plain)
+    assert _read(plain, [], read) == _read(fanned, [], read)

@@ -1,8 +1,7 @@
 """The flat many-digest t-digest path against the per-group scalar kernel.
 
 The engine folds, merges and encodes all groups of a batch at once
-(``fold.batch`` / ``serialize.batch`` / ``finalize.batch`` in
-tdigest_agg, over ``decode_many`` / ``compact_many`` / ``fold_chunks``
+(the batch forms of t-digest's ``Sketch`` record in tdigest_agg, over ``decode_many`` / ``compact_many`` / ``fold_chunks``
 / ``merge_into`` / ``encode_many`` in the kernel).  Every digest it
 produces must be byte-identical to folding each group on its own with
 ``TDigest.add_values`` / ``merge_digest`` / ``to_bytes``, the scalar
@@ -147,7 +146,7 @@ def test_values_fold_matches_scalar(seed, ngroups, big, nbatches, compression):
     rng = np.random.default_rng(seed)
     batches = _batches(rng, ngroups, big, nbatches)
     states = A.fold_group_batches(
-        batches, ["g"], ["v"], lambda: TDigest(compression), T._fold_values("v")
+        batches, ["g"], ["v"], T._values_sketch("v", compression)
     )
     ref: dict = {}
     for b in batches:
@@ -158,7 +157,7 @@ def test_values_fold_matches_scalar(seed, ngroups, big, nbatches, compression):
             ref.setdefault((key,), TDigest(compression)).add_values(part)
     assert set(states) == set(ref)
     keys = list(states)
-    got = T._serialize_td.batch([states[k] for k in keys]).to_pylist()
+    got = T._serialize_many([states[k] for k in keys]).to_pylist()
     want = [ref[k].to_bytes() if ref[k].count else None for k in keys]
     assert got == want
     assert [states[k].ncompactions for k in keys] == [ref[k].ncompactions for k in keys]
@@ -225,37 +224,42 @@ def test_digest_paths_match_scalar(seed, ngroups, per_group):
     for compression in (None, 50):
         states = {}
         parts = np.array_split(np.arange(len(blobs)), int(rng.integers(1, 4)))
+        sketch = T._tdigest(lambda: T._DigestAcc(compression), T._fold_digests_many("d"))
         for part in parts:
             A.fold_group_batches(
-                [batch.take(pa.array(part))], ["g"], ["d"],
-                lambda: T._DigestAcc(compression), fold, states=states,
+                [batch.take(pa.array(part))], ["g"], ["d"], sketch, states=states,
             )
         ref = {}
         for key, blob_list in zip(keys, groups):
             acc = ref[key] = T._DigestAcc(compression)
             fold(acc, d=pa.array(blob_list, pa.binary()))
-        assert T._serialize_td.batch([states[k] for k in keys]).to_pylist() == [
+        assert T._serialize_many([states[k] for k in keys]).to_pylist() == [
             T._serialize_td(ref[k]) for k in keys
         ]
         assert [states[k].d and states[k].d.ncompactions for k in keys] == [
             ref[k].d and ref[k].d.ncompactions for k in keys
         ]
 
-    # merge pass finalizers and the intermediate-round merge
+    # merge pass finalizers and the intermediate-round merge, against
+    # the estimate of each group's scalar merge (``_merged``)
     sketches = batch.column(1)
     live = [[b for b in grp if b is not None] for grp in groups]
-    merged = [T._fin_digest(x)[0] for x in live]
-    assert T._fin_digest.batch(sketches, rows, bounds)[0].to_pylist() == merged
-    assert T._merge_bytes_td.batch(sketches, rows, bounds).to_pylist() == [
+
+    def scalar(estimate, empty=None):
+        return [empty if d is None else estimate(d) for d in map(T._merged, live)]
+
+    merged = scalar(TDigest.to_bytes)
+    assert A._finalizer(sketch)(sketches, rows, bounds)[0].to_pylist() == merged
+    assert sketch.merge(sketches, rows, bounds).to_pylist() == [
         m if x else None for m, x in zip(merged, live)
     ]
     qs = [0.0, 0.01, 0.5, 0.99, 1.0]
-    got = T._fin_percentile_array(qs).batch(sketches, rows, bounds)[0]
-    want = [T._fin_percentile_array(qs)(x)[0] for x in live]
+    got = A._finalizer(sketch, T._percentiles(qs))(sketches, rows, bounds)[0]
+    want = scalar(T._percentiles(qs))
     assert [None if g is None else np.asarray(g).tobytes() for g in got] == [
         None if w is None else np.asarray(w).tobytes() for w in want
     ]
-    assert T._fin_count.batch(sketches, rows, bounds)[0] == [T._fin_count(x)[0] for x in live]
+    assert A._finalizer(sketch, T._count, 0)(sketches, rows, bounds)[0] == scalar(T._count, 0)
 
 
 def _raw_blob(compression, pairs):
@@ -280,13 +284,13 @@ def test_equal_means_keep_their_input_order():
             gid.append(g)
     sketches = pa.array(blobs, pa.binary())
     bounds = np.arange(0, len(blobs) + 1, 4)
-    got = T._fin_digest.batch(sketches, None, bounds)[0].to_pylist()
-    want = [T._fin_digest(blobs[lo:lo + 4])[0] for lo in bounds[:-1]]
+    got = T._merge_many(sketches, None, bounds).to_pylist()
+    want = [T._merged(blobs[lo:lo + 4]).to_bytes() for lo in bounds[:-1]]
     assert got == want
     assert len({w[24:40] for w in want}) == 2  # -0.0 first, or 0.0 first
     states = [T._DigestAcc(None) for _ in range(64)]
-    T._fold_digests("d").batch(states, {"d": sketches}, None, bounds)
-    assert T._serialize_td.batch(states).to_pylist() == want
+    T._fold_digests_many("d")(states, {"d": sketches}, None, bounds)
+    assert T._serialize_many(states).to_pylist() == want
 
 
 def test_merge_all_compression_rule_in_batch():
@@ -295,7 +299,7 @@ def test_merge_all_compression_rule_in_batch():
     a = TDigest(25).to_bytes()
     b = tdigest_from_values(np.arange(500.0), 100).to_bytes()
     sketches = pa.array([a, b, b, a], pa.binary())
-    out = T._fin_digest.batch(sketches, None, np.array([0, 2, 4]))[0].to_pylist()
+    out = T._merge_many(sketches, None, np.array([0, 2, 4])).to_pylist()
     assert out == [merge_all([TDigest.from_bytes(a), TDigest.from_bytes(b)]).to_bytes(),
                    merge_all([TDigest.from_bytes(b), TDigest.from_bytes(a)]).to_bytes()]
     assert TDigest.from_bytes(out[0]).compression == 25
