@@ -129,7 +129,7 @@ def build_partial_digests(
     if native is not None:
         splits, col_map, predicate, pred_part, pred_data = native
         fold_bundles = _bundle_folder(
-            col_map, keys, [value_col], sketch,
+            col_map, key_fields, [value_col], sketch,
             predicate=predicate, pred_part=pred_part, pred_data=pred_data,
         )
 

@@ -2,12 +2,14 @@
 
 The engine consumes raw Arrow RecordBatches, never pandas:
 
-* key columns become integer codes in C (pyarrow dictionary encoding,
-  or the values themselves for small-range integer keys) — Python sees
-  one object per DISTINCT key
-* each batch is grouped once (``_group_rows``): a bincount scan for few
-  groups, else a stable argsort of the packed codes, giving the rows of
-  every group as one permutation plus group bounds
+* key columns become integer codes in C — Python sees one object per
+  DISTINCT key: the native scan reads string/binary keys as parquet
+  dictionaries and groups on their codes, so no row is hashed; other
+  keys are dictionary-encoded, or are their own codes when they are
+  small-range integers
+* each batch is grouped once (``_group_rows``): a stable argsort of the
+  packed codes, one radix pass when they fit 16 bits, giving the rows
+  of every group as one permutation plus group bounds
 * the sketch then folds the whole grouped batch through its ``Sketch``
   record (below), the one declaration of a family the engine reads:
   t-digest folds, merges and encodes all groups in one segmented NumPy
@@ -37,7 +39,7 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import BinaryType, IntegerType, StructField, StructType
+from pyspark.sql.types import BinaryType, IntegerType, StringType, StructField, StructType
 
 from tdigest_spark.kernel import merge_sketches
 
@@ -162,13 +164,6 @@ def _column_views(batch: pa.RecordBatch, inputs: Sequence[str]):
 # falls back to a stable lexsort over per-key codes
 _RADIX_MAX = 1 << 62
 
-# low-cardinality slicing: when the radix bound is small, a bincount +
-# one boolean scan per distinct code replaces the stable argsort —
-# O(k·n) SIMD passes beat the O(n log n) gather, and the row order per
-# group (ascending row index) is identical to the stable sort's
-_BINCOUNT_MAX = 4096
-_SCAN_MAX_GROUPS = 128
-
 # the one NaN every decoded float key uses: NaN != NaN and its hash is
 # per object, so a fresh NaN per batch would split one group into one
 # state per batch wherever states are keyed by decoded tuples
@@ -184,12 +179,75 @@ def _decode_key(code: int, radix, dicts) -> tuple:
     return tuple(reversed(key))
 
 
+def _key_codes(col: pa.Array):
+    """One key column as ``(codes, values)``: row i is NULL when
+    ``codes[i] == 0``, else ``values[codes[i] - 1]``; only the distinct
+    values become Python objects."""
+    import pyarrow.compute as pc
+
+    from tdigest_spark.kernel.arrownp import arrow_ints
+
+    if pa.types.is_integer(col.type):
+        # small-range integer keys (enum-ish group columns): the values
+        # are their own codes after a min shift — one SIMD min/max pass
+        # + a subtract beats the hash-based dictionary_encode ~5x on
+        # 1M-row batches
+        mm = pc.min_max(col)
+        mn = mm["min"].as_py()
+        mx = mm["max"].as_py()
+        if mn is not None and (mx - mn) < 2048 and -(1 << 62) < mn and mx < 1 << 62:
+            # widen first: the null slot mn - 1 may not fit the
+            # column's own type (int8 -128 → -129)
+            codes = arrow_ints(col.cast(pa.int64()), fill=mn - 1) - (mn - 1)
+            return codes, list(range(mn, mx + 1))
+    indices = None
+    if pa.types.is_dictionary(col.type):
+        # a parquet dictionary column: rows keep their codes and only
+        # the entries are hashed, to find repeats (Arrow does not
+        # promise unique entries)
+        indices, col = col.indices, col.dictionary
+    floating = pa.types.is_floating(col.type)
+    if floating:
+        # Spark groups -0.0 with 0.0; x + 0.0 turns -0.0 into 0.0
+        # and leaves every other value (NaN, null) as it is
+        col = pc.add(col, pa.scalar(0.0, col.type))
+    dcol = col.dictionary_encode()
+    values = dcol.dictionary.to_pylist()
+    # nulls → code -1 → shift to a dedicated slot; the fill_null +
+    # zero-copy route avoids pyarrow's pandas fallback (a ~0.18 s
+    # pandas import on every fresh python worker)
+    codes = arrow_ints(dcol.indices, fill=-1) + 1
+    if floating:
+        # one NaN object in every batch, as Spark's groupBy treats all
+        # NaNs as one; NaNs of another sign or payload encode apart, so
+        # their rows take the first NaN's code
+        values = [_NAN if v != v else v for v in values]
+        nans = [i + 1 for i, v in enumerate(values) if v is _NAN]
+        if len(nans) > 1:
+            slot = np.arange(len(values) + 1)
+            slot[nans] = nans[0]
+            codes = slot[codes]
+    if indices is None:
+        return codes, values
+    row_codes = arrow_ints(indices, fill=-1) + 1
+    if not np.array_equal(codes, np.arange(1, len(codes) + 1)):
+        # repeated, NULL or NaN entries: one value, one code
+        row_codes = np.concatenate(([0], codes))[row_codes]
+    return row_codes, values
+
+
 def _group_rows(batch: pa.RecordBatch, keys: Sequence[str]):
     """Group a batch by ``keys`` with only O(#distinct) Python objects:
     returns ``(group_keys, rows, bounds)`` where group g holds rows
     ``rows[bounds[g]:bounds[g+1]]`` in ascending row order (``rows`` is
     None when the batch order already is the grouped order, i.e. one
-    group or none)."""
+    group or none).
+
+    Each key becomes integer codes (:func:`_key_codes`; a dictionary
+    column, as the native scan reads string keys, keeps its own), packed
+    into one radix code per row.  Up to 2^16 packed codes fit uint16,
+    which NumPy's stable argsort sorts in one radix pass; wider codes
+    take an int64 stable argsort, and codes past int64 a lexsort."""
     n = batch.num_rows
     if not keys:
         return [(0,)], None, np.array([0, n])
@@ -197,49 +255,14 @@ def _group_rows(batch: pa.RecordBatch, keys: Sequence[str]):
         # keyed aggregate over an empty batch has no groups; the radix
         # boundary arithmetic below would index into an empty array
         return [], None, np.zeros(1, dtype=np.int64)
-    from tdigest_spark.kernel.arrownp import arrow_ints
-
     code_arrays = []
     dicts = []
     for k in keys:
         col = batch.column(batch.schema.get_field_index(k))
         if isinstance(col, pa.ChunkedArray):  # pragma: no cover
             col = col.combine_chunks()
-        if pa.types.is_integer(col.type):
-            # small-range integer keys (enum-ish group columns): the
-            # values are their own codes after a min shift — one SIMD
-            # min/max pass + a subtract beats the hash-based
-            # dictionary_encode ~5x on 1M-row batches
-            import pyarrow.compute as pc
-
-            mm = pc.min_max(col)
-            mn = mm["min"].as_py()
-            mx = mm["max"].as_py()
-            if mn is not None and (mx - mn) < 2048 and -(1 << 62) < mn and mx < 1 << 62:
-                # widen first: the null slot mn - 1 may not fit the
-                # column's own type (int8 -128 → -129)
-                code_arrays.append(
-                    arrow_ints(col.cast(pa.int64()), fill=mn - 1) - (mn - 1)
-                )
-                dicts.append(list(range(mn, mx + 1)))
-                continue
-        floating = pa.types.is_floating(col.type)
-        if floating:
-            import pyarrow.compute as pc
-
-            # Spark groups -0.0 with 0.0; x + 0.0 turns -0.0 into 0.0
-            # and leaves every other value (NaN, null) as it is
-            col = pc.add(col, pa.scalar(0.0, col.type))
-        dcol = col.dictionary_encode()
-        # nulls in keys → code -1 → shift to a dedicated slot; the
-        # fill_null + zero-copy route avoids pyarrow's pandas fallback
-        # (a ~0.18 s pandas import on every fresh python worker)
-        code_arrays.append(arrow_ints(dcol.indices, fill=-1) + 1)
-        values = dcol.dictionary.to_pylist()
-        if floating:
-            # the encode keeps one NaN per batch; make it the same object
-            # in every batch, as Spark's groupBy treats all NaNs as one
-            values = [_NAN if v != v else v for v in values]
+        codes, values = _key_codes(col)
+        code_arrays.append(codes)
         dicts.append(values)
     radix = [len(d) + 1 for d in dicts]
     total = 1
@@ -266,18 +289,19 @@ def _group_rows(batch: pa.RecordBatch, keys: Sequence[str]):
     codes = code_arrays[0]
     for i in range(1, len(keys)):
         codes = codes * radix[i] + code_arrays[i]
-    if total <= _BINCOUNT_MAX:
+    if total <= 1 << 16:
         cnt = np.bincount(codes, minlength=total)
         nz = np.flatnonzero(cnt)
+        group_keys = [_decode_key(int(code), radix, dicts) for code in nz]
         if nz.size == 1:
             # whole batch is one group: no gather at all
-            return [_decode_key(int(nz[0]), radix, dicts)], None, np.array([0, n])
-        if nz.size <= _SCAN_MAX_GROUPS:
-            return (
-                [_decode_key(int(code), radix, dicts) for code in nz],
-                np.concatenate([np.flatnonzero(codes == code) for code in nz]),
-                np.concatenate(([0], np.cumsum(cnt[nz]))),
-            )
+            return group_keys, None, np.array([0, n])
+        narrow = codes.astype(np.uint8 if total <= 1 << 8 else np.uint16)
+        return (
+            group_keys,
+            np.argsort(narrow, kind="stable"),
+            np.concatenate(([0], np.cumsum(cnt[nz]))),
+        )
     order = np.argsort(codes, kind="stable")
     sorted_codes = codes[order]
     bounds = np.concatenate(([0], np.flatnonzero(np.diff(sorted_codes)) + 1, [n]))
@@ -966,9 +990,21 @@ def native_scan_ops(col_map, needed, pred_data=()):
     return ops, sources
 
 
+def _dictionary_keys(ops, key_fields: Sequence[StructField], pred_data: Sequence[str]):
+    """The string/binary key sources the native scan reads as parquet
+    dictionaries: grouping takes a key's dictionary codes as they are,
+    where a plain column would be hashed row by row.  A source that a
+    filter, an input or ``length()`` also reads keeps its plain values
+    (``pc.utf8_length`` has no dictionary kernel)."""
+    keys = {f.name for f in key_fields if isinstance(f.dataType, (StringType, BinaryType))}
+    plain = dict.fromkeys(src for c, (src, op) in ops.items() if c in keys and op is None)
+    other = {src for c, (src, op) in ops.items() if c not in keys or op is not None}
+    return [src for src in plain if src not in other and src not in pred_data]
+
+
 def _bundle_folder(
     col_map: dict[str, tuple[str, tuple | None]],
-    keys: Sequence[str],
+    key_fields: Sequence[StructField],
     inputs: Sequence[str],
     sketch: Sketch,
     predicate=None,
@@ -978,19 +1014,22 @@ def _bundle_folder(
     """Executor-side scan + fold of native split bundles: the returned
     function reads each bundle with :func:`iter_bundle_batches` (the
     residual ``predicate`` evaluated as an Arrow mask per batch, its
-    data columns read alongside the projected sources) and folds every
-    batch into one per-group state dict (``keys`` empty = ungrouped)."""
-    keys = list(keys)
+    data columns read alongside the projected sources, string keys as
+    dictionaries) and folds every batch into one per-group state dict
+    (``key_fields`` empty = ungrouped)."""
+    keys = [f.name for f in key_fields]
     inputs = list(inputs)
     needed = list(dict.fromkeys([*keys, *inputs]))
     ops, sources = native_scan_ops(col_map, needed, pred_data)
+    dictionary = _dictionary_keys(ops, key_fields, pred_data)
 
     def fold_bundles(bundles) -> dict:
         states: dict[tuple, Any] = {}
         for bundle in bundles:
             fold_group_batches(
                 iter_bundle_batches(
-                    bundle, needed, ops, sources, predicate, pred_part, pred_data
+                    bundle, needed, ops, sources, predicate, pred_part, pred_data,
+                    dictionary=dictionary,
                 ),
                 keys, inputs, sketch, states=states,
             )
@@ -1070,8 +1109,8 @@ def _group_bound(bundle, keys: Sequence[str], col_map) -> int:
 def _distinct_values(path: str, row_groups, col: str) -> int:
     """Distinct values (NULL counted) of one column over a file's row
     groups, read on the driver once per file version.  A string column
-    is read as its parquet dictionary: the entries bound its distinct
-    values without hashing a row."""
+    is read as its parquet dictionaries: the distinct entries over all
+    row groups are its distinct values, found without hashing a row."""
     st = os.stat(path)
     memo = (path, st.st_size, st.st_mtime_ns, row_groups, col)
     n = _DISTINCT_CACHE.get(memo)
@@ -1083,7 +1122,11 @@ def _distinct_values(path: str, row_groups, col: str) -> int:
         rgs = range(pf.num_row_groups) if row_groups is None else row_groups
         data = pf.read_row_groups(list(rgs), columns=[col]).column(0)
         if pa.types.is_dictionary(data.type):
-            n = sum(len(c.dictionary) for c in data.chunks) + (data.null_count > 0)
+            # one dictionary per row group: a value repeats across them
+            entries = pa.chunked_array(
+                [c.dictionary for c in data.chunks], data.type.value_type
+            )
+            n = pc.count_distinct(entries).as_py() + (data.null_count > 0)
         else:
             n = pc.count_distinct(data, mode="all").as_py()
         if len(_DISTINCT_CACHE) >= _PIECE_CACHE_MAX:
@@ -1202,14 +1245,17 @@ def iter_bundle_batches(
     predicate=None,
     pred_part: dict[str, str] | None = None,
     pred_data: Sequence[str] = (),
+    *,
+    dictionary: Sequence[str] = (),
 ):
     """Executor-side pyarrow reader for one split bundle, a list of
     ``(path, row_groups)`` entries (row_groups None = the whole file):
     yields RecordBatches already renamed to the output columns, with
     projected expressions (casts / length / partition constants)
     applied and the residual predicate evaluated as an Arrow mask.
-    Batches are sized per file from row-group byte stats
-    (~_BATCH_TARGET_BYTES decoded per batch)."""
+    The ``dictionary`` source columns come as DictionaryArrays, one
+    dictionary per row group.  Batches are sized per file from
+    row-group byte stats (~_BATCH_TARGET_BYTES decoded per batch)."""
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
@@ -1222,7 +1268,7 @@ def iter_bundle_batches(
             if op is not None and op[0] == "partition"
         }
         pred_env_const = _partition_env(path, pred_part)
-        pf = pq.ParquetFile(path)
+        pf = pq.ParquetFile(path, read_dictionary=list(dictionary) or None)
         missing = [s for s in sources if s not in pf.schema_arrow.names]
         if missing:
             # only reachable on >MAX_FOOTER_READS tables (plan time
@@ -1388,7 +1434,7 @@ def sketch_groupby_arrow(
     if native is not None:
         splits, col_map, predicate, pred_part, pred_data = native
         fold_bundles = _bundle_folder(
-            col_map, keys, inputs, sketch,
+            col_map, key_fields, inputs, sketch,
             predicate=predicate, pred_part=pred_part, pred_data=pred_data,
         )
         if _single_task(splits, keys, col_map):

@@ -446,3 +446,33 @@ def test_many_groups_keep_the_merge_stage(spark, tmp_path, monkeypatch):
         monkeypatch, lambda: tdigest_percentile(df, "v", 100, 0.5, keys=["id"])
     )
     assert seen == [False] and one == merged and len(one) == 5000
+
+
+def test_group_bound_counts_values_shared_by_row_groups(spark, tmp_path):
+    """Each row group's parquet dictionary holds the same 500 values:
+    the bound is 500 (NULL counted once), not one count per row group,
+    so the file still plans one task."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    n = 10 * 1000
+    path = str(tmp_path / "shared.parquet")
+    pq.write_table(
+        pa.table(
+            {
+                "s": pa.array([None if i % 97 == 0 else f"s{i % 500}" for i in range(n)]),
+                "v": np.arange(n, dtype=float),
+            }
+        ),
+        path,
+        row_group_size=1000,
+    )
+    assert pq.ParquetFile(path).metadata.num_row_groups == 10
+    df = spark.read.parquet(path)
+    splits, col_map, *_ = arrow_agg._native_parquet_splits(df, ["s", "v"])
+    assert len(splits) == 1
+    assert arrow_agg._group_bound(splits[0], ["s"], col_map) == 501
+    assert arrow_agg._single_task(splits, ["s"], col_map)
+    rows, jobs, plan = _jobs_and_plan(spark, tdigest_count_agg(df, "v", 100, keys=["s"]))
+    assert "Exchange" not in plan and jobs == 1, plan
+    assert len(rows) == 501
