@@ -22,6 +22,19 @@ def as_u64(h) -> np.ndarray:
     return np.asarray(h, dtype=np.int64).view(np.uint64)
 
 
+def int64_hashes(col) -> np.ndarray:
+    """A pandas column of raw int64 hashes as NumPy.  A NULL in the
+    batch coerces the series to float64, rounding 63-bit hashes before
+    this code runs, so anything but int64 is rejected rather than
+    folded as corrupted bit patterns."""
+    if len(col) and col.dtype != np.int64:
+        raise ValueError(
+            "hash column must be a non-nullable int64 hash: pass xxhash64(col) "
+            "(never NULL), mask NULL inputs to a sentinel, or filter them upstream"
+        )
+    return col.to_numpy(dtype=np.int64)
+
+
 def splitmix64(x: np.ndarray) -> np.ndarray:
     """splitmix64 finalizer (public-domain constants), vectorized."""
     z = x.astype(np.uint64, copy=True)

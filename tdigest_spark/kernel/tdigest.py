@@ -1394,6 +1394,19 @@ def decode_many(blobs):
     return (rows, *_decode(data, starts, offs[rows + 1] - starts))
 
 
+def digest_views(means, counts, offsets, count, compression):
+    """A ``TDigest`` per flat digest (digest b = centroids
+    ``offsets[b]:offsets[b+1]``, as :func:`decode_many` and
+    :func:`fold_chunks` return them) whose centroid arrays are slices of
+    the flat ones, not copies: for estimators, which only read them."""
+    for lo, hi, n, c in zip(
+        offsets[:-1].tolist(), offsets[1:].tolist(), count.tolist(), compression.tolist()
+    ):
+        d = TDigest(c)
+        d.means, d.counts, d.count = means[lo:hi], counts[lo:hi], n
+        yield d
+
+
 def encode_many(means, counts, offsets, count, compression):
     """Wire format of many digests (digest b = centroids
     ``offsets[b]:offsets[b+1]``) as one pyarrow binary array, built in

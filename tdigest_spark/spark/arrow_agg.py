@@ -85,7 +85,8 @@ _PIECE_CACHE_MAX = 64
 # skipped exchange and merge stage save (BENCH.md, 4 cores: one task
 # wins at 4096 groups, breaks even near 8192, runs 2x slower at 65536)
 _SINGLE_TASK_MAX_GROUPS = 4096
-# memoized distinct-value counts per (file signature, row groups, column)
+# memoized distinct values (or their count) per (file signature, row
+# groups, column)
 _DISTINCT_CACHE: dict = {}
 
 
@@ -1100,21 +1101,28 @@ def _group_bound(bundle, keys: Sequence[str], col_map) -> int:
         if op is not None and op[0] == "partition":
             bound *= len({_hive_partition_value(p, src, op[1]) for p, _ in bundle})
         else:
-            bound *= sum(_distinct_values(p, rgs, src) for p, rgs in bundle)
+            vals = [_distinct_values(p, rgs, src) for p, rgs in bundle]
+            if all(isinstance(v, frozenset) for v in vals):
+                bound *= len(frozenset().union(*vals))
+            else:  # one file alone holds more values than one task takes
+                bound *= sum(v if isinstance(v, int) else len(v) for v in vals)
         if bound > _SINGLE_TASK_MAX_GROUPS:
             break
     return bound
 
 
-def _distinct_values(path: str, row_groups, col: str) -> int:
-    """Distinct values (NULL counted) of one column over a file's row
-    groups, read on the driver once per file version.  A string column
-    is read as its parquet dictionaries: the distinct entries over all
-    row groups are its distinct values, found without hashing a row."""
+def _distinct_values(path: str, row_groups, col: str) -> frozenset | int:
+    """The distinct values (NULL included) of one column over a file's
+    row groups, read on the driver once per file version: the values
+    themselves when they number at most _SINGLE_TASK_MAX_GROUPS, so a
+    bundle is bounded by the union over its files, else only their
+    count.  A string column is read as its parquet dictionaries: the
+    distinct entries over all row groups are its distinct values, found
+    without hashing a row."""
     st = os.stat(path)
     memo = (path, st.st_size, st.st_mtime_ns, row_groups, col)
-    n = _DISTINCT_CACHE.get(memo)
-    if n is None:
+    v = _DISTINCT_CACHE.get(memo)
+    if v is None:
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
@@ -1122,17 +1130,18 @@ def _distinct_values(path: str, row_groups, col: str) -> int:
         rgs = range(pf.num_row_groups) if row_groups is None else row_groups
         data = pf.read_row_groups(list(rgs), columns=[col]).column(0)
         if pa.types.is_dictionary(data.type):
-            # one dictionary per row group: a value repeats across them
-            entries = pa.chunked_array(
-                [c.dictionary for c in data.chunks], data.type.value_type
+            # one dictionary per row group (a value repeats across them),
+            # plus one NULL if an index is NULL
+            vt = data.type.value_type
+            data = pa.chunked_array(
+                [c.dictionary for c in data.chunks] + [pa.nulls(min(data.null_count, 1), vt)], vt
             )
-            n = pc.count_distinct(entries).as_py() + (data.null_count > 0)
-        else:
-            n = pc.count_distinct(data, mode="all").as_py()
+        values = pc.unique(data)
+        v = frozenset(values.to_pylist()) if len(values) <= _SINGLE_TASK_MAX_GROUPS else len(values)
         if len(_DISTINCT_CACHE) >= _PIECE_CACHE_MAX:
             _DISTINCT_CACHE.pop(next(iter(_DISTINCT_CACHE)))
-        _DISTINCT_CACHE[memo] = n
-    return n
+        _DISTINCT_CACHE[memo] = v
+    return v
 
 
 def _native_single(

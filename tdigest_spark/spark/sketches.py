@@ -14,17 +14,9 @@ from __future__ import annotations
 from collections.abc import Sequence
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import (
-    BinaryType,
-    BooleanType,
-    DoubleType,
-    LongType,
-    StructField,
-)
+from pyspark.sql.types import BinaryType, DoubleType, LongType, StructField
 
 from tdigest_spark.kernel.bloom import Bloom
 from tdigest_spark.kernel.countmin import CountMin
@@ -36,6 +28,19 @@ from tdigest_spark.spark.arrow_agg import (
     sketch_groupby_arrow,
     sketch_of,
     union_of,
+)
+
+# the scalar estimators are declared with the t-digest ones in
+# functions.SCALARS, and importable from here as before
+from tdigest_spark.spark.functions import (  # noqa: F401
+    bloom_fill_ratio,
+    bloom_might_contain,
+    countmin_estimate,
+    countmin_total,
+    hll_cardinality,
+    kll_n,
+    kll_quantile_of_sketch,
+    kll_rank,
 )
 
 _HASH_COL = "__h64__"
@@ -97,16 +102,6 @@ def hll_count_distinct(
     )
 
 
-def hll_cardinality(sketch: Column) -> Column:
-    @pandas_udf(LongType())
-    def f(s: pd.Series) -> pd.Series:
-        return s.map(
-            lambda b: None if b is None else HLL.from_bytes(bytes(b)).cardinality()
-        )
-
-    return f(sketch)
-
-
 def hll_union_agg(
     df: DataFrame, sketch_col: str, keys: Sequence[str] = (),
     result_col: str = "hll",
@@ -157,55 +152,6 @@ def countmin_sketch(
     )
 
 
-def _lookup_sketch(cache: dict, last: list, blob, from_bytes):
-    """Per-row sketch resolution without hashing the whole blob each
-    row: consecutive rows almost always carry the same (large) sketch
-    blob, so an identity/equality check against the previous row's blob
-    skips both the ``bytes()`` copy and the dict hash of ~10-100 KB."""
-    if last[0] is not None and (blob is last[0] or blob == last[0]):
-        return last[1]
-    bb = bytes(blob)
-    sk = cache.get(bb)
-    if sk is None:
-        sk = cache[bb] = from_bytes(bb)
-    last[0], last[1] = blob, sk
-    return sk
-
-
-def countmin_estimate(sketch: Column, probe: Column) -> Column:
-    """Estimated frequency of ``probe`` (any type) in the sketch.
-    The probe is hashed JVM-side with the same xxhash64."""
-    # the hash column must be NON-nullable: a single null in a pandas
-    # batch turns the int64 series into float64, silently rounding
-    # 63-bit hashes (≈all of them exceed 2^53) to wrong bit positions.
-    # Nulls are carried as a separate boolean mask instead.
-    probe_hash = F.coalesce(F.xxhash64(probe), F.lit(0))
-
-    @pandas_udf(LongType())
-    def f(s: pd.Series, h: pd.Series, isnull: pd.Series) -> pd.Series:
-        cache: dict[bytes, CountMin] = {}
-        last: list = [None, None]
-        hv_arr = h.to_numpy(dtype=np.int64)  # exact: no nulls by construction
-        out = []
-        for i, (blob, nul) in enumerate(zip(s, isnull)):
-            if blob is None or nul:
-                out.append(None)
-                continue
-            cm = _lookup_sketch(cache, last, blob, CountMin.from_bytes)
-            out.append(int(cm.estimate_hashes(hv_arr[i : i + 1])[0]))
-        return pd.Series(out, dtype="object")
-
-    return f(sketch, probe_hash, probe.isNull())
-
-
-def countmin_total(sketch: Column) -> Column:
-    @pandas_udf(LongType())
-    def f(s: pd.Series) -> pd.Series:
-        return s.map(lambda b: None if b is None else CountMin.from_bytes(bytes(b)).total)
-
-    return f(sketch)
-
-
 # ----------------------------------------------------------------------
 # Bloom
 # ----------------------------------------------------------------------
@@ -220,30 +166,6 @@ def bloom_filter(
         _with_hash(df, col, keep=keys), keys, [_HASH_COL], bloom, _finalizer(bloom),
         [StructField(result_col, BinaryType(), True)], salt=salt,
     )
-
-
-def bloom_might_contain(sketch: Column, probe: Column) -> Column:
-    """Membership probe (no false negatives).  Hash column kept
-    non-nullable + separate null mask — see countmin_estimate for why
-    (float64 coercion would corrupt hashes and break the no-false-
-    negative contract)."""
-    probe_hash = F.coalesce(F.xxhash64(probe), F.lit(0))
-
-    @pandas_udf(BooleanType())
-    def f(s: pd.Series, h: pd.Series, isnull: pd.Series) -> pd.Series:
-        cache: dict[bytes, Bloom] = {}
-        last: list = [None, None]
-        hv_arr = h.to_numpy(dtype=np.int64)
-        out = []
-        for i, (blob, nul) in enumerate(zip(s, isnull)):
-            if blob is None or nul:
-                out.append(None)
-                continue
-            bl = _lookup_sketch(cache, last, blob, Bloom.from_bytes)
-            out.append(bool(bl.contains_hashes(hv_arr[i : i + 1])[0]))
-        return pd.Series(out, dtype="object")
-
-    return f(sketch, probe_hash, probe.isNull())
 
 
 # ----------------------------------------------------------------------
@@ -283,29 +205,3 @@ def kll_quantile(
         _finalizer(kll, lambda m: float(m.quantile(q)) if m.n else None),
         [StructField(result_col, DoubleType(), True)], salt=salt,
     )
-
-
-def kll_rank(sketch: Column, value: float) -> Column:
-    vv = float(value)
-
-    @pandas_udf(DoubleType())
-    def f(s: pd.Series) -> pd.Series:
-        return s.map(
-            lambda b: None
-            if b is None
-            else float(KLL.from_bytes(bytes(b)).rank_of([vv])[0])
-        )
-
-    return f(sketch)
-
-
-def kll_quantile_of_sketch(sketch: Column, q: float) -> Column:
-    qq = float(q)
-
-    @pandas_udf(DoubleType())
-    def f(s: pd.Series) -> pd.Series:
-        return s.map(
-            lambda b: None if b is None else KLL.from_bytes(bytes(b)).quantile(qq)
-        )
-
-    return f(sketch)

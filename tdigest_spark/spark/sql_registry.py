@@ -1,10 +1,11 @@
 """Register the sketch functions for use from ``spark.sql``.
 
 The reference exposes everything as SQL (CREATE FUNCTION/AGGREGATE in
-tdigest--1.0.0.sql).  Every scalar digest function gets a SQL name
-here, enabling e.g.
+tdigest--1.0.0.sql).  ``register_sql_functions`` gives each scalar
+function of ``functions.SCALARS`` its SQL name (the DataFrame function's
+Arrow UDF, same trailing defaults; the probes take ``xxhash64(x)``):
 
-    SELECT lang, tdigest_count(digest) FROM digests_table
+    SELECT lang, tdigest_digest_avg(digest, 0.25, 0.75) FROM digests_table
 
 ``register_sql_aggregates`` additionally registers GROUP BY-callable
 aggregate forms (grouped-agg pandas UDFs) mirroring the reference's
@@ -25,170 +26,23 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import (
-    ArrayType,
-    BinaryType,
-    DoubleType,
-    LongType,
-    StringType,
-)
+from pyspark.sql.types import BinaryType, DoubleType
 
 from tdigest_spark.kernel.bloom import Bloom
 from tdigest_spark.kernel.countmin import CountMin
+from tdigest_spark.kernel.hashing import int64_hashes
 from tdigest_spark.kernel.hll import HLL
 from tdigest_spark.kernel.kll import KLL
 from tdigest_spark.kernel.tdigest import TDigest
-
-
-def _map_udf(ret, fn):
-    @pandas_udf(ret)
-    def f(s: pd.Series) -> pd.Series:
-        return s.map(lambda b: None if b is None else fn(b))
-
-    return f
-
-
-def _map2_udf(ret, fn):
-    """Strict two-arg mapper: NULL on *either* side yields NULL.
-
-    Matches PostgreSQL's default STRICT function semantics, which is what
-    the reference's scalar functions use for e.g. tdigest_percentile(d, q)
-    (a NULL quantile yields NULL, it does not raise).  NULL numeric args
-    arrive as NaN through Arrow's float64 coercion — sql_null covers
-    both spellings."""
-    from tdigest_spark.spark.functions import sql_null
-
-    @pandas_udf(ret)
-    def f(s: pd.Series, t: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                None if (sql_null(a) or sql_null(b)) else fn(a, b)
-                for a, b in zip(s, t)
-            ],
-            dtype="object",
-        )
-
-    return f
-
-
-def _add_udf():
-    """SQL tdigest_add(digest, value_or_array, compression, compact) —
-    the reference's incremental update (tdigest.c:2422-2533).  Spark SQL
-    UDFs have no parameter defaults, so the SQL form takes all four
-    arguments explicitly, e.g. ``tdigest_add(d, v, 100, true)``; pass a
-    NULL digest with a compression to create a new digest."""
-
-    from tdigest_spark.spark.functions import sql_null
-
-    @pandas_udf(BinaryType())
-    def f(ds: pd.Series, vs: pd.Series, comp: pd.Series, compact: pd.Series) -> pd.Series:
-        out = []
-        for blob, v, c, ck in zip(ds, vs, comp, compact):
-            if sql_null(v):
-                out.append(None if blob is None else bytes(blob))
-                continue
-            if blob is None:
-                # NULL int args also arrive as NaN (float64 coercion)
-                if sql_null(c):
-                    raise ValueError(
-                        "tdigest_add: NULL digest requires an explicit compression"
-                    )
-                d = TDigest(int(c))
-            else:
-                d = TDigest.from_bytes(bytes(blob))
-            vals = v if hasattr(v, "__len__") else [v]
-            do_compact = bool(ck) if ck is not None else True
-            d.add_values(vals, compact_threshold=None if do_compact else 1 << 62)
-            out.append(d.to_bytes(compact=do_compact))
-        return pd.Series(out, dtype="object")
-
-    return f
-
-
-def _union_udf():
-    """NULL-tolerant symmetric union, mirroring tdigest.c:2543-2576:
-    tdigest_union(NULL, d) == tdigest_union(d, NULL) == compacted d."""
-
-    @pandas_udf(BinaryType())
-    def f(s: pd.Series, t: pd.Series) -> pd.Series:
-        return pd.Series(
-            [_union_bytes(a, b) for a, b in zip(s, t)], dtype="object"
-        )
-
-    return f
+from tdigest_spark.spark.functions import UDFS
 
 
 def register_sql_functions(spark: SparkSession) -> None:
-    """Idempotent registration of all scalar sketch SQL functions."""
-    reg = spark.udf.register
-
-    reg("tdigest_count", _map_udf(LongType(), lambda b: TDigest.from_bytes(bytes(b)).count))
-    reg(
-        "tdigest_quantile",
-        _map2_udf(
-            DoubleType(), lambda b, q: TDigest.from_bytes(bytes(b)).quantile(float(q))
-        ),
-    )
-    reg(
-        "tdigest_quantile_of",
-        _map2_udf(
-            DoubleType(),
-            lambda b, v: TDigest.from_bytes(bytes(b)).quantile_of(float(v)),
-        ),
-    )
-    reg(
-        "tdigest_json",
-        _map_udf(StringType(), lambda b: TDigest.from_bytes(bytes(b)).to_json()),
-    )
-    reg(
-        "tdigest_to_string",
-        _map_udf(StringType(), lambda b: TDigest.from_bytes(bytes(b)).to_string()),
-    )
-    reg(
-        "tdigest_parse",
-        _map_udf(BinaryType(), lambda t: TDigest.from_string(t).to_bytes()),
-    )
-    reg(
-        "tdigest_double_array",
-        _map_udf(
-            ArrayType(DoubleType()),
-            lambda b: TDigest.from_bytes(bytes(b)).to_double_array().tolist(),
-        ),
-    )
-    reg(
-        "tdigest_digest_sum",
-        _map_udf(DoubleType(), lambda b: TDigest.from_bytes(bytes(b)).trimmed_sum(0.0, 1.0)),
-    )
-    reg(
-        "tdigest_digest_avg",
-        _map_udf(DoubleType(), lambda b: TDigest.from_bytes(bytes(b)).trimmed_avg(0.0, 1.0)),
-    )
-    reg(
-        "tdigest_histogram",
-        _map2_udf(
-            ArrayType(DoubleType()),
-            lambda b, k: _histogram_quantiles(b, k),
-        ),
-    )
-    reg("tdigest_union", _union_udf())
-    reg("tdigest_add", _add_udf())
-    reg("tdigest_add_array", _add_udf())
-    reg("hll_cardinality", _map_udf(LongType(), lambda b: HLL.from_bytes(bytes(b)).cardinality()))
-    reg("countmin_total", _map_udf(LongType(), lambda b: CountMin.from_bytes(bytes(b)).total))
-    reg("kll_n", _map_udf(LongType(), lambda b: KLL.from_bytes(bytes(b)).n))
-    reg("bloom_fill_ratio", _map_udf(DoubleType(), lambda b: Bloom.from_bytes(bytes(b)).fill_ratio()))
-
-
-def _histogram_quantiles(b, k):
-    """k+1 equi-spaced quantiles (histogram bin edges).  Validates
-    k >= 1 with a clean error instead of the ZeroDivisionError /
-    descending-garbage a raw ``i / int(k)`` comprehension would give
-    for k <= 0."""
-    k = int(k)
-    if k < 1:
-        raise ValueError(f"tdigest_histogram: k must be >= 1, got {k}")
-    d = TDigest.from_bytes(bytes(b))
-    return [float(x) for x in d.quantiles([i / k for i in range(k + 1)])]
+    """Idempotent registration of every ``functions.SCALARS`` entry under
+    its name, plus ``tdigest_add_array`` (an alias of ``tdigest_add``)."""
+    for name, udf in UDFS.items():
+        spark.udf.register(name, udf)
+    spark.udf.register("tdigest_add_array", UDFS["tdigest_add"])
 
 
 def register_sql_aggregates(spark: SparkSession) -> None:
@@ -247,27 +101,19 @@ def register_sql_aggregates(spark: SparkSession) -> None:
     # never NULL (a NULL input hashes to the seed constant and counts
     # as one token); filter NULLs upstream for COUNT DISTINCT-style
     # semantics.
-    def _hashes_np(h: pd.Series):
-        if h.empty:
+    def _of_hashes(new, h: pd.Series) -> bytes | None:
+        """A ``new()`` sketch of an already-hashed int64 column; None for
+        an empty group."""
+        hv = int64_hashes(h)
+        if hv.size == 0:
             return None
-        if h.dtype != np.int64:
-            # a NULL in the hash column coerces the pandas series to
-            # float64, rounding 63-bit hashes BEFORE this code runs —
-            # fail loudly rather than fold corrupted bit patterns
-            raise ValueError(
-                "hash column must be non-nullable int64: pass "
-                "xxhash64(col) (never NULL) or filter nulls upstream"
-            )
-        return h.to_numpy(dtype=np.int64)
+        s = new()
+        s.add_hashes(hv)
+        return s.to_bytes()
 
     @pandas_udf(BinaryType())
     def hll_agg(h: pd.Series) -> bytes | None:
-        hv = _hashes_np(h)
-        if hv is None:
-            return None
-        s = HLL()
-        s.add_hashes(hv)
-        return s.to_bytes()
+        return _of_hashes(HLL, h)
 
     @pandas_udf(BinaryType())
     def kll_agg(v: pd.Series, k: pd.Series) -> bytes | None:
@@ -281,21 +127,11 @@ def register_sql_aggregates(spark: SparkSession) -> None:
 
     @pandas_udf(BinaryType())
     def bloom_agg(h: pd.Series, m: pd.Series, k: pd.Series) -> bytes | None:
-        hv = _hashes_np(h)
-        if hv is None:
-            return None
-        b = Bloom(int(m.iloc[0]), int(k.iloc[0]))
-        b.add_hashes(hv)
-        return b.to_bytes()
+        return _of_hashes(lambda: Bloom(int(m.iloc[0]), int(k.iloc[0])), h)
 
     @pandas_udf(BinaryType())
     def countmin_agg(h: pd.Series) -> bytes | None:
-        hv = _hashes_np(h)
-        if hv is None:
-            return None
-        cm = CountMin()
-        cm.add_hashes(hv)
-        return cm.to_bytes()
+        return _of_hashes(CountMin, h)
 
     spark.udf.register("tdigest_agg", tdigest_agg)
     spark.udf.register("tdigest_percentile_agg", tdigest_percentile_agg)
@@ -306,20 +142,3 @@ def register_sql_aggregates(spark: SparkSession) -> None:
     spark.udf.register("bloom_agg", bloom_agg)
     spark.udf.register("countmin_agg", countmin_agg)
 
-
-def _union_bytes(a, b):
-    """Merge two serialized digests; NULL-tolerant on either side.
-
-    ``tdigest_union(NULL, d)`` follows the reference README's documented
-    force-compaction idiom (README.md:238-248: "force a compaction" via
-    union with NULL) and returns a compacted copy of ``d``, not NULL.
-    Note this deliberately diverges byte-wise from the reference C
-    code's NULL fast path, which returns the non-NULL digest pointer
-    unchanged without compacting (tdigest.c:2543-2576 both-NULL/one-NULL
-    branches); the README-documented behavior is the authority here.
-
-    Delegates to functions.union_pair_bytes so the SQL surface and the
-    DataFrame tdigest_union can never drift byte-wise."""
-    from tdigest_spark.spark.functions import union_pair_bytes
-
-    return union_pair_bytes(a, b, compact=True)

@@ -41,6 +41,7 @@ from tdigest_spark.kernel.tdigest import (
     check_trim,
     compact_many,
     decode_many,
+    digest_views,
     encode_many,
     fold_chunks,
     generate_counts,
@@ -222,20 +223,8 @@ def _merge_many(blobs, rows, bounds) -> pa.Array:
 def _merged_many(blobs, rows, bounds):
     """The groups holding a digest and, lazily, each one's merged
     ``TDigest`` for an estimator (``Sketch.merged``)."""
-    groups, (means, counts, offsets, count, compression) = _merged_groups(
-        blobs, rows, bounds
-    )
-
-    def digests():
-        for lo, hi, n, c in zip(
-            offsets[:-1].tolist(), offsets[1:].tolist(), count.tolist(),
-            compression.tolist(),
-        ):
-            d = TDigest(c)
-            d.means, d.counts, d.count = means[lo:hi], counts[lo:hi], n
-            yield d
-
-    return groups.tolist(), digests()
+    groups, merged = _merged_groups(blobs, rows, bounds)
+    return groups.tolist(), digest_views(*merged)
 
 
 def _tdigest(new, fold) -> Sketch:

@@ -45,6 +45,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from tdigest_spark.kernel.hashing import int64_hashes
 from tdigest_spark.kernel.tdigest import TDigest
 from tdigest_spark.spark.arrow_agg import SKETCH_COL, _partials_batch, fold_group_batches
 from tdigest_spark.spark.tdigest_agg import _values_sketch
@@ -107,18 +108,6 @@ class _Spec(NamedTuple):
     fold_rows: Callable  # one raw value / hash / item per row
     fold_packed: Callable  # prereduce staging arrays (+ `{col}_counts`)
     fold_partials: Callable | None = None  # serialized partial sketches
-
-
-def _hashes(col: pd.Series) -> np.ndarray:
-    """A raw int64 hash column as NumPy.  A NULL in the batch coerces
-    the series to float64, rounding 63-bit hashes before this code
-    runs — so anything but int64 is rejected."""
-    if len(col) and col.dtype != np.int64:
-        raise ValueError(
-            "hash_col must be a non-nullable int64 hash (mask NULL inputs "
-            "to a sentinel or filter them upstream)"
-        )
-    return col.to_numpy(dtype=np.int64)
 
 
 def _packed(col: pd.Series, dtype) -> np.ndarray:
@@ -202,7 +191,7 @@ def _hll_spec(p: int) -> _Spec:
     return _Spec(
         "hll", "estimate", lambda h: int(h.cardinality()), lambda: HLL(p),
         HLL.from_bytes,
-        lambda h, pdf, col: add(h, _hashes(pdf[col])),
+        lambda h, pdf, col: add(h, int64_hashes(pdf[col])),
         lambda h, pdf, col: add(h, _packed(pdf[col], np.int64)),
     )
 
@@ -217,7 +206,7 @@ def _countmin_spec(width: int, depth: int) -> _Spec:
     return _Spec(
         "cm", "total", attrgetter("total"), lambda: CountMin(width, depth),
         CountMin.from_bytes,
-        lambda cm, pdf, col: add(cm, _hashes(pdf[col])),
+        lambda cm, pdf, col: add(cm, int64_hashes(pdf[col])),
         lambda cm, pdf, col: add(
             cm, *_packed_pairs(pdf[col], pdf[f"{col}_counts"], np.int64)
         ),

@@ -476,3 +476,28 @@ def test_group_bound_counts_values_shared_by_row_groups(spark, tmp_path):
     rows, jobs, plan = _jobs_and_plan(spark, tdigest_count_agg(df, "v", 100, keys=["s"]))
     assert "Exchange" not in plan and jobs == 1, plan
     assert len(rows) == 501
+
+
+def test_group_bound_of_files_sharing_values_is_their_union(spark, tmp_path):
+    """Two 6,000-row files holding the same 3,000 string and int values,
+    read as one split bundle, bound at 3,000 groups, not 6,000, so the
+    bundle keeps the one-task route; a third file with other values
+    adds its own."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    n = 6000
+    for name, shift in (("a", 0), ("b", 0), ("c", 3000)):
+        ids = np.arange(n) % 3000 + shift
+        pq.write_table(
+            pa.table({"s": pa.array([f"s{i}" for i in ids]), "id": ids, "v": np.ones(n)}),
+            str(tmp_path / f"{name}.parquet"),
+        )
+    for files, groups in ((["a", "b"], 3000), (["a", "b", "c"], 6000)):
+        df = spark.read.parquet(*[str(tmp_path / f"{f}.parquet") for f in files])
+        splits, col_map, *_ = arrow_agg._native_parquet_splits(df, ["s", "id", "v"])
+        bundle = [entry for split in splits for entry in split]
+        assert len(bundle) == len(files)
+        for key in ("s", "id"):
+            assert arrow_agg._group_bound(bundle, [key], col_map) == groups
+            assert arrow_agg._single_task([bundle], [key], col_map) is (groups <= 4096)

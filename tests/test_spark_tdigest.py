@@ -269,8 +269,7 @@ def test_tdigest_rollup_grouping_sets(spark):
 
 
 def test_sql_null_numeric_args_are_null_not_nan(spark):
-    """SQL NULL numeric args reach pandas UDFs as NaN (Arrow float64
-    coercion) — the scalar functions must treat them as NULL: STRICT
+    """SQL NULL numeric args are NULL to the scalar functions: STRICT
     NULL-out for quantile/quantile_of, passthrough for tdigest_add."""
     from tdigest_spark.spark.sql_registry import register_sql_functions
     from tdigest_spark.spark.tdigest_agg import tdigest
